@@ -7,10 +7,14 @@ cell-triple emission).
 
 Spark-first design: CSVW Table metadata is compiled ONCE on the driver into a
 picklable ``TableMapping`` plan; rows flow through a single Arrow-batched
-``mapInPandas`` kernel that emits the flat triples DataFrame. Blank nodes are
-deterministic skolem labels keyed on (table_url, source_num) so output is
-reproducible and set-comparison ≡ graph isomorphism. No driver-side collect on
-the data path; the kernel is embarrassingly parallel (no shuffle).
+``mapInPandas`` kernel that emits the flat triples DataFrame — on the CSV
+line path (``lines_to_triples``) the same kernel also parses the numbered
+lines, so each task runs one Python worker. URI templates that read only
+column variables expand once per column and base, and an aboutUrl shared by
+several columns once per row. Blank nodes are deterministic skolem labels
+keyed on (table_url, source_num) so output is reproducible and
+set-comparison ≡ graph isomorphism. No driver-side collect on the data path;
+the kernel is embarrassingly parallel (no shuffle).
 """
 
 from __future__ import annotations
@@ -23,8 +27,8 @@ from urllib.parse import unquote
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BooleanType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import (ArrayType, BooleanType, LongType, StringType,
+                               StructField, StructType)
 
 from ..csvw import coerce
 from ..csvw.context import CSVW, RDF, XSD, Context
@@ -144,9 +148,18 @@ def compile_mapping(table: Table, minimal: bool = False) -> TableMapping:
 # Kernel internals (run on executors inside Arrow batches)
 # ---------------------------------------------------------------------------
 
+# template variables bound per column, the same on every row
+_COLUMN_VARS = frozenset(("_name", "_column", "_sourceColumn"))
+
+
 class _CompiledColumn:
-    """Executor-side column with pre-compiled URI templates."""
-    __slots__ = ("plan", "about_t", "prop_t", "value_t", "name_decoded")
+    """Executor-side column with pre-compiled URI templates.
+
+    ``prop_per_column``: the propertyUrl reads only column variables, so it
+    expands once per column and base. ``about_per_row``: the aboutUrl reads
+    no column variable, so columns sharing it expand it once per row."""
+    __slots__ = ("plan", "about_t", "prop_t", "value_t", "name_decoded",
+                 "prop_per_column", "about_per_row")
 
     def __init__(self, plan: ColumnPlan):
         self.plan = plan
@@ -155,6 +168,9 @@ class _CompiledColumn:
         self.prop_t = URITemplate(prop)
         self.value_t = URITemplate(plan.value_template) if plan.value_template else None
         self.name_decoded = unquote(plan.name)
+        self.prop_per_column = _COLUMN_VARS.issuperset(self.prop_t.variables)
+        self.about_per_row = (self.about_t is not None and
+                              _COLUMN_VARS.isdisjoint(self.about_t.variables))
 
 
 class TripleKernel:
@@ -168,6 +184,10 @@ class TripleKernel:
         self.row_url_prefix = mapping.url + "#row="
         self._thash_cache: dict[str, str] = {}
         self._cur_thash = mapping.thash
+        # column index → expanded row-invariant propertyUrl under self.ctx;
+        # cleared when ``url=`` rebinds the base, so it holds one entry per
+        # column at most
+        self._pred_cache: dict[int, str] = {}
         # extra-cell columns inherit the schema aboutUrl (the reference's
         # auto Column.new has tableSchema as parent, metadata.rb:1665)
         self.extra_about_t = (URITemplate(mapping.row_about_template)
@@ -268,6 +288,7 @@ class TripleKernel:
         m = self.m
         if url is not None and url != self.ctx.base:
             self.ctx = Context(base=url)
+            self._pred_cache.clear()
             self.row_url_prefix = url + "#row="
             thash = self._thash_cache.get(url)
             if thash is None:
@@ -302,7 +323,10 @@ class TripleKernel:
                              False, None, cv.lang))
 
         described: set[str] = set()
-        for cc, vals in zip(self.cols, cell_values):
+        ctx = self.ctx
+        pred_cache = self._pred_cache
+        row_abouts: dict[str, str] = {}  # about_per_row template → subject
+        for ci, (cc, vals) in enumerate(zip(self.cols, cell_values)):
             cp = cc.plan
             if cp.suppress:
                 continue
@@ -316,19 +340,27 @@ class TripleKernel:
             b["_column"] = cp.number
             b["_sourceColumn"] = cp.source_number
 
-            if cc.about_t is not None:
-                subject = self.ctx.expand_iri(cc.about_t.expand(b), document_relative=True)
-                subj_is_iri = True
+            if cc.about_t is None:
+                subject = default_subject
+            elif cc.about_per_row:
+                subject = row_abouts.get(cp.about_template)
+                if subject is None:
+                    subject = row_abouts[cp.about_template] = ctx.expand_iri(
+                        cc.about_t.expand(b), document_relative=True)
             else:
-                subject, subj_is_iri = default_subject, True
+                subject = ctx.expand_iri(cc.about_t.expand(b), document_relative=True)
             if not m.minimal and subject not in described:
                 described.add(subject)
                 add((row_resource, CSVW + "describes", subject, True, None, None))
 
-            pred = self.ctx.expand_iri(cc.prop_t.expand(b), document_relative=True)
+            pred = pred_cache.get(ci) if cc.prop_per_column else None
+            if pred is None:
+                pred = ctx.expand_iri(cc.prop_t.expand(b), document_relative=True)
+                if cc.prop_per_column:
+                    pred_cache[ci] = pred
 
             if cc.value_t is not None:
-                obj = self.ctx.expand_iri(cc.value_t.expand(b), document_relative=True)
+                obj = ctx.expand_iri(cc.value_t.expand(b), document_relative=True)
                 add((subject, pred, obj, True, None, None))
             elif cp.ordered and cp.separator:
                 # rdf:List chain with deterministic bnode links
@@ -380,17 +412,14 @@ class TripleKernel:
         return triples
 
 
-def rows_to_triples(rows_df: DataFrame, mapping: TableMapping) -> DataFrame:
-    """values-array rows → triples via one Arrow-batched mapInPandas stage.
-
-    ``rows_df`` schema: values: array<string>, row_num: long, source_num: long.
-    Narrow transformation — partitioning of the input is preserved, no shuffle.
-    """
+def _triples_kernel(mapping: TableMapping, parse=None):
+    """The Arrow-batch triple kernel; ``parse`` (batches → ROWS_SCHEMA
+    batches) runs first when the input is unparsed lines."""
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         k = TripleKernel(mapping)
         url = mapping.url
         cols = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "obj_lang"]
-        for pdf in batches:
+        for pdf in (parse(batches) if parse is not None else batches):
             out: list[tuple] = []
             srcs: list[int] = []
             for values, row_num, source_num in zip(pdf["values"], pdf["row_num"], pdf["source_num"]):
@@ -401,10 +430,30 @@ def rows_to_triples(rows_df: DataFrame, mapping: TableMapping) -> DataFrame:
             res["table_url"] = url
             res["source_num"] = pd.Series(srcs, dtype="int64")
             yield res
+    return kernel
 
+
+def rows_to_triples(rows_df: DataFrame, mapping: TableMapping) -> DataFrame:
+    """values-array rows → triples via one Arrow-batched mapInPandas stage.
+
+    ``rows_df`` schema: values: array<string>, row_num: long, source_num: long.
+    Narrow transformation — partitioning of the input is preserved, no shuffle.
+    """
     from ..session import ensure_package_on_executors
     ensure_package_on_executors(rows_df.sparkSession)
-    return rows_df.mapInPandas(kernel, schema=TRIPLE_SCHEMA)
+    return rows_df.mapInPandas(_triples_kernel(mapping), schema=TRIPLE_SCHEMA)
+
+
+def lines_to_triples(lines_df: DataFrame, parse,
+                     mapping: TableMapping) -> DataFrame:
+    """Numbered CSV lines (``line, row_num, source_num``) → triples: the
+    line parse (``parse``, e.g. ``csv_source.line_parser(dialect)``) and the
+    triple kernel in ONE mapInPandas, so each row crosses the JVM/Python
+    boundary once and each task runs one Python worker."""
+    from ..session import ensure_package_on_executors
+    ensure_package_on_executors(lines_df.sparkSession)
+    return lines_df.mapInPandas(_triples_kernel(mapping, parse),
+                                schema=TRIPLE_SCHEMA)
 
 
 ERRORS_SCHEMA = StructType([
@@ -467,6 +516,12 @@ def rows_to_errors(rows_df: DataFrame, mapping: TableMapping) -> DataFrame:
 
 def local_triples_df(spark: SparkSession, triples: list[tuple]) -> DataFrame:
     """Small driver-built triple list (table-level/common-property/prov
-    triples — O(metadata), never O(data)) → DataFrame."""
+    triples — O(metadata), never O(data)) → DataFrame of ONE partition,
+    built in the JVM from literals (no Python worker, no near-empty
+    partition per task slot)."""
     rows = [t if len(t) == 8 else t + (None, None) for t in triples]
-    return spark.createDataFrame(rows, schema=TRIPLE_SCHEMA)
+    structs = [F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                          for v, f in zip(row, TRIPLE_SCHEMA.fields)])
+               for row in rows]
+    return spark.range(1, numPartitions=1).select(F.inline(
+        F.array(*structs).cast(ArrayType(TRIPLE_SCHEMA, False))))

@@ -19,9 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from .csvw.context import CSVW, DCAT, PROV, RDF, XSD, Context
 from .csvw.model import (Column, Dialect, Resolver, Table, TableGroup,
                          default_resolver, load_metadata)
-from .operators.triples import (compile_mapping, local_triples_df,
-                                rows_to_triples, table_hash)
-from .sources.csv_source import read_header, read_rows
+from .operators.triples import (compile_mapping, lines_to_triples,
+                                local_triples_df, rows_to_triples, table_hash)
+from .sources.csv_source import (line_parser, read_header, read_lines,
+                                 read_rows)
 
 RDF_TYPE = RDF + "type"
 
@@ -200,7 +201,8 @@ def table_to_triples(spark: SparkSession, table: Table, resolver: Resolver,
     reference: reader.rb:136-183). ``prov_times=(started, ended)`` enables
     the U9 PROV block (reference emits it unless noProv; off by default here
     because the goldens are noProv and web-scale lineage lives in the graph
-    store's manifests)."""
+    store's manifests). On the CSV line path the row parse and the triple
+    kernel run fused, one Python kernel per task."""
     from .session import ensure_package_on_executors
     ensure_package_on_executors(spark)
     path = resolver(table.url)
@@ -211,8 +213,9 @@ def table_to_triples(spark: SparkSession, table: Table, resolver: Resolver,
     mapping = compile_mapping(table, minimal=minimal)
     if table_resource:
         mapping.table_resource = table_resource
-    rows = read_rows(spark, path, table.dialect)
-    data_triples = rows_to_triples(rows, mapping)
+    data, parsed = read_lines(spark, path, table.dialect)
+    data_triples = (rows_to_triples(data, mapping) if parsed else
+                    lines_to_triples(data, line_parser(table.dialect), mapping))
     meta = table_level_triples(table, mapping.table_resource, minimal)
     if prov_times is not None and not minimal:
         started, ended = prov_times

@@ -294,3 +294,41 @@ def test_cell_coercion_memo_identical_across_rows():
     for i in range(20):
         k._coerce_cell(str(i), k.cols[0].plan)
     assert len(k._cell_cache) <= 8
+
+
+def test_template_expansion_cache_matches_uncached_on_web_path():
+    """Row-invariant propertyUrls expand once per column and base, a shared
+    column-free aboutUrl once per row. On the web path (``url=`` rebinding
+    the base per page) the kernel must emit exactly the triples of the
+    uncached expansion, including a row-dependent propertyUrl."""
+    from rdf_tabular_spark.csvw.model import load_metadata
+    from rdf_tabular_spark.operators.triples import compile_mapping, TripleKernel
+
+    table = load_metadata({
+        "@context": "http://www.w3.org/ns/csvw", "url": "t.csv",
+        "tableSchema": {"columns": [
+            {"name": "id", "titles": "id"},
+            {"name": "v", "titles": "v", "propertyUrl": "#p-{_row}"},
+            {"name": "w", "titles": "w", "propertyUrl": "{#_name}-{_column}"},
+            {"name": "x", "titles": "x", "aboutUrl": "#{_name}-{id}"}],
+            "aboutUrl": "#r{id}"}},
+        base="http://x/t.csv", resolver=lambda u: u)
+    mapping = compile_mapping(table)
+    uncached = TripleKernel(mapping)
+    for cc in uncached.cols:
+        cc.prop_per_column = cc.about_per_row = False
+    cached = TripleKernel(mapping)
+    assert [(cc.prop_per_column, cc.about_per_row) for cc in cached.cols] == [
+        (True, True), (False, True), (True, True), (True, False)]
+    calls = [(["1", "a", "b", "c"], 1, 2, "http://e.org/p1"),
+             (["2", "d", "e", "f"], 2, 3, "http://e.org/p1"),
+             (["1", "a", "b", "c"], 1, 2, "http://e.org/p2"),
+             (["3", "g", "h", "i"], 3, 4, "http://e.org/p1")]
+    for values, row_num, source_num, url in calls:
+        got = cached.row_triples(values, row_num, source_num, url=url)
+        assert got == uncached.row_triples(values, row_num, source_num, url=url)
+        preds = {t[1] for t in got}
+        assert f"{url}#p-{row_num}" in preds and f"{url}#w-3" in preds
+        assert all(p.startswith(url) for p in preds if "#p-" in p or "#w" in p)
+    # bounded: one entry per row-invariant column, for the current base only
+    assert len(cached._pred_cache) == 3

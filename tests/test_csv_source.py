@@ -1,7 +1,10 @@
 """CSV source: multiline quoted fields (whole-file fallback) and logical
 row numbering across skipped blank rows (CSVW `_row` semantics)."""
 
+import contextlib
 import json
+
+import pytest
 
 from rdf_tabular_spark.csvw.model import Dialect
 from rdf_tabular_spark.pipeline import csvw_to_triples
@@ -88,3 +91,71 @@ def test_multiline_with_header_and_skip(spark, tmp_path):
     d = Dialect(skipRows=1)  # comment + header both consumed (skipped_rows=2)
     got = _rows(spark, p, d)
     assert got == [(["x\ny", "1"], 1, 3)]
+
+
+def test_whole_file_path_tests_raw_line_for_comment(spark, tmp_path):
+    """commentPrefix keys on the raw source line on the whole-file path too:
+    a quoted first cell beginning with the prefix is data."""
+    p = tmp_path / "c.csv"
+    p.write_text('a,b\n"#x",y\n#c,z\n"m\nn",w\n')
+    d = Dialect(commentPrefix="#")
+    assert _has_quoted_newline(str(p), d)  # forces the whole-file path
+    assert _rows(spark, p, d) == [(["#x", "y"], 1, 2), (["m\nn", "w"], 2, 4)]
+
+
+@contextlib.contextmanager
+def _small_splits(spark, nbytes):
+    """Split every file read inside the block into ``nbytes``-sized scan
+    splits; the session's settings are restored afterwards."""
+    keys = ("spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, str(nbytes))
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def _numbered_file(kind):
+    """(text, dialect) of a ~60-line file exercising one numbering rule."""
+    data = [f"{i},v{i}" for i in range(1, 61)]
+    if kind == "plain":
+        return "a,b\n" + "\n".join(data) + "\n", Dialect()
+    if kind == "skip_rows_header":
+        return ("note 1\nnote 2\na,b\n" + "\n".join(data) + "\n",
+                Dialect(skipRows=2))
+    if kind == "skip_blank_rows":
+        lines = [x if i % 7 else ",," for i, x in enumerate(data)]
+        lines[20:20] = ["", " , ", ""]
+        return "a,b\n" + "\n".join(lines) + "\n", Dialect(skipBlankRows=True)
+    if kind == "comment_prefix":
+        lines = [x if i % 5 else f"# c{i}" for i, x in enumerate(data)]
+        return ("# head\na,b\n" + "\n".join(lines) + "\n",
+                Dialect(skipRows=1, commentPrefix="#"))
+    assert kind == "headerless_bom"
+    return ("\ufeff" + "\n".join(data) + "\n",
+            Dialect(header=False, headerRowCount=0))
+
+
+@pytest.mark.parametrize("kind", ["plain", "skip_rows_header",
+                                  "skip_blank_rows", "comment_prefix",
+                                  "headerless_bom"])
+def test_numbering_across_splits_matches_one_split(spark, tmp_path, kind):
+    """row_num/source_num are assigned in the JVM per scan split plus the
+    earlier splits' line counts: a file cut into many splits must number
+    exactly like the same file read as one split."""
+    text, dialect = _numbered_file(kind)
+    p = tmp_path / "n.csv"
+    p.write_text(text, encoding="utf-8")
+    one = _rows(spark, p, dialect)
+    assert spark.read.text(str(p)).rdd.getNumPartitions() == 1
+    with _small_splits(spark, 64):
+        assert spark.read.text(str(p)).rdd.getNumPartitions() >= 3
+        many = _rows(spark, p, dialect)
+    assert many == one
+    assert [rn for _, rn, _ in one] == list(range(1, len(one) + 1))
+    if kind == "headerless_bom":
+        assert one[0] == (["1", "v1"], 1, 1)

@@ -577,15 +577,50 @@ def test_every_python_kernel_site_ships_the_package():
     launch = re.compile(r"\.(mapInPandas|mapInArrow|applyInPandas)\(")
     ship = re.compile(r"ensure_package_on_executors|shipped\(")
     missing = []
+    sites = set()  # (file, enclosing function) of every launch site
     for path in sorted(pkg.rglob("*.py")):
         lines = path.read_text().splitlines()
         for i, line in enumerate(lines):
             if not launch.search(line):
                 continue
+            defs = [re.match(r"\s*def (\w+)", x) for x in lines[i::-1]]
+            sites.add((path.name, next(d.group(1) for d in defs if d)))
             window = "\n".join(lines[max(0, i - 60):i + 1])
             if not ship.search(window):
                 missing.append(f"{path.name}:{i + 1}")
     assert not missing, f"kernel sites without a self-ship call: {missing}"
+    # the CSV line path's kernel sites are among those checked
+    assert {("triples.py", "lines_to_triples"),
+            ("triples.py", "rows_to_triples"),
+            ("csv_source.py", "read_lines"),
+            ("csv_source.py", "read_rows")} <= sites
+
+
+def test_csvw_to_triples_one_python_kernel_on_every_slot(spark, tmp_path):
+    """CSV → triples numbers the lines in the JVM (no pickled zipWithIndex
+    pass, so no PythonRDD), parses and maps each row in ONE Python map node,
+    and spreads a one-split file over every task slot."""
+    import json
+    from rdf_tabular_spark.pipeline import csvw_to_triples
+    csv = tmp_path / "t.csv"
+    csv.write_text("id,v\n" + "".join(f"{i},x{i}\n" for i in range(400)))
+    (tmp_path / "t.csv-metadata.json").write_text(json.dumps({
+        "@context": "http://www.w3.org/ns/csvw", "url": "t.csv",
+        "tableSchema": {"columns": [{"name": "id", "titles": "id"},
+                                    {"name": "v", "titles": "v"}],
+                        "aboutUrl": "#r{id}"}}))
+    assert spark.read.text(str(csv)).rdd.getNumPartitions() == 1
+    triples = csvw_to_triples(spark, str(csv))
+    plan = plan_of(triples, "simple")
+    python_nodes = re.findall(
+        r"MapInPandas|MapInArrow|EvalPython|InPandas|PythonUDTF", plan)
+    assert python_nodes == ["MapInPandas"], plan
+    lineage = triples._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    slots = spark.sparkContext.defaultParallelism
+    used = (triples.where(F.col("source_num") > 0)
+            .select(F.spark_partition_id().alias("p")).distinct().count())
+    assert used >= slots, f"row triples ran on {used} of {slots} slots"
 
 
 def test_comention_pair_join_keys_on_doc(spark):

@@ -102,16 +102,22 @@ def canonical_mapping(edges: DataFrame,
     several job launches even on a few thousand edges (~7 s measured) — a
     bounded count picks a driver-side union-find below ``driver_threshold``
     edges and the iterative min-label loop above it. Both produce the same
-    (id, min-id-of-component) mapping. Empty edge sets short-circuit."""
+    (id, min-id-of-component) mapping.
+
+    The driver path, empty result included, hands its mapping to the JVM
+    as one Arrow table, which Spark plans as a ``LocalRelation``: no
+    Python ``parallelize`` job, and the planner knows its size, so joins
+    against it broadcast it."""
     sample = edges.limit(driver_threshold + 1).collect() \
         if driver_threshold > 0 else []
     if driver_threshold > 0 and len(sample) <= driver_threshold:
-        if not sample:
-            return edges.sparkSession.createDataFrame(
-                [], "id string, canonical_id string")
-        mapping = _unionfind([(r[0], r[1]) for r in sample])
+        import pyarrow as pa
+        mapping = sorted(_unionfind([(r[0], r[1]) for r in sample]).items())
+        table = pa.table({"id": pa.array([k for k, _ in mapping], pa.string()),
+                          "canonical_id": pa.array([v for _, v in mapping],
+                                                   pa.string())})
         return edges.sparkSession.createDataFrame(
-            sorted(mapping.items()), "id string, canonical_id string")
+            table, "id string, canonical_id string")
     return connected_components(edges).withColumnRenamed("component", "canonical_id")
 
 

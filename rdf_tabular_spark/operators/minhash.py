@@ -10,8 +10,9 @@ Plan shape (what matters at 100 TB):
   banding:    explode to (band, band_hash, id) — num_bands× row inflation of a
               THIN table (3 cols), then ONE shuffle: self-join on
               (band, band_hash) with id< id to form candidate pairs.
-  verify:     exact Jaccard on the candidates only (second shuffle is a join
-              back to the token sets, broadcast when one side is small).
+  verify:     estimated Jaccard on the candidates only: two joins back to
+              the signatures, which AQE turns into broadcasts at run time
+              when the candidate set is small.
 AQE skew-join handles hot buckets; a bucket-size cap guards degenerate bands.
 """
 
@@ -161,13 +162,6 @@ def lsh_candidate_pairs(sig_df: DataFrame, num_bands: int = 16,
     return hits.distinct()
 
 
-#: verified-cascade broadcast budget: below this many candidate pairs the
-#: pair set broadcasts into the signature scans (two broadcast joins, the
-#: 64-long sig arrays never shuffle); above it, shuffle joins. ~50 B/pair
-#: keeps the broadcast well under executor memory at the cap.
-BROADCAST_PAIRS_MAX = 1_000_000
-
-
 def signature_similarity_edges(sig_df: DataFrame, num_bands: int = 16,
                                threshold: float = 0.5,
                                max_bucket: int = 2000,
@@ -176,36 +170,27 @@ def signature_similarity_edges(sig_df: DataFrame, num_bands: int = 16,
     """Candidate pairs verified by estimated Jaccard (matching minhash
     fraction) ≥ threshold → (a, b, sim) edges.
 
-    Size-adaptive verification (r5): the candidate set is persisted and
-    counted once; below :data:`BROADCAST_PAIRS_MAX` it BROADCASTS into
-    the two signature lookups, so the signature table (the wide side —
-    64 longs per row) is scanned narrowly instead of shuffled twice
-    (measured 5.5 s → 2.7 s on the 20k-page scenario at 491k pairs).
-    Above the cap the original shuffle joins run — at that size the
-    pair set is the big side and broadcasting it would be the bug.
+    Verification is two plain equi-joins of the candidate pairs with the
+    signature table, one per endpoint. AQE sees the candidate set's real
+    size once its shuffle stage has run and broadcasts whichever side is
+    small (a few thousand pairs at crawl-batch size), so the 64-long
+    signature arrays are scanned narrowly instead of shuffled; at scale,
+    where the pair set is the big side, the joins stay shuffle joins.
 
     ``releases``: optional list that receives every DataFrame persisted
-    inside — the caller unpersists them after its terminal action so storage
-    memory doesn't accumulate across batches in a long-lived driver."""
+    inside (the LSH band table) — the caller unpersists them after its
+    terminal action so storage memory doesn't accumulate across batches
+    in a long-lived driver."""
     pairs = lsh_candidate_pairs(sig_df, num_bands, max_bucket, releases,
-                                min_band_matches).persist()
-    if releases is not None:
-        releases.append(pairs)
-    n_pairs = pairs.count()
+                                min_band_matches)
     sigs = sig_df.select(F.col("id"), F.col("sig"))
     sim = (F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
                            lambda eq: eq)) / F.size("sig_a"))
-    if n_pairs <= BROADCAST_PAIRS_MAX:
-        j1 = (sigs.join(F.broadcast(pairs), sigs["id"] == pairs["a"])
-              .select("a", "b", F.col("sig").alias("sig_a")))
-        joined = (sigs.join(F.broadcast(j1), sigs["id"] == j1["b"])
-                  .select("a", "b", "sig_a", F.col("sig").alias("sig_b")))
-    else:
-        joined = (pairs
-                  .join(sigs.withColumnsRenamed({"id": "a", "sig": "sig_a"}),
-                        on="a")
-                  .join(sigs.withColumnsRenamed({"id": "b", "sig": "sig_b"}),
-                        on="b"))
+    joined = (pairs
+              .join(sigs.withColumnsRenamed({"id": "a", "sig": "sig_a"}),
+                    on="a")
+              .join(sigs.withColumnsRenamed({"id": "b", "sig": "sig_b"}),
+                    on="b"))
     return (joined.withColumn("sim", sim)
             .filter(F.col("sim") >= threshold)
             .select("a", "b", "sim"))

@@ -16,6 +16,14 @@ Layout:
   <root>/data/batch=<batch_id>/pred_bucket=*/...parquet
   <root>/_manifests/<batch_id>.json   (counts, lineage, config, status)
 
+Each batch writes one file per ``pred_bucket`` dir. The bucket count is
+sized to the batch (:func:`sized_pred_buckets`: a power of two of about
+``ROWS_PER_BUCKET_FILE`` triples per file, at most
+``DEFAULT_PRED_BUCKETS``) and recorded in the batch manifest, so a small
+batch is one file instead of 64 slivers — at crawl-batch sizes the write
+costs per file, not per triple. ``subj_bucket`` uses the fixed
+``SUBJ_BUCKETS`` modulus whatever the batch's pred_bucket count.
+
 Resume: ``processed_batches(root)`` → skip inputs already committed; a batch
 manifest is written only after its parquet write succeeds (write-then-commit,
 idempotent re-runs).
@@ -28,11 +36,17 @@ import os
 import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+#: the most pred_buckets a sized batch gets (batches of 32M+ triples)
 DEFAULT_PRED_BUCKETS = 64
 DEFAULT_SALT = 16
+#: subj_bucket modulus, the same for every batch: a point lookup computes
+#: one bucket whatever pred_bucket count each batch was written with
+SUBJ_BUCKETS = 64
+#: target triples per store file when materialize sizes the bucket count
+ROWS_PER_BUCKET_FILE = 1_000_000
 
 #: full RDF-term retraction key: SPARQL term equality distinguishes
 #: '42'^^xsd:integer from '42'@en from the IRI <42>
@@ -49,7 +63,17 @@ def with_buckets(triples: DataFrame, pred_buckets: int = DEFAULT_PRED_BUCKETS) -
             .withColumn("pred_bucket",
                         F.pmod(F.xxhash64("pred") + F.pmod(F.xxhash64("subj"), F.lit(DEFAULT_SALT)),
                                F.lit(pred_buckets)).cast("int"))
-            .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(pred_buckets)).cast("int")))
+            .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(SUBJ_BUCKETS)).cast("int")))
+
+
+def sized_pred_buckets(n_rows: int) -> int:
+    """pred_bucket count for a batch of ``n_rows`` triples: the smallest
+    power of two that keeps each bucket file near ``ROWS_PER_BUCKET_FILE``
+    rows, capped at ``DEFAULT_PRED_BUCKETS``."""
+    n = 1
+    while n < DEFAULT_PRED_BUCKETS and n * ROWS_PER_BUCKET_FILE < n_rows:
+        n *= 2
+    return n
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:
@@ -139,7 +163,7 @@ def live_retractions(root: str) -> set[str]:
 
 def materialize(triples: DataFrame, root: str, batch_id: str,
                 lineage: Optional[dict] = None,
-                pred_buckets: int = DEFAULT_PRED_BUCKETS,
+                pred_buckets: Optional[int] = None,
                 dedup: bool = True,
                 extra_manifest: Optional[dict] = None) -> dict:
     """Write one batch of triples; returns the committed manifest.
@@ -147,41 +171,53 @@ def materialize(triples: DataFrame, root: str, batch_id: str,
     Idempotent: if ``batch_id`` is already committed the write is skipped
     (checkpoint/resume per north_rule). Metrics (triple count, per-bucket
     rows, wall time) land in the manifest.
+
+    ``pred_buckets=None`` sizes the bucket count to the batch
+    (:func:`sized_pred_buckets`): the deduplicated batch is persisted,
+    counted once, written from the cache and released. An explicit count
+    skips that job. Either way the batch writes one file per bucket dir,
+    and the triple and per-bucket counts are observed on the write itself
+    (``pyspark.sql.Observation``) — no read-back of the written files.
     """
     if batch_id in processed_batches(root):
         return _read_manifest(root, batch_id)
 
     t0 = time.time()
     df = dedup_triples(triples) if dedup else triples
-    df = with_buckets(df, pred_buckets)
-    out_path = _data_path(root, batch_id)
-    # Align write tasks with the partition dirs: without this every shuffle
-    # partition writes a sliver into every pred_bucket dir — up to
-    # shuffle_partitions x pred_buckets tiny files per batch, the
-    # small-files trap that murders object-store commits and downstream
-    # scans. Hash repartition on pred_bucket sends each bucket VALUE to
-    # exactly one task → exactly one file per dir. hash(value) % n can
-    # collide (two bucket values in one task, some tasks empty), which only
-    # reduces write parallelism — never the file count. repartitionByRange
-    # would align tasks 1:1 but costs a range-sampling job that recomputes
-    # the whole upstream plan (measured 6s → 40s on the 20k-page bench);
-    # at larger batch sizes raise the factor so files stay ~128 MB.
-    df = df.repartition(pred_buckets, F.col("pred_bucket"))
-    df.write.mode("overwrite").partitionBy("pred_bucket").parquet(out_path)
-
-    spark = triples.sparkSession
-    # explicit schema: an all-empty batch (e.g. a rule that derived
-    # nothing yet) writes a dir with no part files, which schema
-    # inference cannot read back
-    written = spark.read.schema(df.schema).parquet(out_path)
-    bucket_counts = {str(r["pred_bucket"]): r["n"] for r in
-                     written.groupBy("pred_bucket").agg(F.count("*").alias("n")).collect()}
+    cached = None
+    if pred_buckets is None:
+        cached = df = df.persist()
+        pred_buckets = sized_pred_buckets(df.count())
+    try:
+        df = with_buckets(df, pred_buckets)
+        out_path = _data_path(root, batch_id)
+        # Align write tasks with the partition dirs: without this every
+        # shuffle partition writes a sliver into every pred_bucket dir — up
+        # to shuffle_partitions x pred_buckets tiny files per batch, the
+        # small-files trap that murders object-store commits and downstream
+        # scans. Hash repartition on pred_bucket sends each bucket VALUE to
+        # exactly one task → exactly one file per dir. hash(value) % n can
+        # collide (two bucket values in one task, some tasks empty), which
+        # only reduces write parallelism — never the file count.
+        # repartitionByRange would align tasks 1:1 but costs a
+        # range-sampling job that recomputes the whole upstream plan
+        # (measured 6s → 40s on the 20k-page bench).
+        df = df.repartition(pred_buckets, F.col("pred_bucket"))
+        obs = Observation()
+        df = df.observe(obs, *[F.count(F.when(F.col("pred_bucket") == b, 1))
+                               .alias(str(b)) for b in range(pred_buckets)])
+        df.write.mode("overwrite").partitionBy("pred_bucket").parquet(out_path)
+        bucket_counts = {b: int(n) for b, n in obs.get.items() if n}
+    finally:
+        if cached is not None:
+            cached.unpersist()
     manifest = {
         "batch_id": batch_id,
         "status": "committed",
         "path": out_path,
         "n_triples": int(sum(bucket_counts.values())),
         "pred_buckets": pred_buckets,
+        "subj_buckets": SUBJ_BUCKETS,
         "bucket_counts": bucket_counts,
         "lineage": lineage or {},
         "wall_seconds": round(time.time() - t0, 3),
@@ -354,17 +390,19 @@ def read_predicate(spark: SparkSession, root: str, pred: str,
                    batches: Optional[list[str]] = None,
                    pred_buckets: Optional[int] = None) -> DataFrame:
     """Predicate-restricted read with PARTITION PRUNING: the salted
-    pred_bucket scheme places a predicate's triples in exactly
-    ``DEFAULT_SALT`` of the ``pred_buckets`` partitions (bucket =
+    pred_bucket scheme places a predicate's triples in at most
+    ``DEFAULT_SALT`` of a batch's ``pred_buckets`` partitions (bucket =
     (xxhash64(pred) + salt) mod buckets, salt ∈ [0, SALT)), so the scan
     enumerates those driver-side and prunes the rest — reading SALT/buckets
-    (= 16/64 = 25%) of the store instead of all of it, regardless of store
-    size. The exact pred equality filter is pushed to the parquet scan on
-    top of the pruning.
+    of a batch instead of all of it (16/64 = 25% for a 64-bucket batch).
+    A sized batch of at most SALT buckets (under ~16M triples) keeps every
+    predicate in every bucket, so its few files are all read. The exact
+    pred equality filter is pushed to the parquet scan on top of the
+    pruning.
 
     The bucket count is read from each committed batch's MANIFEST (the
     value ``materialize`` recorded when it wrote that batch), not assumed:
-    a store written with a non-default count would otherwise silently drop
+    batches are sized individually, and a fixed count would silently drop
     matching rows. Stores mixing bucket counts prune to the union of the
     per-count bucket sets (correct, slightly wider scan). An explicit
     ``pred_buckets`` argument is unioned in defensively.
@@ -416,12 +454,12 @@ def predicate_counts(spark: SparkSession, root: str,
 
 def bgp_match_store(spark: SparkSession, root: str, patterns,
                     batches: Optional[list[str]] = None,
-                    pred_buckets: int = DEFAULT_PRED_BUCKETS,
+                    pred_buckets: Optional[int] = None,
                     **kwargs) -> DataFrame:
     """SPARQL BGP directly against the graph store with PARTITION-PRUNED
     pattern scans: each constant-predicate pattern reads via
-    :func:`read_predicate` (SALT/pred_buckets = 25% of partition dirs,
-    independent of store size), while variable-predicate patterns fall
+    :func:`read_predicate` (SALT/pred_buckets of each batch's partition
+    dirs, independent of store size), while variable-predicate patterns fall
     back to the full live-set scan. At 10^12 triples this is the
     difference between a BGP whose every leg scans the graph and one
     whose legs each touch only their predicate's buckets. ``kwargs``
@@ -455,7 +493,7 @@ def derive_batch(spark: SparkSession, root: str, patterns,
                  template, batch_id: str,
                  rule_id: str = "construct",
                  batches: Optional[list[str]] = None,
-                 pred_buckets: int = DEFAULT_PRED_BUCKETS,
+                 pred_buckets: Optional[int] = None,
                  replaces: Optional[list[str]] = None,
                  extra_lineage: Optional[dict] = None,
                  **bgp_kwargs) -> dict:
@@ -513,7 +551,7 @@ def derive_batch(spark: SparkSession, root: str, patterns,
 def infer_rdfs_batch(spark: SparkSession, root: str, batch_id: str,
                      batches: Optional[list[str]] = None,
                      schema_cap: int = 1_000_000,
-                     pred_buckets: int = DEFAULT_PRED_BUCKETS,
+                     pred_buckets: Optional[int] = None,
                      replaces: Optional[list[str]] = None,
                      extra_lineage: Optional[dict] = None) -> dict:
     """RDFS materialization as store maintenance: close the live graph
@@ -548,7 +586,7 @@ def infer_rdfs_batch(spark: SparkSession, root: str, batch_id: str,
 def infer_owl_batch(spark: SparkSession, root: str, batch_id: str,
                     batches: Optional[list[str]] = None,
                     schema_cap: int = 100_000,
-                    pred_buckets: int = DEFAULT_PRED_BUCKETS,
+                    pred_buckets: Optional[int] = None,
                     replaces: Optional[list[str]] = None,
                     extra_lineage: Optional[dict] = None) -> dict:
     """pD* property-rule materialization as store maintenance (sibling of
@@ -899,8 +937,7 @@ def load_canonical_map(spark, root: str) -> Optional[DataFrame]:
 
 
 def read_subject(spark: SparkSession, root: str, subj: str,
-                 batches: Optional[list[str]] = None,
-                 pred_buckets: int = DEFAULT_PRED_BUCKETS) -> DataFrame:
+                 batches: Optional[list[str]] = None) -> DataFrame:
     """Point lookup of one subject's triples.
 
     pred_bucket partition pruning cannot help here — a subject's triples
@@ -910,18 +947,24 @@ def read_subject(spark: SparkSession, root: str, subj: str,
     via a one-row literal job) skips every row group whose bucket range
     excludes it, and the subj equality itself also reaches the scan
     (PushedFilters, CI-audited). On a sorted/compacted store this reads
-    ~1/pred_buckets of the data."""
-    bucket = int(spark.range(1).select(
-        F.pmod(F.xxhash64(F.lit(subj)), F.lit(pred_buckets))).first()[0])
+    ~1/SUBJ_BUCKETS of the data.
+
+    The modulus is ``SUBJ_BUCKETS`` for every batch whose manifest records
+    ``subj_buckets``; older batches used their pred_bucket count, so their
+    bucket is unioned in."""
+    h = spark.range(1).select(F.xxhash64(F.lit(subj))).first()[0]
+    moduli = {m.get("subj_buckets", m.get("pred_buckets", SUBJ_BUCKETS))
+              for m in _manifests(root) if m.get("status") == "committed"
+              and m.get("kind") != "retraction"} or {SUBJ_BUCKETS}
     df = read_graph(spark, root, batches)
-    return df.filter((F.col("subj_bucket") == bucket)
+    return df.filter(F.col("subj_bucket").isin(sorted({h % n for n in moduli}))
                      & (F.col("subj") == subj))
 
 
 def compact(spark: SparkSession, root: str,
             batches: Optional[list[str]] = None,
             compact_id: Optional[str] = None,
-            pred_buckets: int = DEFAULT_PRED_BUCKETS,
+            pred_buckets: Optional[int] = None,
             canonical: bool = False) -> Optional[dict]:
     """Merge several live batches into one (Iceberg rewrite_data_files
     analogue): continuous ingestion leaves one dir tree per batch, and a
@@ -940,9 +983,12 @@ def compact(spark: SparkSession, root: str,
     ``canonical=True`` additionally applies the store's CURRENT global
     canonical map while rewriting — baking retroactively-learned
     identities into the data (the persisted form of what
-    ``read_graph_canonical`` computes per read). Rewritten subjects land
-    in different buckets, so the bucket columns are recomputed rather
-    than grouped on.
+    ``read_graph_canonical`` computes per read).
+
+    The stored bucket columns are dropped, not grouped on: the inputs may
+    have been written with different bucket counts (and canonical
+    rewrites move subjects), so one triple can carry different buckets in
+    different batches. ``materialize`` recomputes them for the output.
 
     Returns the new manifest, or None if fewer than two live batches match.
     """
@@ -958,21 +1004,15 @@ def compact(spark: SparkSession, root: str,
     applied_retractions = sorted(live_retractions(root))
     shadows = wanted + (applied_retractions if batches is None else [])
     g = read_graph(spark, root, batches=wanted,
-                   retractions=applied_retractions).drop("batch")
-    group_keys = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype",
-                  "obj_lang"]
+                   retractions=applied_retractions) \
+        .drop("batch", "pred_bucket", "subj_bucket")
     if canonical:
         mapping = load_canonical_map(spark, root)
         if mapping is not None:
             from ..operators.components import rewrite_triples
-            g = rewrite_triples(g, mapping).drop("pred_bucket", "subj_bucket")
-        else:
-            group_keys += ["pred_bucket", "subj_bucket"]
-    else:
-        # buckets are functions of (subj, pred) — grouping on them skips
-        # the recompute in materialize's with_buckets
-        group_keys += ["pred_bucket", "subj_bucket"]
-    merged = (g.groupBy(*group_keys)
+            g = rewrite_triples(g, mapping)
+    merged = (g.groupBy("subj", "pred", "obj", "obj_is_iri", "obj_datatype",
+                        "obj_lang")
               .agg(F.min("table_url").alias("table_url"),
                    F.min("source_num").alias("source_num"),
                    F.sum("support").alias("support")))

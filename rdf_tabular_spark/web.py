@@ -709,6 +709,18 @@ def subject_profiles(triples: DataFrame) -> DataFrame:
             .agg(F.concat_ws("|", F.array_sort(F.collect_list("tok"))).alias("profile")))
 
 
+class _CheckpointRelease:
+    """``releases`` entry for a localCheckpointed DataFrame:
+    ``DataFrame.unpersist`` only drops cache-manager entries, so this
+    unpersists the checkpointed RDD itself."""
+
+    def __init__(self, df: DataFrame):
+        self._rdd = df._jdf.queryExecution().analyzed().rdd()
+
+    def unpersist(self) -> None:
+        self._rdd.unpersist(False)
+
+
 def canonicalize_subjects(triples: DataFrame, num_perm: int = 64,
                           num_bands: int = 8, threshold: float = 0.9,
                           max_bucket: int = 500,
@@ -722,12 +734,17 @@ def canonicalize_subjects(triples: DataFrame, num_perm: int = 64,
 
     The mapping is materialized eagerly (localCheckpoint — it is tiny: only
     clustered subjects), so every persist upstream of it (profiles,
-    member_map, sigs, LSH bands) is released before returning. The one
-    persist that must outlive the call — ``triples``, scanned again by the
-    caller's terminal action over the rewrite — is appended to ``releases``
-    for the caller to unpersist (long-lived drivers would otherwise
-    accumulate storage memory across batches); with ``releases=None`` it is
-    left cached.
+    member_map, sigs, LSH bands) is released before returning. The two
+    persists that must outlive the call — ``triples``, scanned again by the
+    caller's terminal action over the rewrite, and the mapping's checkpoint
+    — are appended to ``releases`` for the caller to unpersist (long-lived
+    drivers would otherwise accumulate storage memory across batches); with
+    ``releases=None`` both are left cached.
+
+    The near-dup tier's rep → canonical map comes back from
+    :func:`~.operators.components.canonical_mapping` as a LocalRelation at
+    crawl-batch size, so the member join broadcasts it instead of
+    shuffling ``member_map``.
     """
     from .operators.components import canonical_mapping, rewrite_triples
     from .operators.minhash import minhash_signatures, signature_similarity_edges
@@ -791,6 +808,8 @@ def canonicalize_subjects(triples: DataFrame, num_perm: int = 64,
         # materialize the (tiny) mapping now so everything upstream of it can
         # be dropped from storage before this function returns
         mapping = mapping.localCheckpoint(eager=True)
+        if releases is not None:
+            releases.append(_CheckpointRelease(mapping))
     finally:
         for df in _owned:
             df.unpersist()

@@ -72,9 +72,10 @@ def test_rewrite_triples_rewrites_iri_objects(spark):
     }
 
 
-def test_signature_edges_broadcast_and_shuffle_paths_agree(spark):
-    """r5 size-adaptive verification: the broadcast tier (pairs <= cap)
-    and the shuffle tier (pairs > cap) produce the identical edge set."""
+def test_signature_edges_match_driver_reference(spark):
+    """LSH verify (one plain join plan, broadcast picked by AQE) returns
+    exactly the candidate pairs whose matching-minhash fraction reaches
+    the threshold, computed driver-side from the same signatures."""
     import rdf_tabular_spark.operators.minhash as M
     docs = spark.createDataFrame(
         [(f"s{i}", "tok0|tok1|tok2|tok3|" + (f"x{i}" if i % 2 else "x0"))
@@ -82,15 +83,36 @@ def test_signature_edges_broadcast_and_shuffle_paths_agree(spark):
         "subj string, profile string")
     sigs = M.minhash_signatures(docs, "subj", "profile", num_perm=16,
                                 token_sep="|").persist()
-    def edge_set():
-        return {(r["a"], r["b"]) for r in M.signature_similarity_edges(
-            sigs, num_bands=4, threshold=0.5).collect()}
-    bc = edge_set()
-    old = M.BROADCAST_PAIRS_MAX
-    M.BROADCAST_PAIRS_MAX = 0          # force the shuffle tier
+    held = []
     try:
-        sh = edge_set()
+        got = {(r["a"], r["b"]): r["sim"] for r in
+               M.signature_similarity_edges(sigs, num_bands=4, threshold=0.5,
+                                            releases=held).collect()}
+        cands = {(r["a"], r["b"]) for r in
+                 M.lsh_candidate_pairs(sigs, num_bands=4).collect()}
+        sig = {r["id"]: r["sig"] for r in sigs.collect()}
     finally:
-        M.BROADCAST_PAIRS_MAX = old
-    assert bc == sh and bc            # non-empty and identical
-    sigs.unpersist()
+        for df in held:
+            df.unpersist()
+        sigs.unpersist()
+    want = {}
+    for a, b in cands:
+        sim = sum(x == y for x, y in zip(sig[a], sig[b])) / len(sig[a])
+        if sim >= 0.5:
+            want[(a, b)] = sim
+    assert got == want and got        # non-empty and identical
+
+def test_canonical_mapping_is_a_local_relation(spark):
+    """The driver union-find hands its mapping to the JVM as a
+    LocalRelation — no Python parallelize job (PythonRDD) — for an empty
+    and for a non-empty edge set."""
+    for rows in ([], [("b", "a"), ("c", "b"), ("e", "d")]):
+        edges = spark.createDataFrame(rows, "a string, b string")
+        m = canonical_mapping(edges)
+        qe = m._jdf.queryExecution()
+        assert qe.optimizedPlan().getClass().getSimpleName() == \
+            "LocalRelation", qe.optimizedPlan().toString()
+        assert "PythonRDD" not in qe.toRdd().toDebugString()
+        assert {(r["id"], r["canonical_id"]) for r in m.collect()} == (
+            {("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d")}
+            if rows else set())

@@ -136,9 +136,11 @@ def test_stream_dedup_uses_flatmapgroups_with_state(spark, tmp_path):
 
 
 def test_graph_store_read_predicate_prunes_buckets(spark, tmp_path):
-    """The salted pred_bucket scheme confines one predicate to SALT of the
-    64 partitions; read_predicate must turn that into PartitionFilters
-    (scan 25% of the store) and still return exactly the pred's triples."""
+    """The salted pred_bucket scheme confines one predicate to SALT of a
+    64-bucket batch's partitions; read_predicate must turn that into
+    PartitionFilters (scan 25% of the store) and still return exactly the
+    pred's triples. The batch is written with 64 buckets explicitly: the
+    sized default puts this small batch in one bucket."""
     from rdf_tabular_spark.sinks.graph_store import materialize, read_predicate
     from rdf_tabular_spark.sources.pages import DOC_PAGE_META, pages_from_documents
     from rdf_tabular_spark.web import pages_to_triples
@@ -146,7 +148,7 @@ def test_graph_store_read_predicate_prunes_buckets(spark, tmp_path):
     triples = pages_to_triples(pages_from_documents(docs), minimal=True,
                                default_meta=DOC_PAGE_META)
     root = str(tmp_path / "store")
-    materialize(triples, root, "b1")
+    materialize(triples, root, "b1", pred_buckets=64)
     pred = triples.select("pred").first()["pred"]
     df = read_predicate(spark, root, pred)
     p = plan_of(df)

@@ -308,6 +308,71 @@ def test_read_predicate_nondefault_buckets(spark, tmp_path):
     assert _spo(got) == {("a", "p", "b"), ("b", "p", "c")}
 
 
+def test_read_subject_any_bucket_count(spark, tmp_path):
+    """Regression: subj_bucket used to be taken mod the batch's pred_bucket
+    count while read_subject assumed 64, so a store written with 7 buckets
+    returned 1 of 50 subjects. Every subject must come back, whatever the
+    bucket count of the batch it lives in."""
+    from rdf_tabular_spark.sinks.graph_store import read_subject
+    root = str(tmp_path / "g")
+    rows = [(f"s{i}", "p", f"o{i}") for i in range(50)]
+    materialize(_store_rows(spark, rows[:25]), root, "b7", pred_buckets=7)
+    materialize(_store_rows(spark, rows[25:]), root, "bsized")
+    assert read_graph(spark, root).count() == 50
+    for s, p, o in rows:
+        assert _spo(read_subject(spark, root, s)) == {(s, p, o)}, s
+
+
+def test_compact_folds_batches_of_different_bucket_counts(spark, tmp_path):
+    """The same triples committed under 64 buckets and under the sized
+    count carry different bucket columns; compaction must still fold each
+    triple into one row with support 2."""
+    root = str(tmp_path / "g")
+    rows = [(f"s{i}", f"p{i % 3}", f"o{i}") for i in range(40)]
+    m64 = materialize(_store_rows(spark, rows), root, "b64", pred_buckets=64)
+    m1 = materialize(_store_rows(spark, rows), root, "bsized")
+    assert (m64["pred_buckets"], m1["pred_buckets"]) == (64, 1)
+    m = compact(spark, root)
+    g = read_graph(spark, root)
+    assert m["n_triples"] == g.count() == len(rows)
+    assert _spo(g) == set(rows)
+    assert {r["support"] for r in g.select("support").collect()} == {2}
+
+
+def test_materialize_sizes_buckets_to_the_batch(spark, tmp_path,
+                                                monkeypatch):
+    """A small batch writes one file; with the rows-per-file target
+    lowered it writes several power-of-two buckets, one file per dir. The
+    manifest's bucket_counts sum to what reads back, and materialize leaves
+    no persisted RDD behind."""
+    import glob
+    import os
+
+    from rdf_tabular_spark.sinks import graph_store as gs
+    jsc = spark.sparkContext._jsc.sc()
+    spark.catalog.clearCache()
+    before = jsc.getPersistentRDDs().size()
+    rows = [(f"s{i}", f"p{i % 5}", f"o{i}") for i in range(200)]
+
+    def files(m):
+        return [len(glob.glob(os.path.join(d, "*.parquet"))) for d in
+                glob.glob(os.path.join(m["path"], "pred_bucket=*"))]
+
+    small = materialize(_store_rows(spark, rows), str(tmp_path / "a"), "b1")
+    assert small["pred_buckets"] == 1 and files(small) == [1]
+    monkeypatch.setattr(gs, "ROWS_PER_BUCKET_FILE", 30)
+    root = str(tmp_path / "b")
+    m = materialize(_store_rows(spark, rows), root, "b1")
+    assert m["pred_buckets"] == 8                  # 200 rows / 30 → 8
+    assert files(m) and set(files(m)) == {1}
+    assert sum(m["bucket_counts"].values()) == m["n_triples"] == \
+        read_graph(spark, root).count() == len(rows)
+    assert m["bucket_counts"] == {
+        str(r["pred_bucket"]): r["count"] for r in
+        read_graph(spark, root).groupBy("pred_bucket").count().collect()}
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_update_data_rejects_property_paths():
     """A whitespace-free property path in a DATA block ('<a>/<b>') parses
     to a path AST — must be rejected loudly, not reach createDataFrame."""

@@ -143,6 +143,20 @@ def test_web_pipeline_end_to_end(spark, pages, tmp_path):
     assert os.path.exists(os.path.join(root, "_manifests", "r1.json"))
 
 
+def test_web_pipeline_releases_every_persist(spark, tmp_path):
+    """A long-lived driver holds no cached blocks after a batch: every
+    persist web_pipeline makes, the canonical map's localCheckpoint
+    included, is released once the batch commits."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    manifest = web_pipeline(spark, synth_pages(spark, 60, seed=7),
+                            str(tmp_path / "g"), "b1",
+                            entity_dict=entity_dictionary(),
+                            incremental_canonical=True)
+    assert manifest["n_triples"] > 0
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_microdata_to_triples(spark):
     """Stage 1b: schema.org items become rdf:type + property triples with
     vocabulary-resolved predicate IRIs."""

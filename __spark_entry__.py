@@ -2,9 +2,8 @@
 
 ``entry`` runs the flagship web-KG query (HTML pages → Arrow extraction →
 CSVW triple kernel) on sf0.001; ``queries``/``oracle_sql`` expose the full
-operator inventory (SURVEY.md §2 + §2.9 training-data extensions) with
-DuckDB-checkable ANSI-SQL oracles. Implementation lives in
-``rdf_tabular_spark/queries.py``.
+operator inventory (SURVEY.md §2) with DuckDB-checkable ANSI-SQL oracles.
+Implementation lives in ``rdf_tabular_spark/queries.py``.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""Crawl operations: robots.txt compliance filtering and crawl-frontier
-discovery.
+"""Crawl operations: robots.txt compliance filtering, crawl-frontier
+discovery and recrawl dedup (the latest snapshot of each URL).
 
 These close the loop the page pipeline sits inside at web scale: the link
 graph discovers URLs (frontier = seen minus crawled), and robots.txt rules
@@ -211,3 +211,27 @@ def frontier_urls(links: DataFrame, crawled: DataFrame,
     concentration); this is the iteration step of a BFS crawler."""
     return (links.select(F.col("dst").alias(url_col)).distinct()
             .join(crawled.select(url_col), url_col, "left_anti"))
+
+
+def latest_snapshot(df: DataFrame, key_col: str = "url",
+                    ts_col: str = "warc_ts",
+                    tiebreak_col: str | None = "html") -> DataFrame:
+    """Recrawl dedup: keep exactly ONE row per ``key_col`` — the one with
+    the greatest ``ts_col`` (the latest crawl snapshot of each URL). The
+    Common-Crawl ingest primitive: N monthly crawls of the same corpus
+    collapse to the freshest capture before any downstream stage runs.
+
+    ONE keyed shuffle via groupBy + max_by with full map-side partial
+    aggregation (beats a row_number window, which cannot combine
+    map-side). Ties on ``ts_col`` (two captures in the same second) break
+    deterministically on md5 of ``tiebreak_col`` so reruns and retried
+    tasks pick the same winner. Key cardinality ~= corpus size, so no
+    skew: every group has crawl-count-many rows.
+    """
+    order = [F.col(ts_col)]
+    if tiebreak_col is not None:
+        order.append(F.md5(F.col(tiebreak_col).cast("binary")))
+    packed = F.struct(*[F.col(c) for c in df.columns])
+    won = (df.groupBy(key_col)
+             .agg(F.max_by(packed, F.struct(*order)).alias("_row")))
+    return won.select(*[F.col(f"_row.{c}").alias(c) for c in df.columns])

@@ -2,8 +2,8 @@
 vectorized signatures.
 
 Generic over any (id, text) DataFrame; used for (a) subject canonicalization
-blocking in the KG pipeline (north_rule stage 3) and (b) document near-dup
-detection in the training-data ops.
+blocking in the KG pipeline (north_rule stage 3) and (b) the document
+near-duplicate queries of the query registry (``dedup_minhash_scale_*``).
 
 Plan shape (what matters at 100 TB):
   signatures: narrow Arrow stage (numpy, O(n_rows · num_perm))

@@ -141,18 +141,6 @@ def word_ngrams(col: Column, n: int = 3) -> Column:
         .otherwise(F.array().cast("array<string>")))
 
 
-def word_ngrams_all(col: Column, n: int = 3) -> Column:
-    """Like :func:`word_ngrams` but keeps every window occurrence in
-    document order (no distinct) — for position-sensitive span analyses
-    where a window repeated inside one document must count each time."""
-    toks = tokens(col)
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    grams = F.transform(idx, lambda i: F.concat_ws(
-        " ", *[F.element_at(toks, i + F.lit(j)) for j in range(n)]))
-    return (F.when(F.size(toks) >= n, grams)
-            .otherwise(F.array().cast("array<string>")))
-
-
 # --- Gopher-style document quality rules (Rae et al. 2021, §A1.1) ----------
 # Public heuristics for web-corpus filtering: word-count band, mean word
 # length band, symbol/word ratio, bullet- and ellipsis-line ratios,
@@ -282,8 +270,7 @@ def tfidf_top_terms(docs, k: int = 3, id_col: str = "doc_id",
 # weight vector; the Spark-side shape of the stage — dot product of per-doc
 # feature columns against broadcast-literal weights, one codegen projection,
 # no shuffle — is identical whatever the weights are, so the fixed public
-# weights below stand in for a trained artifact (the same honest-stub
-# discipline as the multimodal decode slots). The margin is kept LINEAR: a
+# weights below stand in for a trained artifact. The margin is kept LINEAR: a
 # sigmoid would be monotone (same ranking, same threshold decisions) but
 # exp() is not bit-identical across engines, and the linear margin is —
 # every feature is a ratio of integers and the dot product is a fixed

@@ -308,7 +308,8 @@ def discover_metadata(url: str, resolver: Resolver,
         for t in (doc.get("tables") or doc.get("resources") or []):
             if isinstance(t, dict) and isinstance(t.get("url"), str):
                 refs.append(t["url"])
-        return any(_resolve(base, r) == url for r in refs)
+        target = url if "://" in url else os.path.normpath(url)
+        return any(_resolve(base, r) == target for r in refs)
 
     for cand in candidates:
         try:

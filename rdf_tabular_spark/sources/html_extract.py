@@ -26,6 +26,10 @@ from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
 
 _SKIP_TEXT = {"script", "style", "head", "title"}
 _VOID = {"br", "hr", "img", "meta", "link", "input"}
+# elements whose end tag crawl HTML routinely omits: they never count
+# toward a property capture's depth, and they end only a capture that the
+# same tag opened (its end tag, or the start of a sibling of that tag)
+_OPTIONAL_END = {"p", "li", "td", "th", "tr", "option"}
 
 
 def _span(a: dict, key: str) -> int:
@@ -111,10 +115,11 @@ class _PageParser(HTMLParser):
         self._cell: Optional[list[str]] = None
         self._cell_span: tuple[int, int] = (1, 1)
         self._item_stack: list[MicroItem] = []
-        # text-content property capture entries are [prop, parts, depth]:
-        # `depth` counts open nested elements inside the property element
-        # so '<span itemprop=x>Doc <b>1</b> extra</span>' captures the
-        # full 'Doc 1 extra', not just the text before the first end tag
+        # text-content property capture entries are [prop, parts, depth,
+        # tag]: `depth` counts open nested elements inside the property
+        # element so '<span itemprop=x>Doc <b>1</b> extra</span>' captures
+        # the full 'Doc 1 extra', not just the text before the first end
+        # tag; `tag` is the element that opened the capture
         self._prop_stack: list[list] = []
         # RDFa-lite state: vocab/prefixes apply from their declaration
         # onward (document-order scoping — the crawl-practice shape is one
@@ -123,7 +128,7 @@ class _PageParser(HTMLParser):
         self._rdfa_vocab: str = ""
         self._rdfa_prefixes: dict[str, str] = {}
         self._rdfa_stack: list[RdfaItem] = []
-        self._rdfa_prop_stack: list[list] = []  # [prop, parts, depth]
+        self._rdfa_prop_stack: list[list] = []  # [prop, parts, depth, tag]
 
     def handle_starttag(self, tag, attrs):
         a = dict(attrs)
@@ -171,6 +176,8 @@ class _PageParser(HTMLParser):
             if href:
                 self.links.append(href)
                 self._anchor_stack.append((href, []))
+        if tag in _OPTIONAL_END:
+            self._end_captures(tag)
         pushed_md = pushed_rdfa = False
         if "itemscope" in a:
             item = MicroItem(item_id=a.get("itemid", f"_:item{len(self.micro)}"),
@@ -182,7 +189,7 @@ class _PageParser(HTMLParser):
             if href is not None:
                 self._item_stack[-1].props.append((a["itemprop"], href))
             else:
-                self._prop_stack.append([a["itemprop"], [], 0])
+                self._prop_stack.append([a["itemprop"], [], 0, tag])
                 pushed_md = True
         # RDFa-lite (vocab / prefix / typeof / property / resource).
         # vocab+prefix are processed BEFORE typeof so the common
@@ -209,13 +216,13 @@ class _PageParser(HTMLParser):
             if value is not None:
                 self._rdfa_stack[-1].props.append((prop, value))
             else:
-                self._rdfa_prop_stack.append([prop, [], 0])
+                self._rdfa_prop_stack.append([prop, [], 0, tag])
                 pushed_rdfa = True
         # depth tracking: any OTHER non-void element opening inside an open
         # text-content property element bumps that capture's depth, so its
         # end tag decrements instead of closing the capture — text after
         # nested markup ('Doc <b>1</b> extra') is retained
-        if tag not in _VOID:
+        if tag not in _VOID and tag not in _OPTIONAL_END:
             if self._prop_stack and not pushed_md:
                 self._prop_stack[-1][2] += 1
             if self._rdfa_prop_stack and not pushed_rdfa:
@@ -266,33 +273,38 @@ class _PageParser(HTMLParser):
         # void end tags (only '<x/>' self-closing syntax produces one) were
         # never counted on the start side, so they must not pop/decrement
         if tag not in _VOID:
-            if self._prop_stack:
-                if self._prop_stack[-1][2] > 0:
-                    self._prop_stack[-1][2] -= 1
-                else:
-                    prop, parts, _ = self._prop_stack.pop()
-                    if self._item_stack:
-                        self._item_stack[-1].props.append(
-                            (prop, "".join(parts).strip()))
-            if self._rdfa_prop_stack:
-                if self._rdfa_prop_stack[-1][2] > 0:
-                    self._rdfa_prop_stack[-1][2] -= 1
-                else:
-                    prop, parts, _ = self._rdfa_prop_stack.pop()
-                    if self._rdfa_stack:
-                        self._rdfa_stack[-1].props.append(
-                            (prop, "".join(parts).strip()))
+            self._end_captures(tag)
+
+    def _end_captures(self, tag):
+        """Apply an end of ``tag`` to the innermost microdata and RDFa
+        captures: a nested element's end lowers the capture's depth, the
+        end of the element that opened it (depth 0) records the property.
+        An ``_OPTIONAL_END`` tag only ends a capture that it opened."""
+        for stack, items in ((self._prop_stack, self._item_stack),
+                             (self._rdfa_prop_stack, self._rdfa_stack)):
+            if not stack:
+                continue
+            ent = stack[-1]
+            if tag in _OPTIONAL_END:
+                if ent[2] or ent[3] != tag:
+                    continue
+            elif ent[2] > 0:
+                ent[2] -= 1
+                continue
+            prop, parts, *_ = stack.pop()
+            if items:
+                items[-1].props.append((prop, "".join(parts).strip()))
 
     def finalize(self):
         """Drain property captures left open by truncated/unbalanced crawl
         HTML — an unclosed '<span itemprop=x>text' still yields its prop."""
         while self._prop_stack:
-            prop, parts, _ = self._prop_stack.pop()
+            prop, parts, *_ = self._prop_stack.pop()
             if self._item_stack:
                 self._item_stack[-1].props.append(
                     (prop, "".join(parts).strip()))
         while self._rdfa_prop_stack:
-            prop, parts, _ = self._rdfa_prop_stack.pop()
+            prop, parts, *_ = self._rdfa_prop_stack.pop()
             if self._rdfa_stack:
                 self._rdfa_stack[-1].props.append(
                     (prop, "".join(parts).strip()))

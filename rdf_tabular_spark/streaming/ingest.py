@@ -128,218 +128,6 @@ def triples_rate_per_host(spark: SparkSession, input_dir: str, out_dir: str,
     return writer.start()
 
 
-def stream_dedup_exact(spark: SparkSession, input_dir: str, out_dir: str,
-                       checkpoint_dir: str, available_now: bool = True):
-    """Cross-batch streaming exact dedup — the custom stateful operator tier
-    (``applyInPandasWithState``): the first page seen for each distinct text
-    hash is emitted, every later arrival (same micro-batch, later batch, or
-    after a restart) is dropped. State per key is one boolean, checkpointed
-    with the query, so a crashed run resumes with its dedup memory intact.
-
-    Plan shape at scale: one shuffle on the md5 key (same as the batch
-    exact-dedup groupBy), then per-key state lookups; state volume is one
-    row per distinct document — the streaming face of
-    operators/dedup.exact_dedup_groups.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (StringType, StructField, StructType,
-                                   TimestampType)
-
-    pages = read_page_stream(spark, input_dir)
-    keyed = pages.select(
-        F.md5(F.col("text")).alias("dup_key"), "url", "warc_ts", "text")
-
-    out_schema = StructType([
-        StructField("dup_key", StringType(), False),
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("text", StringType(), True),
-    ])
-    state_schema = StructType([StructField("seen", StringType(), True)])
-
-    def dedup_fn(key, pdfs, state: GroupState):
-        import pandas as pd
-        if state.exists:
-            # key already emitted in an earlier micro-batch — drain and drop
-            for _ in pdfs:
-                pass
-            return
-        first = None
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            # deterministic representative within the batch: min url
-            cand = pdf.sort_values("url").iloc[[0]]
-            if first is None or cand.iloc[0]["url"] < first.iloc[0]["url"]:
-                first = cand
-        if first is not None:
-            state.update(("1",))
-            yield first[["dup_key", "url", "warc_ts", "text"]]
-
-    deduped = keyed.groupBy("dup_key").applyInPandasWithState(
-        dedup_fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)
-    writer = (deduped.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_minhash_pairs(spark: SparkSession, input_dir: str, out_dir: str,
-                         checkpoint_dir: str, num_perm: int = 8,
-                         rows_per_band: int = 2, n: int = 3,
-                         threshold: float = 0.5, max_bucket: int = 256,
-                         available_now: bool = True):
-    """Cross-batch streaming near-dedup candidates: MinHash-LSH with
-    per-bucket signature state (``applyInPandasWithState``).
-
-    Each arriving page's md5-MinHash signature (the same construction as
-    :func:`operators.dedup.minhash_md5_sig_df`) is banded; per LSH bucket
-    the state keeps the signatures seen so far (capped at ``max_bucket``,
-    like the batch tier), and every new arrival whose estimated Jaccard
-    against a stored signature clears ``threshold`` emits a candidate pair
-    ``(a, b, est_sim)`` — even when the two pages arrived in different
-    micro-batches or across a restart (state is checkpointed with the
-    query). Pairs may repeat across bands; consumers ``distinct()`` them,
-    exactly as the batch band join does.
-
-    Plan shape at scale: one narrow Arrow signature kernel, one shuffle on
-    the band key (the streaming face of the batch banded self-join); state
-    volume is one signature per document per band, capped per bucket.
-    """
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (DoubleType, StringType, StructField,
-                                   StructType)
-
-    from ..operators.dedup import _md5_minhash_rows
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(spark)
-
-    pages = read_page_stream(spark, input_dir)
-    num_bands = num_perm // rows_per_band
-
-    sig_schema = StructType([StructField("url", StringType(), False),
-                             StructField("sig", StringType(), True)])
-
-    def sig_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sigs = []
-            for text in pdf["text"]:
-                _, s = _md5_minhash_rows([0], [text], num_perm, n)
-                sigs.append(None if s[0][0] is None else "|".join(s[0]))
-            yield pd.DataFrame({"url": pdf["url"], "sig": sigs})
-
-    sigs = (pages.mapInPandas(sig_kernel, schema=sig_schema)
-            .filter(F.col("sig").isNotNull()))
-    sig_arr = F.split("sig", r"\|")
-    bands = F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.md5(F.concat_ws(",", F.slice(sig_arr, b * rows_per_band + 1,
-                                           rows_per_band))).alias("band_key")))
-    banded = (sigs.select("url", "sig", F.explode(bands).alias("bk"))
-              .select("url", "sig", F.col("bk.band").alias("band"),
-                      F.col("bk.band_key").alias("band_key")))
-
-    out_schema = StructType([
-        StructField("a", StringType(), False),
-        StructField("b", StringType(), False),
-        StructField("est_sim", DoubleType(), False),
-    ])
-    # parallel \x01-joined lists (state structs carry scalars only)
-    state_schema = StructType([StructField("urls", StringType(), True),
-                               StructField("sigs", StringType(), True)])
-
-    def pair_fn(key, pdfs, state: GroupState):
-        urls, sigs_ = [], []
-        if state.exists:
-            u, s = state.get
-            if u:
-                urls, sigs_ = u.split("\x01"), s.split("\x01")
-        rows = pd.concat(list(pdfs), ignore_index=True) if pdfs else None
-        out = []
-        if rows is not None and not rows.empty:
-            # deterministic arrival order inside a micro-batch
-            rows = rows.sort_values("url")
-            for url, sig in zip(rows["url"], rows["sig"]):
-                if url in urls:
-                    continue  # replay / duplicate delivery
-                parts = sig.split("|")
-                for seen_url, seen_sig in zip(urls, sigs_):
-                    sp = seen_sig.split("|")
-                    est = sum(x == y for x, y in zip(parts, sp)) / num_perm
-                    if est >= threshold:
-                        a, b = sorted((seen_url, url))
-                        out.append((a, b, est))
-                if len(urls) < max_bucket:
-                    urls.append(url)
-                    sigs_.append(sig)
-            state.update(("\x01".join(urls), "\x01".join(sigs_)))
-        if out:
-            yield pd.DataFrame(out, columns=["a", "b", "est_sim"])
-
-    pairs = banded.groupBy("band", "band_key").applyInPandasWithState(
-        pair_fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)
-    writer = (pairs.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_curate_pages(spark: SparkSession, input_dir: str, out_dir: str,
-                        checkpoint_dir: str,
-                        available_now: bool = True,
-                        max_files_per_trigger: Optional[int] = None):
-    """Streaming curation: PII-scrub incoming page text and attach the
-    quality decision (operators/curate.scrub_pii +
-    curate-style gopher/langid columns) as new pages land. Returns the
-    started query.
-
-    Everything here is a stateless Column projection, so the streaming
-    plan is file scan → project → file sink: no state store, no shuffle,
-    and the micro-batch is exactly the batch-path semantics (the
-    duplicate rule needs cross-batch state and lives in
-    ``stream_dedup_exact``; compose the two sinks for the full report).
-    """
-    from ..operators import curate as C
-    from ..operators import text as T
-    pages = read_page_stream(spark, input_dir, max_files_per_trigger)
-    pred = T.lang_id(F.col("text"))
-    lang_known = F.col("lang").isin(*T.LANG_ORDER)
-    reason = (F.when(~T.gopher_pass(F.col("text")), F.lit("gopher"))
-              .when(lang_known & (pred != F.col("lang")),
-                    F.lit("lang_mismatch"))
-              .otherwise(F.lit("keep")))
-    counts = C.pii_counts(F.col("text"))
-    curated = pages.select(
-        "url", "warc_ts", "lang",
-        C.scrub_pii(F.col("text")).alias("text"),
-        *[v.alias(k) for k, v in counts.items()],
-        reason.alias("reason"),
-        (reason == "keep").alias("keep"))
-    writer = (curated.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_ntriples_to_store(spark: SparkSession, input_dir: str,
                              store_root: str, checkpoint_dir: str,
                              available_now: bool = True,
@@ -529,66 +317,6 @@ def stream_sessionize(spark: SparkSession, input_dir: str, out_dir: str,
               .option("path", out_dir)
               .option("checkpointLocation", checkpoint_dir)
               .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-DOCS_DDL = ("doc_id long, text string, lang string, source string, "
-            "n_chars long")
-
-
-def stream_docs_dedup_incremental(spark: SparkSession, input_dir: str,
-                                  out_dir: str, checkpoint_dir: str,
-                                  band_store: str,
-                                  available_now: bool = True,
-                                  max_files_per_trigger: Optional[int] = None):
-    """Continuous incremental near-dedup over a growing document corpus:
-    each micro-batch is near-deduped against the ACCUMULATED MinHash band
-    store (operators/dedup.incremental_keep — batch bands join stored
-    bands; old x old never forms), then survivors land under
-    ``out_dir/epoch=N`` and THEIR bands append under
-    ``band_store/epoch=N``.
-
-    Replay-safe without a manifest protocol: both writes are per-epoch
-    ``overwrite``, and the store read filters to ``epoch < current`` — a
-    replayed epoch never sees its own first attempt's bands (which would
-    make every document collide with itself) and re-produces byte-identical
-    output. The store side of the join is partition-pruned on ``band``;
-    state volume is the band table of the KEPT corpus (~50 B/row), not the
-    raw crawl.
-    """
-    from ..operators.dedup import (incremental_keep, minhash_md5_bands,
-                                   write_band_store)
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(spark)
-    reader = spark.readStream.schema(DOCS_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir)
-
-    def commit(batch_df, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        try:
-            old = (sess.read.option("basePath", band_store)
-                   .parquet(band_store)
-                   .filter(F.col("epoch").cast("long") < epoch_id)
-                   .select("id", "band", "band_key"))
-        except Exception:  # first epoch: no store yet
-            old = minhash_md5_bands(batch_df).limit(0)
-        releases: list = []
-        kept = incremental_keep(batch_df, old, releases=releases).persist()
-        kept.write.mode("overwrite").parquet(
-            f"{out_dir}/epoch={epoch_id:08d}")
-        write_band_store(minhash_md5_bands(kept),
-                         f"{band_store}/epoch={epoch_id:08d}",
-                         mode="overwrite")
-        for df in [kept, *releases]:
-            df.unpersist()
-
-    writer = (docs.writeStream
-              .foreachBatch(commit)
-              .option("checkpointLocation", checkpoint_dir))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

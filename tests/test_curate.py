@@ -152,48 +152,6 @@ def test_curation_report_reason_precedence(spark):
     assert out[4] == "keep"        # out-of-model language passes through
 
 
-def test_curate_job_end_to_end(spark, tmp_path):
-    """jobs/curate.py over the sf0.001 documents table: quality gate +
-    near-dedup + PII scrub + packing, with a stage-wise report."""
-    from rdf_tabular_spark.jobs.curate import main as curate_main
-    out = str(tmp_path / "curated")
-    rpt = str(tmp_path / "report.json")
-    report = curate_main(["--in", "/root/testdata/sf0.001/documents.parquet",
-                          "--out", out, "--near-dedup", "--scrub-pii",
-                          "--pack-budget", "256", "--report", rpt])
-    assert report["n_input"] > 0
-    assert report["n_kept"] <= report["n_input"]
-    assert report["reasons"].get("keep", 0) > 0
-    assert "near_dup_dropped" in report and "pii_masked" in report
-    assert report["n_sequences"] > 0
-    curated = spark.read.parquet(out)
-    assert {"doc_id", "text", "grp", "seq_no", "n_tok"} <= set(curated.columns)
-    assert curated.count() == report["n_kept"]
-    import json as _json
-    with open(rpt) as f:
-        assert _json.load(f)["n_kept"] == report["n_kept"]
-
-
-def test_curate_job_decontamination(spark, tmp_path):
-    """--benchmark drops docs sharing enough 3-grams with the benchmark."""
-    from rdf_tabular_spark.jobs.curate import main as curate_main
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # benchmark = the exact text of one kept document → it must be dropped
-    from rdf_tabular_spark.operators.curate import curation_report
-    keep_ids = [r.doc_id for r in
-                curation_report(docs).filter("keep").limit(1).collect()]
-    bench = docs.filter(F.col("doc_id").isin(keep_ids)).select("text")
-    bpath = str(tmp_path / "bench.parquet")
-    bench.write.parquet(bpath)
-    out = str(tmp_path / "curated")
-    report = curate_main(["--in", "/root/testdata/sf0.001/documents.parquet",
-                          "--out", out, "--benchmark", bpath,
-                          "--contam-ngrams", "8"])
-    assert report["contaminated_dropped"] >= 1
-    curated = spark.read.parquet(out)
-    assert curated.filter(F.col("doc_id").isin(keep_ids)).count() == 0
-
-
 def test_cap_per_source_semantics(spark):
     """Cap respected per source, selection deterministic across calls, and
     under-cap sources pass through untouched."""
@@ -233,26 +191,6 @@ def test_c4_clean_lines(spark):
     assert r["n_kept"] == 3 and r["n_removed"] == 5
 
 
-def test_curate_job_c4_lines(spark, tmp_path):
-    """--c4-lines rewrites text before the quality gate and drops docs the
-    line filter empties; counts land in the report."""
-    from rdf_tabular_spark.jobs.curate import main
-    src = str(tmp_path / "docs")
-    out = str(tmp_path / "out")
-    good = ("This is a perfectly ordinary sentence with plenty of words "
-            "to pass every quality rule in the gate today. " * 5).strip()
-    spark.createDataFrame(
-        [(1, good + "\nnoise line without punctuation", "en"),
-         (2, "only noise no punctuation at all", "en")],
-        "doc_id long, text string, lang string").write.parquet(src)
-    rep = main(["--in", src, "--out", out, "--c4-lines"])
-    assert rep["c4_docs_emptied"] == 1
-    assert rep["c4_lines_removed"] >= 2
-    rows = spark.read.parquet(out).collect()
-    assert [r["doc_id"] for r in rows] == [1]
-    assert "noise line" not in rows[0]["text"]
-
-
 def test_filter_blocked_domains_suffix_semantics(spark):
     from rdf_tabular_spark.operators.urls import filter_blocked_domains
     df = spark.createDataFrame(
@@ -266,77 +204,6 @@ def test_filter_blocked_domains_suffix_semantics(spark):
     kept = {r["doc_id"]
             for r in filter_blocked_domains(df, bl, key="doc_id").collect()}
     assert kept == {3, 4, 5}
-
-
-def test_curate_job_blocklist_stage(spark, tmp_path):
-    """--blocklist drops docs whose synthetic url host is on/under a
-    blocked domain, before the quality gate, with the count reported."""
-    from rdf_tabular_spark.jobs.curate import main as curate_main
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    src = str(tmp_path / "docs_with_urls.parquet")
-    (docs.withColumn(
-        "url", F.concat(F.lit("http://"), F.col("source"),
-                        F.lit(".example.org/d/"), F.col("doc_id")))
-     .write.parquet(src))
-    bpath = str(tmp_path / "blocklist.parquet")
-    spark.createDataFrame([("src1.example.org",)], "domain string") \
-        .write.parquet(bpath)
-    out = str(tmp_path / "curated")
-    report = curate_main(["--in", src, "--out", out, "--blocklist", bpath])
-    n_src1 = docs.filter(F.col("source") == "src1").count()
-    assert report["blocklist_dropped"] == n_src1
-    curated = spark.read.parquet(out)
-    assert curated.filter(F.col("source") == "src1").count() == 0
-
-
-def test_curate_job_pipeline_config(spark, tmp_path):
-    """--pipeline CONFIG.json: declarative stage selection equivalent to
-    the flag spelling; config errors fail loudly."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from rdf_tabular_spark.jobs.curate import apply_pipeline_config
-    from rdf_tabular_spark.jobs.curate import main as curate_main
-
-    cfg = str(tmp_path / "pipeline.json")
-    with open(cfg, "w") as f:
-        # no c4_lines here: the fixture corpus is single-line without
-        # terminal punctuation, so that stage legitimately empties it
-        _json.dump({"stages": [
-            {"stage": "quality"},
-            {"stage": "near_dedup", "jaccard": 0.6},
-            {"stage": "scrub_pii"},
-            {"stage": "pack", "budget": 256},
-        ]}, f)
-    out = str(tmp_path / "curated")
-    report = curate_main(["--in", "/root/testdata/sf0.001/documents.parquet",
-                          "--out", out, "--pipeline", cfg])
-    assert report["pipeline_stages"] == ["quality", "near_dedup",
-                                         "scrub_pii", "pack"]
-    assert "near_dup_dropped" in report and "pii_masked" in report
-    assert report["n_sequences"] > 0 and report["n_kept"] > 0
-
-    class _Bag:
-        c4_lines = False
-        c4_min_words = 3
-    bag = _Bag()
-    assert apply_pipeline_config(
-        bag, {"stages": [{"stage": "c4_lines", "min_words": 2}]}) \
-        == ["c4_lines"]
-    assert bag.c4_lines is True and bag.c4_min_words == 2
-
-    class _A:                                     # bare attribute bag
-        pass
-
-    with _pytest.raises(ValueError, match="unknown stage"):
-        apply_pipeline_config(_A(), {"stages": [{"stage": "nope"}]})
-    with _pytest.raises(ValueError, match="unknown parameter"):
-        apply_pipeline_config(_A(), {"stages": [{"stage": "pack",
-                                                 "budgetx": 1}]})
-    with _pytest.raises(ValueError, match="duplicate"):
-        apply_pipeline_config(_A(), {"stages": [{"stage": "quality"},
-                                                {"stage": "quality"}]})
 
 
 def test_mixture_sample_semantics(spark):
@@ -361,30 +228,3 @@ def test_mixture_sample_semantics(spark):
         == sorted(map(tuple, mixture_sample(
             df.repartition(7), "doc_id", "lang",
             {"en": 0.25, "tiny": 0.75}, 20000).collect()))
-
-
-def test_curate_job_mixture_stage(spark, tmp_path):
-    """--mixture-weights/--mixture-budget stage: the kept corpus respects
-    the computed per-stratum rates and the report records the volumes."""
-    import json as _json
-    import os
-    from rdf_tabular_spark.jobs.curate import main
-
-    src = os.path.join(str(tmp_path), "docs")
-    out = os.path.join(str(tmp_path), "out")
-    text = ("the quick brown fox jumps over the lazy dog and keeps going "
-            "with plenty of distinct words so the quality gate passes %d")
-    rows = [(i, text % i, "en" if i % 2 == 0 else "fr", "src",
-             len(text % i)) for i in range(200)]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long").write.parquet(src)
-    report = main(["--in", src, "--out", out,
-                   "--mixture-weights", _json.dumps({"en": 1.0}),
-                   "--mixture-budget", "4000"])
-    kept = spark.read.parquet(out)
-    assert kept.filter("lang = 'fr'").count() == 0    # unweighted → dropped
-    n_en = kept.filter("lang = 'en'").count()
-    assert 0 < n_en < 100                             # downsampled, not all
-    assert report["mixture_dropped"] > 0
-    assert set(report["mixture_kept_volume"]) == {"en"}

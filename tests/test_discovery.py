@@ -103,6 +103,28 @@ def test_link_metadata_precedes_file_discovery(spark, tmp_path):
     assert preds == {"http://linked.org/a"}  # linked doc won the merge
 
 
+@pytest.mark.parametrize("spelling", ["./sub/data.csv", "sub//data.csv",
+                                      "{d}/sub/../sub/./data.csv"])
+def test_discovery_matches_unnormalized_local_url(monkeypatch, tmp_path,
+                                                  spelling):
+    """Discovered metadata whose table url names the requested file is
+    used however the caller spells the local path: both sides of the
+    comparison are normalized (W3C tabular-data-model §5.2)."""
+    monkeypatch.chdir(tmp_path)
+    sub = tmp_path / "sub"
+    sub.mkdir()
+    _write(sub / "data.csv", "a\nv1\n")
+    _write(sub / "data.csv-metadata.json",
+           json.dumps(_meta_doc("data.csv", "http://filebased.org/")))
+    _write(sub / "metadata.json",
+           json.dumps(_meta_doc("data.csv", "http://sibling.org/")))
+    found = discover_metadata(spelling.format(d=tmp_path), lambda u: u)
+    props = [doc["tableSchema"]["columns"][0]["propertyUrl"]
+             for doc, _ in found]
+    assert props == ["http://filebased.org/{_name}",
+                     "http://sibling.org/{_name}"]
+
+
 def test_extensionless_tsv_routed_by_sniff(spark, tmp_path):
     tsv = _write(tmp_path / "data", "a\tb\nv1\tv2\n")
     df = csvw_to_triples(spark, tsv, minimal=True)

@@ -193,31 +193,6 @@ def test_extract_job_fuse_reify_hearst(spark, tmp_path):
                                 "n_docs"}
 
 
-def test_curate_job_readability_band(spark, tmp_path):
-    """--readability-band drops documents outside the Flesch milli-unit
-    band and reports the count."""
-    from rdf_tabular_spark.jobs.curate import main as curate_main
-    out = str(tmp_path / "curated")
-    report = curate_main(["--in", "/root/testdata/sf0.001/documents.parquet",
-                          "--out", out,
-                          "--readability-band=-1000000:1000000"])
-    assert report["readability_dropped"] == 0  # the wide band keeps all
-    out2 = str(tmp_path / "curated2")
-    report2 = curate_main(["--in",
-                           "/root/testdata/sf0.001/documents.parquet",
-                           "--out", out2,
-                           "--readability-band", "999000:1000000"])
-    assert report2["readability_dropped"] > 0  # the absurd band drops
-
-
-def test_curate_job_readability_band_validation(spark, tmp_path):
-    from rdf_tabular_spark.jobs.curate import main as curate_main
-    with pytest.raises(ValueError, match="LO:HI"):
-        curate_main(["--in", "/root/testdata/sf0.001/documents.parquet",
-                     "--out", str(tmp_path / "x"),
-                     "--readability-band", "broad"])
-
-
 # --- GNN feature prep + reciprocity -----------------------------------------
 
 def test_neighbor_sample_bounded_and_deterministic(spark):
@@ -329,47 +304,6 @@ def test_keyphrases_stopword_delimited(spark):
     assert "slow snail" not in out
 
 
-def test_curate_job_host_boilerplate_stage(spark, tmp_path):
-    """--host-boilerplate strips per-source template lines before the
-    quality gate and reports the removed-line count."""
-    from pyspark.sql import functions as F
-
-    from rdf_tabular_spark.jobs.curate import main as curate_main
-    src = str(tmp_path / "docs.parquet")
-    (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-     .withColumn("text", F.concat(F.lit("COOKIE BANNER\n"), F.col("text")))
-     .write.parquet(src))
-    out = str(tmp_path / "curated")
-    report = curate_main(["--in", src, "--out", out,
-                          "--host-boilerplate", "0.5"])
-    n_docs = report["n_input"]
-    assert report["boilerplate_lines_removed"] == n_docs
-    cleaned = spark.read.parquet(out)
-    assert cleaned.filter(F.col("text").contains("COOKIE BANNER")).count() == 0
-
-
-def test_profile_job_datacard(spark, tmp_path):
-    """jobs/datacard.py over sf0.001 documents: one JSON card with sizes,
-    language mix, quantiles, dup rate, and per-source drift."""
-    import json as _json
-
-    from rdf_tabular_spark.jobs.datacard import main as profile_main
-    out = str(tmp_path / "card.json")
-    card = profile_main(["--in", "/root/testdata/sf0.001/documents.parquet",
-                         "--out", out, "--lang-col", "lang",
-                         "--source-col", "source"])
-    assert card["n_docs"] == 500
-    assert card["n_tokens"] > 0 and card["n_chars"] > 0
-    assert set(card["languages"]) == {"en", "de", "fr", "es", "zh"}
-    assert sum(card["languages"].values()) == 500
-    assert card["token_quantiles"]["p10"] <= card["token_quantiles"]["p99"]
-    assert 0.0 <= card["exact_dup_rate"] <= 1.0
-    assert len(card["sources"]) == 20
-    for v in card["sources"].values():
-        assert v["n_tokens"] > 0 and 0 <= v["tv_micro"] <= 1_000_000
-    assert _json.load(open(out)) == card
-
-
 def test_bm25_ranking_and_idf_behavior(spark):
     import math
 
@@ -396,23 +330,6 @@ def test_bm25_ranking_and_idf_behavior(spark):
     assert out[2][1] == round(expected, 4)
 
 
-def test_curate_job_bm25_stage(spark, tmp_path):
-    """--bm25-terms keeps only topic-relevant documents."""
-    from rdf_tabular_spark.jobs.curate import main as curate_main
-    report = curate_main(["--in", "/root/testdata/sf0.001/documents.parquet",
-                          "--out", str(tmp_path / "c1"),
-                          "--bm25-terms", "join,merge", "--bm25-min", "0.1"])
-    assert report["bm25_dropped"] >= 0
-    report2 = curate_main(["--in",
-                           "/root/testdata/sf0.001/documents.parquet",
-                           "--out", str(tmp_path / "c2"),
-                           "--bm25-terms", "zzzznope"])
-    # a term absent from the corpus drops every surviving doc
-    assert report2["bm25_dropped"] > 0
-    out2 = spark.read.parquet(str(tmp_path / "c2"))
-    assert out2.count() == 0
-
-
 def test_chunk_documents_windows(spark):
     from rdf_tabular_spark.operators.text import chunk_documents
     text = " ".join(f"w{i}" for i in range(1, 11))   # 10 tokens
@@ -432,64 +349,6 @@ def test_chunk_documents_windows(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="overlap"):
         chunk_documents(docs, size=4, overlap=4)
-
-
-def test_curate_job_chunk_output(spark, tmp_path):
-    """--chunk-size swaps the output shape to sliding-window chunks."""
-    from rdf_tabular_spark.jobs.curate import main as curate_main
-    out = str(tmp_path / "chunks")
-    report = curate_main(["--in", "/root/testdata/sf0.001/documents.parquet",
-                          "--out", out, "--chunk-size", "32",
-                          "--chunk-overlap", "8"])
-    chunks = spark.read.parquet(out)
-    assert set(chunks.columns) == {"doc_id", "chunk_idx", "chunk_text",
-                                   "n_tokens"}
-    assert report["n_chunks"] == chunks.count() > 0
-    assert chunks.agg({"n_tokens": "max"}).first()[0] <= 32
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="mutually"):
-        curate_main(["--in", "/root/testdata/sf0.001/documents.parquet",
-                     "--out", out, "--chunk-size", "32",
-                     "--pack-budget", "64"])
-
-
-def test_winnow_shared_run_guarantee(spark):
-    from rdf_tabular_spark.operators.dedup import winnow_fingerprints
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    docs = spark.createDataFrame(
-        [(1, "x1 x2 x3 " + base + " y1 y2"),
-         (2, "z9 " + base + " q7 q8 q9"),
-         (3, "totally different words here entirely now ok fine")],
-        "doc_id long, text string")
-    fps = winnow_fingerprints(docs, k=3, w=3)
-    by_doc = {}
-    for r in fps.collect():
-        by_doc.setdefault(r["doc_id"], set()).add(r["fp"])
-    # docs 1 and 2 share an 8-word run >= w + k - 1 = 5 -> shared fp
-    assert by_doc[1] & by_doc[2]
-    # unrelated doc shares nothing with either
-    assert not (by_doc[3] & (by_doc[1] | by_doc[2]))
-    # deterministic across recomputation
-    again = {(r["doc_id"], r["fp"]) for r in
-             winnow_fingerprints(docs, k=3, w=3).collect()}
-    assert again == {(d, f) for d, s in by_doc.items() for f in s}
-
-
-def test_winnow_overlap_pairs_and_cap(spark):
-    from rdf_tabular_spark.operators.dedup import winnow_overlap_pairs
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = spark.createDataFrame(
-        [(1, "x1 x2 " + base), (2, base + " q7 q8"),
-         (3, "unrelated totally different words entirely here ok")],
-        "doc_id long, text string")
-    pairs = {(r["a"], r["b"]): r["n_shared"]
-             for r in winnow_overlap_pairs(docs, k=3, w=3,
-                                           min_shared=2).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] >= 2
-    assert all(3 not in p for p in pairs)
-    # capping every fingerprint kills all candidates
-    assert winnow_overlap_pairs(docs, k=3, w=3, min_shared=1,
-                                max_fp_docs=1).count() == 0
 
 
 def test_fuse_retract_batch_maintenance(spark, tmp_path):

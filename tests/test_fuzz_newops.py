@@ -1,8 +1,8 @@
 """Property tests for the round-4 continuation operators: invariants a
-single fixture can't pin — winnowing's shared-run guarantee, chunking's
-reconstruction property, fusion's majority invariant, and edge-split
-totality.  Spark actions are expensive, so each property batches ALL its
-hypothesis examples into ONE DataFrame and a single collect."""
+single fixture can't pin — chunking's reconstruction property, fusion's
+majority invariant, and edge-split totality.  Spark actions are expensive,
+so each property batches ALL its hypothesis examples into ONE DataFrame and
+a single collect."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -10,30 +10,6 @@ from hypothesis import strategies as st
 _WORD = st.sampled_from(["alpha", "beta", "gamma", "delta", "eps",
                          "zeta", "eta", "theta", "iota", "kappa"])
 _DOC = st.lists(_WORD, min_size=0, max_size=12).map(" ".join)
-
-
-@settings(max_examples=5, deadline=None, derandomize=True)
-@given(st.lists(st.tuples(_DOC, _DOC, st.lists(_WORD, min_size=5,
-                                               max_size=8).map(" ".join)),
-                min_size=8, max_size=8))
-def test_winnow_guarantee_property(spark, cases):
-    """Any two docs sharing a run of >= w + k - 1 words share >= 1
-    fingerprint (k=3, w=3 -> run of 5); short docs yield none and never
-    crash."""
-    from rdf_tabular_spark.operators.dedup import winnow_fingerprints
-    rows = []
-    for i, (pre, post, shared) in enumerate(cases):
-        rows.append((2 * i, f"{pre} {shared}".strip()))
-        rows.append((2 * i + 1, f"{shared} {post}".strip()))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    by_doc: dict[int, set] = {}
-    for r in winnow_fingerprints(docs, k=3, w=3).collect():
-        by_doc.setdefault(r["doc_id"], set()).add(r["fp"])
-    for i, (pre, post, shared) in enumerate(cases):
-        if len(shared.split()) >= 5:
-            a = by_doc.get(2 * i, set())
-            b = by_doc.get(2 * i + 1, set())
-            assert a & b, f"case {i}: no shared fp for run {shared!r}"
 
 
 @settings(max_examples=5, deadline=None, derandomize=True)

@@ -148,7 +148,6 @@ def test_bgp_optional_filter_sql_parity(spark):
                                     ("d2", "gamma", None)]
 
 
-
 def test_bgp_minus_removes_matching_bindings(spark):
     """SPARQL MINUS: bindings joining a minus-group binding on shared
     variables are removed (anti-join)."""
@@ -343,7 +342,6 @@ def test_construct_sql_parity(spark):
         req, tmpl, optionals=opt)
     ddb_out = sorted(map(tuple, duckdb.sql(sql).fetchall()))
     assert spark_out == ddb_out
-
 
 
 # ---------------------------------------------------------------------------

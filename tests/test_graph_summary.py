@@ -1,12 +1,10 @@
-"""Unit tests for the graph-summarization and ER tier: characteristic
-sets, predicate co-occurrence, skip-gram pairs, blocked ER — hand-computed
+"""Unit tests for the graph-summarization tier: characteristic sets,
+predicate co-occurrence, skip-gram pairs — hand-computed
 expectations on tiny fixtures (the oracle-parity sweep covers the big
 ones)."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from rdf_tabular_spark.operators.dedup import blocked_er_name_pairs
 from rdf_tabular_spark.operators.graph import (characteristic_sets,
                                                pred_cooccurrence,
                                                skipgram_pairs)
@@ -49,15 +47,3 @@ def test_skipgram_window(spark):
                    ("b", "c"): 1, ("c", "b"): 1}
 
 
-def test_blocked_er_pairs(spark):
-    parts = spark.createDataFrame(
-        [("B1", "red widget"), ("B1", "red widgit"), ("B1", "red widgit"),
-         ("B1", "blue bolt"),               # far from both widget names
-         ("B2", "red widget")],             # other block — never compared
-        "brand string, name string")
-    out = blocked_er_name_pairs(parts, "brand", "name", max_dist=2).collect()
-    assert len(out) == 1
-    r = out[0]
-    # 1 "red widget" x 2 "red widgit" rows -> 2 entity pairs, distance 1
-    assert (r["block"], r["name_a"], r["name_b"], r["dist"],
-            r["n_pairs"]) == ("B1", "red widget", "red widgit", 1, 2)

@@ -1,10 +1,9 @@
-"""Semantics tests for operators/lm (CCNet-style bigram-LM perplexity,
-DSIR importance weights) and the Bloom-filter decontamination variant."""
+"""Semantics tests for the Bloom-filter decontamination variant
+(operators/curate.flag_contamination_bloom) against the exact probe."""
 
 from pyspark.sql import functions as F
 
 from rdf_tabular_spark.operators import curate as C
-from rdf_tabular_spark.operators import lm as L
 
 SF = "/root/testdata/sf0.001"
 
@@ -45,94 +44,3 @@ def test_bloom_tiny_filter_saturates(spark):
            C.flag_contamination_bloom(docs, bench, n=3, m=2, k=1).collect()}
     assert with_shingles, "fixture regressed: no doc produces a shingle"
     assert all(out[d] for d in with_shingles)
-
-
-def _toy(spark):
-    rows = [(i, "the cat sat on the mat " * 3) for i in range(8)]
-    rows += [(100, "the cat sat on the mat"),
-             (101, "zq xv qqq zzz unseen tokens wholly novel")]
-    return spark.createDataFrame(rows, "doc_id int, text string")
-
-
-def test_lm_score_prefers_in_domain_text(spark):
-    docs = _toy(spark)
-    ref = docs.where(F.col("doc_id") < 100)
-    uni, big = L.fit_bigram_lm(ref)
-    v = uni.count()
-    got = {r["doc_id"]: r for r in
-           L.lm_score(docs, uni, big, v).collect()}
-    assert got[100]["avg_nll_micro"] < got[101]["avg_nll_micro"]
-    # scores are exact integers, reproducible across runs
-    again = {r["doc_id"]: r["avg_nll_micro"] for r in
-             L.lm_score(docs, uni, big, v).collect()}
-    assert again == {k: r["avg_nll_micro"] for k, r in got.items()}
-
-
-def test_lm_score_drops_sub_bigram_docs(spark):
-    docs = spark.createDataFrame(
-        [(1, "one"), (2, ""), (3, "two tokens here")],
-        "doc_id int, text string")
-    uni, big = L.fit_bigram_lm(docs)
-    out = L.lm_score(docs, uni, big, uni.count()).collect()
-    assert sorted(r["doc_id"] for r in out) == [3]
-    assert out[0]["n_bigrams"] == 2
-
-
-def test_fit_caps_are_deterministic_top_k(spark):
-    docs = _toy(spark)
-    uni, big = L.fit_bigram_lm(docs, max_unigrams=3, max_bigrams=2)
-    kept = [r["w"] for r in uni.orderBy(F.desc("c1"), "w").collect()]
-    assert len(kept) == 3 and kept[0] == "the"  # highest count first
-    assert big.count() == 2
-
-
-def test_importance_sample_targets_distribution(spark):
-    rows = [(i, "en", "alpha beta gamma delta " * 4) for i in range(6)]
-    rows += [(10 + i, "de", "eins zwei drei vier " * 4) for i in range(6)]
-    rows += [(100, "??", "alpha beta gamma delta"),
-             (101, "??", "eins zwei drei vier")]
-    docs = spark.createDataFrame(rows, "doc_id int, lang string, text string")
-    target = docs.where(F.col("lang") == "en")
-    td = L.fit_feature_dist(target, 256)
-    rd = L.fit_feature_dist(docs, 256)
-    tt = td.agg(F.sum("c")).collect()[0][0]
-    rt = rd.agg(F.sum("c")).collect()[0][0]
-    w = {r["doc_id"]: r["logw_micro"] for r in
-         L.importance_weights(docs, td, rd, tt, rt, 256).collect()}
-    assert w[100] > w[101]  # target-like doc weighs more
-    top = L.importance_sample(docs, td, rd, tt, rt, n=4,
-                              n_buckets=256).collect()
-    assert len(top) == 4
-    assert 101 not in {r["doc_id"] for r in top}
-
-
-def test_ppl_buckets_tiers_and_ties(spark):
-    # 7 docs in one language: ntile(3) = sizes 3/2/2; equal scores break
-    # ties by doc_id so the assignment is total and deterministic
-    scored = spark.createDataFrame(
-        [(i, 2, 2 * s, s) for i, s in
-         enumerate([10, 10, 30, 40, 50, 60, 70])],
-        "doc_id long, n_bigrams long, nll_micro long, avg_nll_micro long")
-    docs = spark.createDataFrame([(i, "en") for i in range(7)],
-                                 "doc_id long, lang string")
-    got = {r["doc_id"]: r["bucket"]
-           for r in L.ppl_buckets(scored, docs).collect()}
-    assert got == {0: "head", 1: "head", 2: "head",
-                   3: "middle", 4: "middle", 5: "tail", 6: "tail"}
-
-
-def test_ppl_buckets_partition_per_language(spark):
-    # each language is tiled independently: 3 docs per lang → one per tier
-    scored = spark.createDataFrame(
-        [(i, 1, i, i) for i in range(6)],
-        "doc_id long, n_bigrams long, nll_micro long, avg_nll_micro long")
-    docs = spark.createDataFrame(
-        [(i, "en" if i % 2 == 0 else "de") for i in range(6)],
-        "doc_id long, lang string")
-    rows = L.ppl_buckets(scored, docs).collect()
-    by_lang = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], []).append((r["avg_nll_micro"],
-                                                  r["bucket"]))
-    for lang, pairs in by_lang.items():
-        assert [b for _, b in sorted(pairs)] == ["head", "middle", "tail"]

@@ -62,16 +62,6 @@ def test_filter_pushdown_reaches_scan(spark):
     assert "GreaterThan(l_quantity,45" in p
 
 
-def test_exact_dedup_single_shuffle(spark):
-    from rdf_tabular_spark.operators.dedup import exact_dedup_groups
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(exact_dedup_groups(docs))
-    # one Exchange node (the groupBy); partial aggregation before it
-    # (formatted mode prints each node twice: tree + detail section)
-    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
-    assert len(re.findall(r"\(\d+\) HashAggregate", p)) == 2
-
-
 def test_lsh_candidate_pairs_single_shuffle_of_bands(spark):
     """The band self-join is THE shuffle of the dedup path: the thin
     (id, band, band_hash) table is exchanged; signatures must not be."""
@@ -87,52 +77,6 @@ def test_lsh_candidate_pairs_single_shuffle_of_bands(spark):
     assert "band_hash" in p
     for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", p):
         assert "sig" not in keys, f"sig arrays shuffled: {keys}"
-
-
-def test_ann_lsh_bucket_topk_no_shuffle(spark):
-    """Bucketed ANN is a broadcast + partition-local filter + TakeOrdered:
-    zero Exchange nodes (the limit collapses to TakeOrderedAndProject)."""
-    p = plan_of(Q.queries()["ann_lsh_bucket_topk"](spark, SF))
-    assert "Exchange hashpartitioning" not in p, "bucketed ANN must not shuffle"
-    assert "TakeOrderedAndProject" in p
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-
-
-def test_exact_dedup_no_forced_broadcast(spark):
-    """The keep-id table is ~one row per distinct doc — forcing a broadcast
-    OOMs at corpus scale; the join strategy must be left to AQE."""
-    from rdf_tabular_spark.operators.dedup import exact_dedup
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(exact_dedup(docs), mode="extended")
-    assert "ResolvedHint" not in p and "broadcast" not in p.split(
-        "== Physical Plan ==")[0].lower()
-
-
-def test_stream_dedup_uses_flatmapgroups_with_state(spark, tmp_path):
-    """The streaming dedup must compile to the stateful operator (one
-    shuffle on the dup key + per-key state), not a stateless projection."""
-    import os
-    from rdf_tabular_spark.sources.pages import PAGES_SCHEMA
-    from rdf_tabular_spark.streaming.ingest import stream_dedup_exact
-    import datetime
-    ts = datetime.datetime(2024, 1, 1)
-    spark.createDataFrame([("http://h/1", ts, b"x", "x", "en")],
-                          PAGES_SCHEMA) \
-        .write.parquet(os.path.join(str(tmp_path), "in"))
-    q = stream_dedup_exact(spark, os.path.join(str(tmp_path), "in"),
-                           os.path.join(str(tmp_path), "out"),
-                           os.path.join(str(tmp_path), "ckpt"))
-    q.awaitTermination(120)
-    batch = spark.read.parquet(os.path.join(str(tmp_path), "out"))
-    assert batch.count() == 1
-    # the stateful operator appears in the recent progress plan description
-    prog = q.recentProgress
-    assert prog, "query produced no progress"
-    import json as _json
-    assert "FlatMapGroupsInPandasWithState" in _json.dumps(
-        [p["stateOperators"] for p in prog]) or any(
-        p["stateOperators"] for p in prog), \
-        "no stateful operator ran in the streaming plan"
 
 
 def test_graph_store_read_predicate_prunes_buckets(spark, tmp_path):
@@ -158,21 +102,6 @@ def test_graph_store_read_predicate_prunes_buckets(spark, tmp_path):
     from rdf_tabular_spark.sinks.graph_store import read_graph
     expected = read_graph(spark, root).filter(F.col("pred") == pred).count()
     assert df.count() == expected > 0
-
-
-def test_ivf_partitioned_store_prunes_cells(spark, tmp_path):
-    """IVF-on-disk: probing 2 cells must produce a cell-pruned scan."""
-    from rdf_tabular_spark.operators.similarity import (ivf_index,
-                                                        ivf_read_cells,
-                                                        ivf_write_partitioned)
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    assigned, _ = ivf_index(emb, k=4)
-    path = str(tmp_path / "ivf")
-    ivf_write_partitioned(assigned, path)
-    df = ivf_read_cells(spark, path, [0, 1])
-    p = plan_of(df)
-    assert re.search(r"PartitionFilters: \[.*cell", p)
-    assert df.count() == assigned.filter(F.col("cell").isin([0, 1])).count()
 
 
 def test_combined_triples_is_shuffle_free(spark):
@@ -271,15 +200,6 @@ def test_pred_stats_partial_aggregates(spark):
     p = plan_of(Q.queries()["kg_pred_stats"](spark, SF))
     assert len(re.findall(r"\(\d+\) HashAggregate", p)) >= 2
     assert len(re.findall(r"\(\d+\) Exchange", p)) <= 2, p
-
-
-def test_span_stats_grams_never_shuffle(spark):
-    """Duplicated-span detection moves only (key, md5) through every
-    Exchange; the k-token window strings themselves must stay inside the
-    narrow stage that hashes them."""
-    p = plan_of(Q.queries()["dedup_span_stats"](spark, SF))
-    for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", p):
-        assert "gram" not in keys, f"gram strings shuffled: {keys}"
 
 
 def test_bgp_constant_filters_push_to_scan(spark, tmp_path):
@@ -520,44 +440,6 @@ def test_retraction_read_broadcasts_delete_set(spark, tmp_path):
         "retraction read shuffled the data stream"
 
 
-def test_semantic_dedup_pairs_joins_on_cell_only(spark):
-    """SemDeDup's scale contract: the within-cluster self-join exchanges on
-    the CELL key only — at k sized to executor memory no partition ever
-    holds more than one cluster's quadratic block. The argmin assignment
-    is a projection (no exchange of its own beyond the join's)."""
-    from rdf_tabular_spark.operators.dedup import semantic_dedup_pairs
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    p = plan_of(semantic_dedup_pairs(emb, k=8, threshold=0.4, dim=64))
-    # the self-join must key on cell — as a shuffled hash join at scale, or
-    # (at tiny SF, where stats let one side broadcast) a broadcast join
-    # whose keys are still the cell
-    key_lines = re.findall(r"(?:Left|Right) keys \[\d+\]: \[([^\]]*)\]", p)
-    assert key_lines, "expected a keyed self-join"
-    for keys in key_lines:
-        assert keys.startswith("cell#"), keys
-    # no exchange may ever carry the raw vectors
-    for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", p):
-        assert "cell" in keys and "embedding" not in keys, keys
-
-
-def test_lm_score_broadcasts_model_tables(spark):
-    """The fitted LM is broadcast (caps bound it regardless of corpus
-    size); the only shuffle on the scoring path is the doc-key
-    aggregation — a shuffle join on the gram key would move the whole
-    corpus' bigrams."""
-    p = plan_of(Q.queries()["text_perplexity"](spark, SF))
-    assert p.count("BroadcastHashJoin") >= 2, p[:800]
-
-
-def test_importance_sample_take_ordered(spark):
-    """DSIR top-N selection must plan as TakeOrderedAndProject
-    (per-partition heaps), never a global Sort; the two feature
-    distributions broadcast."""
-    p = plan_of(Q.queries()["sample_importance"](spark, SF))
-    assert "TakeOrderedAndProject" in p, p[:800]
-    assert p.count("BroadcastHashJoin") >= 2
-
-
 def test_bloom_probe_broadcasts_bit_sets(spark):
     """Bloom decontamination probes via broadcast LEFT SEMI joins on the
     hashed positions — the bit sets are bounded by filter geometry."""
@@ -643,21 +525,11 @@ def test_comention_pair_join_keys_on_doc(spark):
         assert "text" not in keys, keys
 
 
-def test_edit_verified_pairs_scans_candidates_only(spark):
-    """The Levenshtein verify tier must join texts by id equality onto the
-    banded candidate set — never a cartesian / all-pairs text comparison."""
-    from rdf_tabular_spark.operators.dedup import edit_verified_pairs
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(edit_verified_pairs(docs, min_sim=0.5))
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    assert "levenshtein" in p.lower()
-
-
 def test_latest_snapshot_single_shuffle_partial_maxby(spark):
     """Recrawl dedup must be ONE keyed shuffle with map-side partial
     max_by — a row_number window (shuffle + sort, no combine) regresses
     at crawl scale."""
-    from rdf_tabular_spark.operators.dedup import latest_snapshot
+    from rdf_tabular_spark.operators.crawl import latest_snapshot
     from rdf_tabular_spark.sources.pages import pages_from_documents
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     p = plan_of(latest_snapshot(pages_from_documents(docs)))
@@ -723,16 +595,6 @@ def test_classifier_margin_is_one_narrow_stage(spark):
     assert cols == {"doc_id", "text"}
 
 
-def test_ppl_buckets_single_window_exchange_on_lang(spark):
-    """After the LM-scoring aggregation, the CCNet cut adds exactly one
-    hash Exchange keyed on lang for the NTILE window (plus the score
-    groupBy's own exchange upstream) — no global single-partition sort."""
-    p = plan_of(Q.queries()["corpus_ppl_buckets"](spark, SF))
-    assert "SinglePartition" not in p, "NTILE must not collapse to one task"
-    assert re.search(r"hashpartitioning\(lang", p), \
-        "per-language window exchange missing"
-
-
 def test_join_supplier_profit_broadcasts_all_dims(spark):
     """Q9 shape: three dim sides (part filtered, supplier, nation) all
     broadcast; the p_type prefix filter reaches the part scan; the only
@@ -745,37 +607,6 @@ def test_join_supplier_profit_broadcasts_all_dims(spark):
         "only the final groupBy may shuffle"
 
 
-def test_ann_cosine_batch_topk_one_scan_one_shuffle(spark):
-    """Batch ANN: the query frame broadcasts (one corpus scan scores every
-    query) and the only hash Exchange is the per-query window key — scored
-    thin rows, never embedding arrays."""
-    import re
-    p = plan_of(Q.queries()["ann_cosine_batch_topk"](spark, SF))
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p, \
-        "query frame must broadcast"
-    assert len(re.findall(r"\(\d+\) Exchange\b", p)) == 1, \
-        "batch ANN must shuffle once (the per-query window key)"
-    assert re.search(r"hashpartitioning\(query_id", p)
-    for keys in re.findall(r"hashpartitioning\(([^)]*)\)", p):
-        assert "embedding" not in keys, f"embedding arrays shuffled: {keys}"
-    # map-side top-k: WindowGroupLimit prunes to k rows per query per
-    # partition BEFORE the Exchange, so the shuffle carries ~k·|Q| rows
-    # per task, not the scored corpus
-    assert "WindowGroupLimit" in p
-
-
-def test_incremental_dedup_thin_shuffles(spark):
-    """Incremental batch-vs-store dedup: every Exchange carries band/id
-    columns only — document text never crosses the wire, and the anti-join
-    id projections broadcast."""
-    import re
-    p = plan_of(Q.queries()["dedup_incremental_keep"](spark, SF))
-    for keys in re.findall(r"hashpartitioning\(([^)]*)\)", p):
-        assert "text" not in keys, f"document text shuffled: {keys}"
-    assert "BroadcastHashJoin" in p, \
-        "survivor anti-joins must broadcast the thin id sets"
-
-
 def test_characteristic_sets_narrow_shuffles(spark):
     """Characteristic sets: the object column must never shuffle — both
     exchanges carry only subj / predicate-set keys."""
@@ -784,18 +615,6 @@ def test_characteristic_sets_narrow_shuffles(spark):
         assert "obj" not in keys, f"object column shuffled: {keys}"
     assert p.count("HashAggregate") >= 4, \
         "both aggs must have map-side partials"
-
-
-def test_er_blocked_joins_vocab_not_rows(spark):
-    """Blocked ER: the Levenshtein join inputs are the distinct-name aggs
-    (vocabulary-sized), so only brand/name/cnt columns move — never the
-    other part attributes — and the scan reads just the two key columns."""
-    p = plan_of(Q.queries()["er_blocked_part_names"](spark, SF))
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"p_brand", "p_name"}, f"scan reads too much: {cols}"
-    assert p.count("HashAggregate") >= 2, \
-        "name-vocabulary agg must precede the pair join"
 
 
 def test_skipgram_single_keyed_selfjoin(spark):

@@ -97,39 +97,41 @@ def test_entry_smoke(spark):
 
 
 # The driver's correctness artifact sweeps exactly the FIRST 50 registry
-# entries in order. ROTATION POLICY (r4 verdict, made mechanism in r5):
-# queries.py composes _QUERIES from the explicit _DRIVER_WINDOW list —
-# ~10 long-green sentinels + the newest / never-driver-swept tiers — so
-# every tier earns a green CORRECTNESS row within a round of landing.
-# This pin asserts the ROUND-5 composition: rotating next round means
-# editing queries._DRIVER_WINDOW and this list together, consciously.
+# entries in order. queries.py composes _QUERIES from the explicit
+# _DRIVER_WINDOW list — the two flagships, the CSVW operator families, the
+# KG canonicalization / sameAs / inference / SPARQL tiers and long-green
+# sentinels. This pin asserts that composition: rotating means editing
+# queries._DRIVER_WINDOW and this list together, consciously.
 _SWEEP_WINDOW = [
+    # flagships
+    "csvw_triples_nation", "kg_pages_triples",
+    # CSVW operator families
+    "csvw_coerce_numeric", "csvw_date_format", "csvw_null_default_trim",
+    "csvw_json_rows", "csvw_list_split", "csvw_boolean_format",
+    "csvw_uri_template",
+    # canonicalization and owl:sameAs
+    "kg_canonicalized_triples", "kg_canonical_dupes",
+    "kg_sameas_mapping", "kg_sameas_canonical",
+    # inference
+    "kg_rdfs_derived", "kg_owl_derived", "kg_construct_derived",
+    # SPARQL read tier
+    "kg_sparql_select", "kg_sparql_agg", "kg_sparql_funcs",
+    "kg_bgp_star", "kg_bgp_path", "kg_bgp_optional", "kg_bgp_filter",
+    "kg_bgp_union",
     # sentinels (driver-green in earlier rounds)
-    "csvw_triples_nation", "kg_pages_triples", "dedup_exact",
     "agg_pricing_summary", "fk_orders_customer", "kg_microdata_triples",
-    "ann_cosine_topk",
-    # round-5 additions
-    "multimodal_decode", "multimodal_decode_audio",
-    "ann_recall_ivf", "ann_recall_pq",
-    # round-4 tiers never swept before round 5
+    # round-4 tiers first swept in round 5
     "webtables_type_profile", "webtables_typed_triples",
     "webtables_header_triples", "webtables_subject_column",
     "webtables_entity_triples", "webtables_schema_freq",
     "webtables_pred_induction",
     "kg_shacl_report", "kg_shacl_summary",
-    "dedup_incremental_pairs", "dedup_incremental_keep",
-    "dedup_winnow_fps", "dedup_winnow_pairs",
-    "dedup_semantic_pairs", "dedup_semantic_keep",
     "kg_fused_triples", "kg_reified_triples", "kg_hearst_pairs",
     "kg_rdfa_triples",
     "graph_communities", "graph_kcore", "graph_hits", "graph_bfs_depths",
     "graph_sage_features",
     "crawl_frontier", "crawl_recrawl_schedule", "crawl_sitemap_frontier",
-    "text_bm25", "text_c4_lines", "text_tfidf_terms", "text_readability",
-    "ann_int8_topk", "ann_pq_rerank_topk", "ann_recall_lsh",
-    "ann_cosine_batch_topk",
-    "events_sessionize", "sample_mixture", "er_blocked_part_names",
-    "kg_void_description",
+    "events_sessionize", "kg_void_description",
 ]
 
 

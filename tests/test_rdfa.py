@@ -130,6 +130,34 @@ def test_nested_markup_inside_property_element_keeps_tail_text():
     assert dict(t.microdata[0].props) == {"name": "cut off"}
 
 
+def test_omitted_end_tags_do_not_extend_a_microdata_capture():
+    """A <p>/<li>/<td>/<tr>/<option> whose end tag crawl HTML omits
+    neither raises nor lowers an open capture's depth: the capture ends
+    with its own element instead of swallowing the text after it. Such an
+    element that opens a capture is ended by its end tag or by the start
+    of a sibling of the same tag."""
+    m = extract_page(
+        '<div itemscope itemtype="http://s.org/T">'
+        '<span itemprop="name">Doc <p>para</span> after'
+        '<p itemprop="desc">x <b>y</b></p> gap'
+        '<ul><li itemprop="kw">one<li itemprop="kw">two</ul> tail</div>')
+    assert m.microdata[0].props == [("name", "Doc para"),
+                                    ("desc", "x y"),
+                                    ("kw", "one"), ("kw", "two")]
+
+
+def test_omitted_end_tags_do_not_extend_an_rdfa_capture():
+    """The RDFa property capture follows the same rule as microdata."""
+    r = extract_page(
+        '<div vocab="http://s.org/" typeof="T">'
+        '<span property="name">Doc <table><tr><td>a<td>b</table></span>'
+        ' after<select><option property="opt">x<option>y</select>'
+        '<table><tr><td property="cell">v</td><td>w</table></div>')
+    assert r.rdfa[0].props == [("http://s.org/name", "Doc ab"),
+                               ("http://s.org/opt", "x"),
+                               ("http://s.org/cell", "v")]
+
+
 # --- entity disambiguation (stage 2c) ---------------------------------------
 
 def test_disambiguate_mentions_context_argmax(spark):

@@ -71,91 +71,6 @@ def test_stream_rate_per_host(spark, tmp_path):
         [("pages.example.org", 60 * 4)]
 
 
-def test_stream_dedup_exact_cross_batch(spark, tmp_path):
-    """applyInPandasWithState custom stateful operator: the first page per
-    distinct text is emitted; duplicates within a batch, in later batches,
-    and across a checkpointed restart are all dropped."""
-    import pandas as pd
-    from rdf_tabular_spark.streaming.ingest import stream_dedup_exact
-    import datetime
-
-    tmp = str(tmp_path)
-    in_dir = os.path.join(tmp, "pages_in")
-    out_dir = os.path.join(tmp, "dedup_out")
-    ckpt = os.path.join(tmp, "ckpt")
-    ts = datetime.datetime(2024, 1, 1)
-
-    def page(url, text):
-        return (url, ts, text.encode(), text, "en")
-
-    cols = ["url", "warc_ts", "html", "text", "lang"]
-    from rdf_tabular_spark.sources.pages import PAGES_SCHEMA
-    # batch 1: A twice (intra-batch dup), B once
-    spark.createDataFrame(
-        [page("http://h/1", "textA"), page("http://h/2", "textA"),
-         page("http://h/3", "textB")], PAGES_SCHEMA) \
-        .write.mode("append").parquet(in_dir)
-    q = stream_dedup_exact(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    out1 = {r["url"]: r["text"] for r in spark.read.parquet(out_dir).collect()}
-    assert out1 == {"http://h/1": "textA", "http://h/3": "textB"}
-
-    # batch 2 after restart: A again (cross-batch dup, must be dropped by
-    # checkpointed state) + new C
-    spark.createDataFrame(
-        [page("http://h/4", "textA"), page("http://h/5", "textC")],
-        PAGES_SCHEMA).write.mode("append").parquet(in_dir)
-    q = stream_dedup_exact(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    out2 = {r["url"]: r["text"] for r in spark.read.parquet(out_dir).collect()}
-    assert out2 == {"http://h/1": "textA", "http://h/3": "textB",
-                    "http://h/5": "textC"}
-
-
-def test_stream_curate_pages(spark, tmp_path):
-    """Streaming curation: stateless PII scrub + quality decision per
-    micro-batch, exactly-once across a restart, and batch-path parity of
-    the decision columns."""
-    from pyspark.sql import functions as F
-
-    from rdf_tabular_spark.streaming.ingest import stream_curate_pages
-
-    tmp = str(tmp_path)
-    in_dir = os.path.join(tmp, "pages_in")
-    out_dir = os.path.join(tmp, "curated_out")
-    ckpt = os.path.join(tmp, "ckpt_cur")
-
-    _write_batch(spark, tmp, "b1", 0, 40)
-    q = stream_curate_pages(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    out1 = spark.read.parquet(out_dir)
-    assert out1.count() == 40
-    assert {"text", "n_emails", "n_ips", "n_phones", "reason",
-            "keep"} <= set(out1.columns)
-
-    _write_batch(spark, tmp, "b2", 40, 70)
-    q = stream_curate_pages(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    out = spark.read.parquet(out_dir)
-    assert out.count() == 70
-    assert out.select("url").distinct().count() == 70
-
-    # decision parity with the batch operator over the SAME pages table
-    # (the streaming input is extracted page text, not raw doc text; page
-    # texts are all distinct so the batch duplicate rule never fires and
-    # the reason sets are comparable)
-    from rdf_tabular_spark.operators.curate import curation_report
-    docs = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .filter("doc_id < 70"))
-    batch = {r["url"]: r["reason"]
-             for r in curation_report(pages_from_documents(docs),
-                                      key="url").collect()}
-    stream = {r["url"]: r["reason"] for r in out.collect()}
-    assert all(v != "duplicate" for v in batch.values())
-    assert stream == batch
-    assert "lang_mismatch" in set(batch.values())  # rules really fire
-
-
 def test_stream_ntriples_to_store_exactly_once(spark, tmp_path):
     """Streaming RDF ingest: nt files -> graph store with manifest-
     idempotent epoch commits; a re-run with the same checkpoint ingests
@@ -232,58 +147,6 @@ def test_stream_pages_to_store_end_to_end(spark, tmp_path):
     with open(manifests[0]) as f:
         m = json.load(f)
     assert m["lineage"]["source"] == "stream-pages"
-
-
-def test_stream_minhash_pairs_cross_batch(spark, tmp_path):
-    """Stateful streaming near-dedup: near-identical pages pair even when
-    they arrive in different micro-batches across a checkpointed restart;
-    dissimilar pages never pair."""
-    import datetime
-
-    from rdf_tabular_spark.sources.pages import PAGES_SCHEMA
-    from rdf_tabular_spark.streaming.ingest import stream_minhash_pairs
-
-    tmp = str(tmp_path)
-    in_dir = os.path.join(tmp, "pages_in")
-    out_dir = os.path.join(tmp, "pairs_out")
-    ckpt = os.path.join(tmp, "ckpt")
-    ts = datetime.datetime(2024, 1, 1)
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "cat sleeps on the warm mat near the door")
-    near = base.replace("warm", "cold")
-    other = ("completely unrelated text about spark shuffles and "
-             "partition pruning in distributed query engines at scale")
-
-    def page(url, text):
-        return (url, ts, text.encode(), text, "en")
-
-    # batch 1: base + an unrelated doc — no pairs yet
-    spark.createDataFrame(
-        [page("http://h/a", base), page("http://h/x", other)],
-        PAGES_SCHEMA).write.mode("append").parquet(in_dir)
-    q = stream_minhash_pairs(spark, in_dir, out_dir, ckpt, threshold=0.5)
-    q.awaitTermination(120)
-    out1 = spark.read.parquet(out_dir).collect()
-    assert out1 == []
-
-    # batch 2 after restart: the near-dup arrives — the cross-batch pair
-    # must emit from checkpointed bucket state
-    spark.createDataFrame(
-        [page("http://h/b", near)], PAGES_SCHEMA) \
-        .write.mode("append").parquet(in_dir)
-    q = stream_minhash_pairs(spark, in_dir, out_dir, ckpt, threshold=0.5)
-    q.awaitTermination(120)
-    pairs = {(r["a"], r["b"]) for r in spark.read.parquet(out_dir).collect()}
-    assert pairs == {("http://h/a", "http://h/b")}
-    sims = [r["est_sim"] for r in spark.read.parquet(out_dir).collect()]
-    assert all(s >= 0.5 for s in sims)
-
-    # replaying the same batch (idempotent restart, no new files) adds nothing
-    q = stream_minhash_pairs(spark, in_dir, out_dir, ckpt, threshold=0.5)
-    q.awaitTermination(120)
-    again = {(r["a"], r["b"]) for r in spark.read.parquet(out_dir).collect()}
-    assert again == pairs
 
 
 def test_stream_sessionize_event_time_timeout(spark, tmp_path):

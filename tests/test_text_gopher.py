@@ -70,31 +70,6 @@ def test_repeated_bigram_fails(spark):
     assert r["passes"] is False
 
 
-def test_remove_repeated_lines_strips_boilerplate(spark):
-    from rdf_tabular_spark.operators.dedup import remove_repeated_lines
-    docs = spark.createDataFrame(
-        [(i, f"unique body {i}\nshared footer line") for i in range(4)]
-        + [(9, "only unique content here")],
-        "doc_id long, text string")
-    out = {r["doc_id"]: r for r in
-           remove_repeated_lines(docs, min_docs=3).collect()}
-    for i in range(4):
-        assert out[i]["clean_text"] == f"unique body {i}"
-        assert out[i]["n_removed"] == 1 and out[i]["n_kept"] == 1
-    assert out[9]["clean_text"] == "only unique content here"
-    assert out[9]["n_removed"] == 0
-
-
-def test_remove_repeated_lines_below_threshold_kept(spark):
-    from rdf_tabular_spark.operators.dedup import remove_repeated_lines
-    docs = spark.createDataFrame(
-        [(1, "a\ntwice"), (2, "b\ntwice"), (3, "c")],
-        "doc_id long, text string")
-    out = {r["doc_id"]: r["clean_text"] for r in
-           remove_repeated_lines(docs, min_docs=3).collect()}
-    assert out[1] == "a\ntwice" and out[2] == "b\ntwice"  # only 2 docs
-
-
 def test_avg_token_len(spark):
     from pyspark.sql import functions as F
     from rdf_tabular_spark.operators.text import avg_token_len

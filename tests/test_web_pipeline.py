@@ -106,13 +106,18 @@ def test_canonicalization_merges_near_dups(spark):
     """Duplicate-content pages (dup_fraction) → same canonical subjects."""
     pages = synth_pages(spark, 100, seed=7, dup_fraction=0.5)
     triples = pages_to_triples(pages).cache()
-    rewritten, mapping = canonicalize_subjects(triples, threshold=0.95)
+    releases = []
+    rewritten, mapping = canonicalize_subjects(triples, threshold=0.95,
+                                               releases=releases)
     n_merged = mapping.count()
     assert n_merged > 0, "expected near-duplicate subjects to merge"
     before = triples.filter(~F.col("obj_is_iri")).select("subj").distinct().count()
     after = rewritten.filter(~F.col("obj_is_iri")).select("subj").distinct().count()
     assert after < before
-    triples.unpersist()
+    # release the mapping's checkpoint too: left behind, Spark's cleaner
+    # frees it during a later test that counts the persisted RDDs
+    for df in [triples, *releases]:
+        df.unpersist()
 
 
 def test_materialize_and_resume(spark, pages, tmp_path):
@@ -525,22 +530,6 @@ def test_comention_pmi(spark):
         ("e:spark", "https://kg.example.org/ontology#relatedTo", "e:stream")}
 
 
-def test_edit_verified_pairs(spark):
-    """Banded SimHash candidates verified by normalized Levenshtein: the
-    near-identical pair survives, the dissimilar candidate is filtered."""
-    from rdf_tabular_spark.operators.dedup import edit_verified_pairs
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    docs = spark.createDataFrame(
-        [(1, base), (2, base.replace("lazy", "hazy")),
-         (3, "completely different words entirely"), (4, base)],
-        "doc_id long, text string")
-    rows = {(r["a"], r["b"]): r["edit_sim"]
-            for r in edit_verified_pairs(docs, min_sim=0.9).collect()}
-    assert rows[(1, 4)] == 1.0
-    assert 0.9 <= rows[(1, 2)] < 1.0
-    assert all(3 not in pair for pair in rows)
-
-
 def test_pages_to_links_and_host_graph(spark):
     """Link extraction: hrefs collected in the one shared parse, relative
     targets resolved against the page URL, host aggregation counts pairs."""
@@ -608,7 +597,7 @@ def test_latest_snapshot(spark):
     deterministically on md5(html)."""
     import datetime
 
-    from rdf_tabular_spark.operators.dedup import latest_snapshot
+    from rdf_tabular_spark.operators.crawl import latest_snapshot
     from rdf_tabular_spark.sources.pages import PAGES_SCHEMA
     t0 = datetime.datetime(2024, 1, 1)
     t1 = datetime.datetime(2024, 2, 1)
@@ -652,7 +641,7 @@ def test_latest_snapshot_property(spark):
     import datetime
     import hashlib
 
-    from rdf_tabular_spark.operators.dedup import latest_snapshot
+    from rdf_tabular_spark.operators.crawl import latest_snapshot
     from rdf_tabular_spark.sources.pages import PAGES_SCHEMA
     base = datetime.datetime(2024, 1, 1)
     rows = []

@@ -120,7 +120,7 @@ def main():
 
     not_run = []
     for src, ttl, minimal in GOLDENS:
-        name = "reference:" + ttl
+        name = "reference:" + src
         if not all(os.path.exists(os.path.join(REF_DATA, f))
                    for f in (src, ttl)):
             not_run.append(name)

@@ -182,7 +182,6 @@ class TripleKernel:
         self.cols = [_CompiledColumn(c) for c in mapping.columns]
         self.ctx = Context(base=mapping.url)
         self.row_url_prefix = mapping.url + "#row="
-        self._thash_cache: dict[str, str] = {}
         self._cur_thash = mapping.thash
         # column index → expanded row-invariant propertyUrl under self.ctx;
         # cleared when ``url=`` rebinds the base, so it holds one entry per
@@ -290,10 +289,7 @@ class TripleKernel:
             self.ctx = Context(base=url)
             self._pred_cache.clear()
             self.row_url_prefix = url + "#row="
-            thash = self._thash_cache.get(url)
-            if thash is None:
-                thash = self._thash_cache[url] = table_hash(url)
-            self._cur_thash = thash
+            self._cur_thash = table_hash(url)
         elif url is None:
             self._cur_thash = m.thash
         triples: list[tuple] = []

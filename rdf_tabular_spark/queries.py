@@ -17,9 +17,6 @@ Coverage map (SURVEY.md §2):
              pushdown, broadcast joins, partial aggregation).
   kg_*     — the web pipeline end-to-end (HTML → virtual rows → CSVW kernel
              → triples → entity links → canonicalization).
-  text_/corpus_/sample_ — the text-quality and curation operators
-             (operators/text.py, operators/curate.py), the part of the
-             training-data tier not yet removed (ROADMAP item E).
 """
 
 from __future__ import annotations
@@ -29,9 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators import curate as curate_ops
 from .operators.void import void_sql as _void_sql
-from .operators import text as T
 
 MENTIONS_PRED = "https://kg.example.org/ontology#mentions"
 SOURCE_ENT_PREFIX = "https://kg.example.org/entity/source/"
@@ -46,13 +41,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 TOKS_SQL = r"string_split_regex(trim(text), '\s+')"
-
-
-def _grams_sql(t: str, n: int = 3) -> str:
-    cat = " || ' ' || ".join(f"{t}[i+{j}]" if j else f"{t}[i]" for j in range(n))
-    return (f"case when len({t}) >= {n} then "
-            f"list_distinct(list_transform(range(1, len({t}) - {n - 2}), i -> {cat})) "
-            f"else [] end")
 
 
 def _minhash_scale_sig_sql(sh: str, num_perm: int = 16, seed: int = 1) -> str:
@@ -72,25 +60,6 @@ def _minhash_scale_sig_sql(sh: str, num_perm: int = 16, seed: int = 1) -> str:
 
 # token hashing of the scale tier: first 8 bytes of md5, big-endian
 _TOKHASH_SQL = "('0x' || substring(md5(t), 1, 16))::ubigint"
-
-
-def _langid_case_sql(toks: str) -> str:
-    score = {lang: f"len(list_filter({toks}, x -> x in "
-                   f"({', '.join(repr(m) for m in markers)})))"
-             for lang, markers in T.LANG_MARKERS.items()}
-    whens = []
-    for idx, lang in enumerate(T.LANG_ORDER):
-        s = score[lang]
-        conds = [f"{s} > 0"]
-        conds += [f"{s} > {score[o]}" for o in T.LANG_ORDER[:idx]]
-        conds += [f"{s} >= {score[o]}" for o in T.LANG_ORDER[idx + 1:]]
-        whens.append(f"when {' and '.join(conds)} then '{lang}'")
-    return "case " + " ".join(whens) + " else 'und' end"
-
-
-STOPS_SQL = ", ".join(repr(s) for s in T.ENGLISH_STOPWORDS)
-PUNCT_CLASS = "[^.,;:!?''\"()\\[\\]-]"  # SQL-quoted form of text.punct class
-BPE_SQL = r"'[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'"
 
 
 DOC_URL_SQL = "'http://pages.example.org/doc/' || doc_id"
@@ -562,207 +531,7 @@ order by key
 """
 
 
-# --- text analysis ----------------------------------------------------------
-
-def _text_quality(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    text = F.col("text")
-    return docs.select(
-        "doc_id",
-        T.token_count(text).cast("long").alias("n_tokens"),
-        T.bpe_token_count(text).cast("long").alias("n_bpe"),
-        F.round(T.stopword_ratio(text), 4).alias("stop_ratio"),
-        T.quality_score(text).alias("quality"))
-
-
-_TEXT_QUALITY_SQL = f"""
-select doc_id,
-       len({TOKS_SQL}) as n_tokens,
-       len(regexp_extract_all(text, {BPE_SQL})) as n_bpe,
-       round(len(list_filter({TOKS_SQL}, x -> x in ({STOPS_SQL})))
-             / len({TOKS_SQL}), 4) as stop_ratio,
-       round((least(len({TOKS_SQL})::double / 20.0, 1.0)
-              + least(len(list_filter({TOKS_SQL}, x -> x in ({STOPS_SQL})))
-                      / len({TOKS_SQL}) * 4, 1.0)
-              + greatest(1.0 - (case when length(text) = 0 then 0.0
-                  else length(regexp_replace(text, '{PUNCT_CLASS}', '', 'g'))
-                       / length(text) end) * 5, 0.0)) / 3, 4) as quality
-from documents
-"""
-
-
-def _text_c4_lines(spark, sf_dir):
-    """C4 line-level cleaning: the fixture corpus is single-line without
-    terminal punctuation, so deterministic extra lines are appended first —
-    one keepable sentence per doc, one javascript line, one too-short line,
-    one brace line — and the check proves exactly the sentence survives."""
-    from .operators.curate import c4_clean_lines
-    docs = _t(spark, sf_dir, "documents")
-    aug = docs.withColumn(
-        "text",
-        F.concat(F.col("text"),
-                 F.lit("\nA kept sentence about document "),
-                 F.col("doc_id").cast("string"), F.lit("."),
-                 F.lit("\nthis javascript line is dropped."),
-                 F.lit("\nShort one."),
-                 F.lit("\nvar x = {a: 1}.")))
-    return c4_clean_lines(aug, min_words=3)
-
-
-_TEXT_C4_LINES_SQL = """
-with d as (
-  select doc_id,
-         string_split(text || chr(10) || 'A kept sentence about document '
-                      || doc_id || '.'
-                      || chr(10) || 'this javascript line is dropped.'
-                      || chr(10) || 'Short one.'
-                      || chr(10) || 'var x = {a: 1}.', chr(10)) as ls
-  from documents),
-k as (
-  select doc_id,
-         list_filter(ls, l ->
-           regexp_matches(l, '[.!?"]$')
-           and len(string_split_regex(trim(l), '\\s+')) >= 3
-           and not contains(lower(l), 'javascript')
-           and not contains(lower(l), 'lorem ipsum')
-           and not contains(l, '{')) as kept,
-         len(ls) as n_lines
-  from d)
-select doc_id, array_to_string(kept, chr(10)) as clean_text,
-       len(kept)::bigint as n_kept,
-       (n_lines - len(kept))::bigint as n_removed
-from k
-"""
-
-
-def _corpus_stats(spark, sf_dir):
-    """Per-language corpus telemetry (the dashboard numbers every ingestion
-    run reports): doc counts, char/token totals, size extremes. Integer
-    aggregates only — exact in both engines; one map-side-combined groupBy
-    on a low-cardinality key."""
-    docs = _t(spark, sf_dir, "documents")
-    # Deterministic row order + explicit int64 on every aggregate in BOTH
-    # engines (DuckDB sum(bigint) widens to HUGEINT otherwise) so the
-    # driver's value hash can never flake on groupBy output ordering or
-    # integer width.
-    return (docs.groupBy("lang")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.sum(F.col("n_chars").cast("long")).cast("long")
-                  .alias("total_chars"),
-                 F.sum(T.token_count(F.col("text")).cast("long"))
-                  .cast("long").alias("total_tokens"),
-                 F.min(F.col("n_chars").cast("long")).cast("long")
-                  .alias("min_chars"),
-                 F.max(F.col("n_chars").cast("long")).cast("long")
-                  .alias("max_chars"))
-            .orderBy("lang"))
-
-
-_CORPUS_STATS_SQL = f"""
-select lang, cast(count(*) as bigint) as n_docs,
-       cast(sum(n_chars::bigint) as bigint) as total_chars,
-       cast(sum(len({TOKS_SQL})::bigint) as bigint) as total_tokens,
-       cast(min(n_chars::bigint) as bigint) as min_chars,
-       cast(max(n_chars::bigint) as bigint) as max_chars
-from documents group by lang
-order by lang
-"""
-
-
-def _text_gopher_quality(spark, sf_dir):
-    """Gopher-rule quality metrics (Rae et al. 2021 §A1.1 heuristics:
-    word-count band, mean word length, symbol/bullet/ellipsis ratios,
-    alphabetic-word ratio, stop-word presence) + the composite pass flag —
-    all Column exprs in one codegen stage (operators/text.gopher_metrics)."""
-    docs = _t(spark, sf_dir, "documents")
-    m = T.gopher_metrics(F.col("text"))
-    return docs.select(
-        "doc_id",
-        *[m[k].alias(k) for k in
-          ("n_words", "mean_word_len", "symbol_ratio", "bullet_line_ratio",
-           "ellipsis_line_ratio", "alpha_word_ratio", "stop_hits",
-           "dup_line_ratio", "top_bigram_ratio")],
-        T.gopher_pass(F.col("text")).alias("passes"))
-
-
-_TEXT_GOPHER_QUALITY_SQL = f"""
-with g as (
-  select doc_id,
-         {TOKS_SQL} as toks,
-         string_split(text, chr(10)) as lines
-  from documents),
-g2 as (
-  select *,
-         case when len(toks) >= 2 then
-           list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-         else [] end as bg
-  from g),
-m as (
-  select doc_id,
-         len(toks)::bigint as n_words,
-         round(list_sum(list_transform(toks, x -> length(x)))::double
-               / nullif(len(toks), 0), 4) as mean_word_len,
-         round(len(list_filter(toks,
-                   x -> regexp_matches(x, '#|\\.\\.\\.|…')))::double
-               / nullif(len(toks), 0), 4) as symbol_ratio,
-         round(len(list_filter(lines,
-                   l -> regexp_matches(l, '^\\s*[-*•]')))::double
-               / len(lines), 4) as bullet_line_ratio,
-         round(len(list_filter(lines,
-                   l -> regexp_matches(l, '(\\.\\.\\.|…)\\s*$')))::double
-               / len(lines), 4) as ellipsis_line_ratio,
-         round(len(list_filter(toks,
-                   x -> regexp_matches(x, '[A-Za-z]')))::double
-               / nullif(len(toks), 0), 4) as alpha_word_ratio,
-         len(list_filter(toks, x -> x in ({STOPS_SQL})))::bigint as stop_hits,
-         round((len(lines) - len(list_distinct(lines)))::double
-               / len(lines), 4) as dup_line_ratio
-  from g2),
-tb as (
-  select doc_id, max(c) as top from (
-    select doc_id, b, count(*) as c
-    from (select doc_id, unnest(bg) as b from g2)
-    group by doc_id, b)
-  group by doc_id),
-m2 as (
-  select m.*,
-         round(coalesce(tb.top, 0)::double
-               / greatest((select len(bg) from g2 where g2.doc_id = m.doc_id),
-                          1), 4) as top_bigram_ratio
-  from m left join tb on m.doc_id = tb.doc_id)
-select doc_id, n_words, mean_word_len, symbol_ratio, bullet_line_ratio,
-       ellipsis_line_ratio, alpha_word_ratio, stop_hits,
-       dup_line_ratio, top_bigram_ratio,
-       (n_words >= 5 and n_words <= 100000
-        and mean_word_len >= 2.0 and mean_word_len <= 12.0
-        and symbol_ratio <= 0.1 and bullet_line_ratio <= 0.9
-        and ellipsis_line_ratio <= 0.3 and alpha_word_ratio >= 0.8
-        and stop_hits >= 1 and dup_line_ratio <= 0.3
-        and top_bigram_ratio <= 0.18) as passes
-from m2
-"""
-
-
-def _text_langid(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", T.lang_id(F.col("text")).alias("pred_lang"))
-
-
-_TEXT_LANGID_SQL = f"""
-select doc_id, {_langid_case_sql(TOKS_SQL)} as pred_lang from documents
-"""
-
-
-def _text_fingerprint(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", T.fingerprint(F.col("text")).alias("fp"))
-
-
-_TEXT_FINGERPRINT_SQL = f"""
-select doc_id,
-       md5(array_to_string(list_sort(list_distinct({TOKS_SQL})), ' ')) as fp
-from documents
-"""
+# --- URL normalization ------------------------------------------------------
 
 
 def _text_url_normalize(spark, sf_dir):
@@ -859,82 +628,6 @@ bands as (
   from sig cross join (values (0), (1), (2), (3)) as b(b))
 select distinct l.id as a, r.id as b
 from bands l join bands r on l.band = r.band and l.bk = r.bk and l.id < r.id
-"""
-
-
-def _dedup_minhash_verified_pairs(spark, sf_dir):
-    """The complete dedup cascade as one operator: scale-tier LSH candidate
-    pairs (bucketed band join) verified by EXACT word-3-gram Jaccard ≥ 0.2 —
-    the quadratic verifier runs only on the candidate set, never the corpus
-    (the composition SURVEY §2.9 prescribes)."""
-    from .operators import minhash as MH
-    from .operators.text import word_ngrams
-    docs = _t(spark, sf_dir, "documents")
-    pairs = MH.lsh_candidate_pairs(_scale_sigs(spark, sf_dir), num_bands=4)
-    grams = docs.select(F.col("doc_id").cast("string").alias("id"),
-                        word_ngrams(F.col("text"), 3).alias("g"))
-    jac = (F.size(F.array_intersect(F.col("ga"), F.col("gb"))).cast("double")
-           / F.size(F.array_union(F.col("ga"), F.col("gb"))))
-    return (pairs
-            .join(grams.withColumnsRenamed({"id": "a", "g": "ga"}), on="a")
-            .join(grams.withColumnsRenamed({"id": "b", "g": "gb"}), on="b")
-            .select("a", "b", F.round(jac, 4).alias("jac"))
-            .filter(F.col("jac") >= 0.2))
-
-
-_VERIFIED_PAIRS_CTES = _SCALE_SIG_CTE + f""",
-bands as (
-  select id, b.b as band,
-         array_to_string(list_transform(list_slice(sig, 4*b.b + 1, 4*b.b + 4),
-                                        x -> x::varchar), ',') as bk
-  from sig cross join (values (0), (1), (2), (3)) as b(b)),
-cand as (
-  select distinct l.id as a, r.id as b
-  from bands l join bands r on l.band = r.band and l.bk = r.bk and l.id < r.id),
-grams as (select doc_id::varchar as id, {_grams_sql(TOKS_SQL)} as g from documents),
-vpairs as (
-  select a, b,
-         round(len(list_intersect(ga.g, gb.g))::double /
-               len(list_distinct(list_concat(ga.g, gb.g))), 4) as jac
-  from cand join grams ga on cand.a = ga.id join grams gb on cand.b = gb.id
-  where round(len(list_intersect(ga.g, gb.g))::double /
-              len(list_distinct(list_concat(ga.g, gb.g))), 4) >= 0.2)
-"""
-
-_DEDUP_MINHASH_VERIFIED_PAIRS_SQL = _VERIFIED_PAIRS_CTES + """
-select a, b, jac from vpairs
-"""
-
-
-def _dedup_corpus_near(spark, sf_dir):
-    """The deliverable of a training-data dedup pipeline: the corpus ITSELF
-    with verified near-dup clusters collapsed — verified pairs (the full
-    cascade above) → connected components → keep each cluster's min-doc_id
-    representative, drop the rest. At 100 TB the drop set is a sliver of
-    the corpus (only clustered non-representatives), so it broadcasts into
-    one anti-join against the full stream — the row payload never
-    shuffles. Oracle: the same pair CTEs + a recursive min-label closure."""
-    from .operators.components import canonical_mapping
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _dedup_minhash_verified_pairs(spark, sf_dir).select("a", "b")
-    mapping = canonical_mapping(pairs)
-    drop = (mapping.filter(F.col("id") != F.col("canonical_id"))
-            .select(F.col("id").cast("long").alias("doc_id")))
-    return (docs.join(F.broadcast(drop), "doc_id", "left_anti")
-            .select("doc_id", "lang", "n_chars"))
-
-
-_DEDUP_CORPUS_NEAR_SQL = _VERIFIED_PAIRS_CTES.replace(
-    "with tk as", "with recursive tk as") + """,
-und as (select a as x, b as y from vpairs union select b, a from vpairs),
-reach(x, r) as (
-  select x, x from (select distinct x from und) n
-  union
-  select u.x, reach.r from und u join reach on u.y = reach.x),
-drop_ids as (select x from reach group by x having min(r) <> x)
-select d.doc_id as doc_id, d.lang as lang, d.n_chars as n_chars
-from documents d
-where d.doc_id::varchar not in (select x from drop_ids)
 """
 
 
@@ -1352,36 +1045,6 @@ where doc_id % 10 = 7
 """
 
 
-def _text_script_profile(spark, sf_dir):
-    """Unicode-script profiling (operators/text.script_counts /
-    dominant_script): deterministic cyrillic/CJK padding appended per
-    doc_id so every branch of the dominant-script CASE is exercised —
-    counts are integer-exact across engines."""
-    did = F.col("doc_id")
-    docs = _t(spark, sf_dir, "documents")
-    mixed = F.concat(
-        # doc_id % 5 == 0: drop the latin text entirely so cyrillic wins
-        F.when(did % 5 == 0, F.lit("")).otherwise(F.col("text")),
-        F.expr("repeat('ж', cast(doc_id % 7 as int) * 3)"),
-        F.expr("repeat('中', cast(doc_id % 3 as int))"))
-    counts = T.script_counts(mixed)
-    return docs.select(
-        "doc_id",
-        *[c.alias(f"n_{name}") for name, c in counts.items()],
-        T.dominant_script(mixed).alias("script"))
-
-
-def _text_script_profile_sql() -> str:
-    from .operators.text import dominant_script_sql, script_counts_sql
-    mixed = ("(case when doc_id % 5 = 0 then '' else text end)"
-             " || repeat('ж', (doc_id % 7)::int * 3)"
-             " || repeat('中', (doc_id % 3)::int)")
-    counts = script_counts_sql(mixed)
-    cols = ", ".join(f"{c} as n_{name}" for name, c in counts.items())
-    return (f"select doc_id, {cols}, {dominant_script_sql(mixed)} as script "
-            f"from documents")
-
-
 def _kg_void_description(spark, sf_dir):
     """VoID dataset self-description (operators/void.void_description,
     exact mode) over the microdata triple set — summary counts + one
@@ -1472,275 +1135,6 @@ _KG_CANONICAL_DUPES_SQL = " union all ".join(
     f" cast({col} as varchar) as obj from documents"
     for h in ("http://mirror.example.org/doc/", "http://pages.example.org/doc/")
     for col in ("doc_id", "lang", "source", "n_chars"))
-
-
-# ---------------------------------------------------------------------------
-# training-data curation tier (operators/curate.py)
-# ---------------------------------------------------------------------------
-
-_PII_INJECT_SQL = ("text || chr(10) || 'Contact u' || doc_id"
-                   " || '@mail.example.org or call +1 555-01' || doc_id"
-                   " || '0 node 10.0.' || (doc_id % 256) || '.7'")
-
-
-def _hash_u32_sql(expr: str) -> str:
-    """DuckDB mirror of operators/curate.hash_u32 (md5 32-bit prefix)."""
-    return f"('0x' || substr(md5({expr}), 1, 8))::bigint"
-
-
-def _text_pii_scrub(spark, sf_dir):
-    """PII redaction (operators/curate.scrub_pii): email/IPv4/phone masking
-    with per-pass match counts, chained regexp_replace in one codegen
-    stage. The fixture corpus contains no PII, so a deterministic contact
-    line (email + phone + IP derived from doc_id) is appended first; the
-    oracle replays the same three passes with RE2."""
-    from .operators import curate as C
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id").cast("string")
-    aug = docs.withColumn(
-        "text", F.concat(F.col("text"), F.lit("\nContact u"), did,
-                         F.lit("@mail.example.org or call +1 555-01"), did,
-                         F.lit("0 node 10.0."),
-                         (F.col("doc_id") % 256).cast("string"), F.lit(".7")))
-    counts = C.pii_counts(F.col("text"))
-    return aug.select(
-        "doc_id", *[v.alias(k) for k, v in counts.items()],
-        C.scrub_pii(F.col("text")).alias("clean"))
-
-
-_TEXT_PII_SCRUB_SQL = rf"""
-with aug as (select doc_id, {_PII_INJECT_SQL} as text from documents),
-p1 as (select doc_id,
-        len(regexp_extract_all(text, '{curate_ops.PII_EMAIL_RE}'))::bigint as n_emails,
-        regexp_replace(text, '{curate_ops.PII_EMAIL_RE}', '[EMAIL]', 'g') as t
-       from aug),
-p2 as (select doc_id, n_emails,
-        len(regexp_extract_all(t, '{curate_ops.PII_IPV4_RE}'))::bigint as n_ips,
-        regexp_replace(t, '{curate_ops.PII_IPV4_RE}', '[IP]', 'g') as t
-       from p1)
-select doc_id, n_emails, n_ips,
-       len(regexp_extract_all(t, '{curate_ops.PII_PHONE_RE}'))::bigint as n_phones,
-       regexp_replace(t, '{curate_ops.PII_PHONE_RE}', '[PHONE]', 'g') as clean
-from p2
-"""
-
-_SAMPLE_RATES = {"en": 0.5, "de": 0.25, "zh": 1.0}
-_SAMPLE_DEFAULT = 0.1
-
-
-def _sample_stratified(spark, sf_dir):
-    """Deterministic per-stratum downsampling to a target language mixture
-    (operators/curate.stratified_sample): keep iff md5-u32(doc_id) <
-    rate[lang]·2³² — a pure filter, reproducible under retries and
-    repartitioning, unlike df.sample."""
-    from .operators import curate as C
-    docs = _t(spark, sf_dir, "documents")
-    return C.stratified_sample(docs, "doc_id", "lang", _SAMPLE_RATES,
-                               _SAMPLE_DEFAULT).select("doc_id", "lang")
-
-
-_SAMPLE_STRATIFIED_SQL = f"""
-select doc_id, lang from documents
-where {_hash_u32_sql('doc_id::varchar')} <
-  case lang {' '.join(f"when '{s}' then {int(r * (1 << 32))}"
-                      for s, r in sorted(_SAMPLE_RATES.items()))}
-       else {int(_SAMPLE_DEFAULT * (1 << 32))} end
-"""
-
-
-# target mixture under a total character budget; 'es' carries no weight and
-# is dropped entirely — the over-represented-domain case.
-_MIX_WEIGHTS = {"de": 0.2, "en": 0.5, "fr": 0.2, "zh": 0.1}
-_MIX_BUDGET = 30000
-
-
-def _sample_mixture(spark, sf_dir):
-    """Token-budget mixture sampling (operators/curate.mixture_sample):
-    per-language keep rates COMPUTED as min(1, w·B / volume) from one
-    aggregation pass, then the same deterministic md5-threshold filter as
-    sample_stratified — expected kept volume per language = w·B. Both
-    engines evaluate the identical IEEE double expression, so the floor'd
-    thresholds match exactly."""
-    from .operators import curate as C
-    docs = _t(spark, sf_dir, "documents")
-    return (C.mixture_sample(docs, "doc_id", "lang", _MIX_WEIGHTS,
-                             _MIX_BUDGET)
-            .select("doc_id", "lang", "n_chars"))
-
-
-_SAMPLE_MIXTURE_SQL = f"""
-with tot as (
-  select lang, cast(sum(n_chars) as double) as vol
-  from documents group by lang),
-thr as (
-  select lang,
-         cast(floor(least(1.0,
-           case lang {' '.join(f"when '{s}' then {float(w)!r}"
-                               for s, w in sorted(_MIX_WEIGHTS.items()))}
-           end * cast({_MIX_BUDGET} as double) / vol) * 4294967296.0)
-           as bigint) as t
-  from tot
-  where lang in ({', '.join(repr(s) for s in sorted(_MIX_WEIGHTS))}))
-select d.doc_id, d.lang, d.n_chars
-from documents d join thr on d.lang = thr.lang
-where {_hash_u32_sql('d.doc_id::varchar')} < thr.t
-"""
-
-
-_CAP_PER_SOURCE = 40
-
-
-def _corpus_cap_per_source(spark, sf_dir):
-    """Domain-frequency capping (operators/curate.cap_per_source): ≤N docs
-    per source by deterministic md5 rank — one shuffle on the source key.
-    The oracle replays the identical row_number window in DuckDB."""
-    from .operators import curate as C
-    docs = _t(spark, sf_dir, "documents")
-    return (C.cap_per_source(docs, max_docs=_CAP_PER_SOURCE)
-            .select("doc_id", "source"))
-
-
-_CORPUS_CAP_PER_SOURCE_SQL = f"""
-select doc_id, source from (
-  select doc_id, source,
-         row_number() over (partition by source
-                            order by md5(doc_id::varchar), doc_id) as r
-  from documents)
-where r <= {_CAP_PER_SOURCE}
-"""
-
-
-def _pack_sequences(spark, sf_dir):
-    """Token-budget sequence packing (operators/curate.pack_sequences):
-    hash-grouped greedy prefix-sum packing — one shuffle on the group key,
-    one window per group, parallelism = n_groups. The oracle replays the
-    window sum in DuckDB."""
-    from .operators import curate as C
-    docs = _t(spark, sf_dir, "documents")
-    return C.pack_sequences(docs, budget=512, n_groups=16)
-
-
-_PACK_SEQUENCES_SQL = rf"""
-with s as (
-  select doc_id,
-         ({_hash_u32_sql('doc_id::varchar')} % 16)::int as grp,
-         len({TOKS_SQL})::bigint as n_tok
-  from documents)
-select doc_id, grp,
-       (coalesce(sum(n_tok) over (partition by grp order by doc_id
-          rows between unbounded preceding and 1 preceding), 0) // 512)::bigint
-         as seq_no,
-       n_tok
-from s
-"""
-
-
-def _text_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (operators/curate.flag_contamination):
-    word-5-gram overlap against a broadcast benchmark shingle set (docs
-    with doc_id % 97 == 0 stand in for the eval suite). Map-side
-    broadcast probe + one doc-key aggregation."""
-    from .operators import curate as C
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.where(F.col("doc_id") % 97 == 0).select("text")
-    return C.flag_contamination(docs, bench, n=5)
-
-
-_G5 = _grams_sql(TOKS_SQL, 5)
-
-_TEXT_DECONTAMINATE_SQL = f"""
-with g as (select doc_id, {_G5} as grams from documents),
-bench as (select distinct unnest(grams) as gram from g where doc_id % 97 = 0),
-hits as (select doc_id, count(*) as n_overlap
-         from (select doc_id, unnest(grams) as gram from g) dg
-         join bench using (gram) group by doc_id)
-select g.doc_id, coalesce(hits.n_overlap, 0) as n_overlap,
-       coalesce(hits.n_overlap, 0) > 0 as contaminated
-from g left join hits on g.doc_id = hits.doc_id
-"""
-
-
-def _corpus_curated(spark, sf_dir):
-    """The fused curation decision (operators/curate.curation_report):
-    Gopher rules → language-ID agreement → exact-duplicate removal, first
-    failing rule wins. The deliverable of the curation tier — which
-    documents enter the training corpus and why."""
-    from .operators import curate as C
-    return C.curation_report(_t(spark, sf_dir, "documents"))
-
-
-_CORPUS_CURATED_SQL = f"""
-with gq as ({_TEXT_GOPHER_QUALITY_SQL}),
-d as (select doc_id, lang,
-             {_langid_case_sql(TOKS_SQL)} as pred_lang,
-             doc_id <> min(doc_id) over (partition by md5(text)) as is_dup
-      from documents)
-select d.doc_id,
-       case when not gq.passes then 'gopher'
-            when d.lang in ({', '.join(f"'{lg}'" for lg in T.LANG_ORDER)})
-                 and d.pred_lang <> d.lang then 'lang_mismatch'
-            when d.is_dup then 'duplicate'
-            else 'keep' end as reason,
-       case when not gq.passes then false
-            when d.lang in ({', '.join(f"'{lg}'" for lg in T.LANG_ORDER)})
-                 and d.pred_lang <> d.lang then false
-            when d.is_dup then false
-            else true end as keep
-from d join gq on d.doc_id = gq.doc_id
-"""
-
-
-def _corpus_vocabulary(spark, sf_dir):
-    """Corpus vocabulary profile — the canonical map-reduce (explode →
-    partial-agg word count) plus document frequency, top-100 by count with
-    a deterministic token tie-break. df_ratio stays a plain rounded
-    division (no log) so both engines produce the identical double."""
-    docs = _t(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    return (docs.select("doc_id", F.explode(T.tokens(F.col("text")))
-                        .alias("token"))
-            .groupBy("token")
-            .agg(F.count("*").alias("n_occ"),
-                 F.countDistinct("doc_id").alias("n_docs"))
-            .withColumn("df_ratio",
-                        F.round(F.col("n_docs") / F.lit(n_docs), 4))
-            .orderBy(F.desc("n_occ"), "token")
-            .limit(100))
-
-
-_CORPUS_VOCABULARY_SQL = f"""
-with t as (select doc_id, unnest({TOKS_SQL}) as token from documents)
-select token, count(*) as n_occ, count(distinct doc_id) as n_docs,
-       round(count(distinct doc_id) /
-             (select count(*) from documents), 4) as df_ratio
-from t group by token
-order by n_occ desc, token limit 100
-"""
-
-
-def _text_tfidf_terms(spark, sf_dir):
-    """Top-3 TF-IDF terms per document (operators/text.tfidf_top_terms) —
-    ratio idf (N/df, no log) keeps every double bit-identical across
-    engines; ranking ties break on term ascending."""
-    docs = _t(spark, sf_dir, "documents")
-    return T.tfidf_top_terms(docs, k=3)
-
-
-_TEXT_TFIDF_TERMS_SQL = f"""
-with toks as (select doc_id, unnest({TOKS_SQL}) as term from documents),
-tf as (select doc_id, term, count(*) as tf from toks group by doc_id, term),
-dfreq as (select term, count(*) as df from tf group by term),
-scored as (
-  select tf.doc_id, tf.term,
-         round(tf.tf * (select count(*)::double from documents) / dfreq.df,
-               4) as score
-  from tf join dfreq using (term))
-select doc_id, term, rank, score from (
-  select doc_id, term, score,
-         row_number() over (partition by doc_id
-                            order by score desc, term) as rank
-  from scored) where rank <= 3
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -2909,46 +2303,6 @@ def _graph_sql():
     }
 
 
-_BLOOM_M = 1 << 20
-
-
-def _text_decontaminate_bloom(spark, sf_dir):
-    """Bloom-filter decontamination (operators/curate
-    .flag_contamination_bloom): the memory-bounded variant — the filter
-    is the SET-BIT POSITIONS of k=2 salted md5 hashes mod m over the
-    benchmark shingles (broadcast bounded by filter geometry, never data
-    size); a doc shingle hits iff all k positions are set. Zero false
-    negatives; deterministic, so the oracle replays the filter exactly."""
-    from .operators import curate as C
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.where(F.col("doc_id") % 97 == 0).select("text")
-    return C.flag_contamination_bloom(docs, bench, n=3, m=_BLOOM_M, k=2)
-
-
-def _bloom_h_sql(salt: int) -> str:
-    return f"({_hash_u32_sql(repr(str(salt) + '#') + ' || gram')} % {_BLOOM_M})"
-
-
-_G3 = _grams_sql(TOKS_SQL, 3)
-
-_TEXT_DECONTAMINATE_BLOOM_SQL = f"""
-with g as (select doc_id, {_G3} as grams from documents),
-bench as (select distinct unnest(grams) as gram from g
-          where doc_id % 97 = 0),
-bits0 as (select distinct {_bloom_h_sql(0)} as h from bench),
-bits1 as (select distinct {_bloom_h_sql(1)} as h from bench),
-dg as (select doc_id, unnest(grams) as gram from g),
-hits as (select doc_id, count(*)::bigint as n_overlap from dg
-         where {_bloom_h_sql(0)} in (select h from bits0)
-           and {_bloom_h_sql(1)} in (select h from bits1)
-         group by doc_id),
-all_docs as (select doc_id from g)
-select all_docs.doc_id, coalesce(hits.n_overlap, 0)::bigint as n_overlap,
-       coalesce(hits.n_overlap, 0) > 0 as contaminated
-from all_docs left join hits using (doc_id)
-"""
-
-
 # --- webgraph analytics: triangles + co-citation similarity -----------------
 
 # parent ∪ grandparent edges: every depth-≥2 doc closes a triangle with its
@@ -3005,18 +2359,6 @@ def _kg_related_pages(spark, sf_dir):
     return neighbor_jaccard(_doc_two_level_edges(spark, sf_dir))
 
 
-def _text_quality_classifier(spark, sf_dir):
-    """fastText/CCNet-style model-based quality gate
-    (operators/text.classifier_margin): linear margin over exact ratio
-    features with fixed public weights, keep ⇔ margin > 0. The margin is
-    deliberately linear (not sigmoid) so the score is a fixed left-to-right
-    chain of IEEE ops both engines evaluate bit-identically."""
-    docs = _t(spark, sf_dir, "documents")
-    return (docs.select("doc_id",
-                        T.classifier_margin(F.col("text")).alias("margin"))
-            .withColumn("keep", F.col("margin") > 0))
-
-
 def _graph_communities(spark, sf_dir):
     """Deterministic synchronous label-propagation communities over the
     two-level doc graph (operators/graph.label_propagation) — min-label
@@ -3035,25 +2377,6 @@ def _webgraph_sql() -> dict[str, str]:
         "graph_communities": label_propagation_sql(_TWO_LEVEL_EDGES_SQL),
         "graph_kcore": kcore_sql(_TWO_LEVEL_EDGES_SQL, k=3, n_rounds=3),
     }
-
-
-_TEXT_QUALITY_CLASSIFIER_SQL = f"""
-with m as (
-  select doc_id,
-         round(-1.25
-               + (len(list_filter({TOKS_SQL}, x -> x in ({STOPS_SQL})))
-                  / len({TOKS_SQL})) * 2.0
-               + least(len({TOKS_SQL}) / 50.0, 1.0) * 1.5
-               + (case when length(text) = 0 then 0.0
-                  else length(regexp_replace(text, '{PUNCT_CLASS}', '', 'g'))
-                       / length(text) end) * -3.0
-               + least(list_sum(list_transform({TOKS_SQL},
-                                               t -> length(t)))
-                       / len({TOKS_SQL}) / 8.0, 1.0) * 0.5,
-               6) as margin
-  from documents)
-select doc_id, margin, margin > 0 as keep from m
-"""
 
 
 # --- domain-blocklist stage --------------------------------------------------
@@ -3587,54 +2910,11 @@ def _graph_assortativity(spark, sf_dir):
     return degree_assortativity(_doc_two_level_edges(spark, sf_dir))
 
 
-def _text_bpe_pairs(spark, sf_dir):
-    """First-round BPE merge statistics (operators/text.bpe_pair_counts):
-    corpus-weighted adjacent character-pair counts with the ``_``
-    end-of-word marker, computed on the word VOCABULARY (vocab-not-rows
-    discipline) — the argmax row is the tokenizer's first merge."""
-    from .operators.text import bpe_pair_counts
-    return bpe_pair_counts(_t(spark, sf_dir, "documents"))
-
-
-def _text_readability(spark, sf_dir):
-    """Flesch reading-ease per document (operators/text.readability_*):
-    exact integer word/sentence/syllable counts + one rounded formula,
-    all regexp_count codegen — another column for the fused curation
-    decision.  Sentence breaks come from a deterministic ' the ' → '. '
-    rewrite so the fixture actually has sentences."""
-    from .operators.text import (flesch_reading_ease_milli,
-                                 readability_metrics)
-    d = _t(spark, sf_dir, "documents")
-    body = F.regexp_replace(F.col("text"), " the ", ". ")
-    m = readability_metrics(body)
-    return d.select(
-        "doc_id", m["n_words"].cast("long").alias("n_words"),
-        m["n_sentences"].cast("long").alias("n_sentences"),
-        m["n_syllables"].cast("long").alias("n_syllables"),
-        flesch_reading_ease_milli(body).alias("flesch_milli"))
-
-
-_TEXT_READABILITY_BODY = "regexp_replace(text, ' the ', '. ', 'g')"
-
-
-def _text_readability_sql() -> str:
-    from .operators.text import readability_sql
-    m = readability_sql(_TEXT_READABILITY_BODY)
-    return f"""
-select doc_id, {m['n_words']}::bigint as n_words,
-       {m['n_sentences']}::bigint as n_sentences,
-       {m['n_syllables']}::bigint as n_syllables,
-       {m['flesch_milli']} as flesch_milli
-from documents
-"""
-
-
 def _fusion_relations_sql() -> dict[str, str]:
     from .operators.fusion import fuse_majority_sql, reify_statements_sql
     from .operators.graph import (clustering_coeff_sql,
                                   degree_assortativity_sql)
     from .operators.relations import hearst_pair_counts_sql
-    from .operators.text import bpe_pair_counts_sql
     return {
         "kg_fused_triples": fuse_majority_sql(_KG_FUSED_TRIPLES_SQL),
         "kg_reified_triples": reify_statements_sql(_KG_PAGES_TRIPLES_SQL),
@@ -3642,9 +2922,6 @@ def _fusion_relations_sql() -> dict[str, str]:
         "graph_clustering_coeff": clustering_coeff_sql(_TWO_LEVEL_EDGES_SQL),
         "graph_assortativity":
             degree_assortativity_sql(_TWO_LEVEL_EDGES_SQL),
-        "text_bpe_pairs":
-            bpe_pair_counts_sql("select text from documents"),
-        "text_readability": _text_readability_sql(),
     }
 
 
@@ -3705,8 +2982,8 @@ def _graph_reciprocity(spark, sf_dir):
 
 
 def _gnn_sql() -> dict[str, str]:
-    from .operators.graph import (neighbor_mean_agg_sql, neighbor_sample_sql,
-                                  reciprocity_sql)
+    from .operators.graph import (edge_split_sql, neighbor_mean_agg_sql,
+                                  neighbor_sample_sql, reciprocity_sql)
     return {
         "graph_neighbor_sample":
             neighbor_sample_sql(_TWO_LEVEL_EDGES_SQL, k=1, salt="epoch0"),
@@ -3715,6 +2992,7 @@ def _gnn_sql() -> dict[str, str]:
             f" coalesce(h2, -1.0) as h2 from ("
             f"{neighbor_mean_agg_sql(_TWO_LEVEL_EDGES_SQL, _doc_feature_nodes_sql())})",
         "graph_reciprocity": reciprocity_sql(_RECIP_EDGES_SQL),
+        "graph_edge_split": edge_split_sql(_TWO_LEVEL_EDGES_SQL),
     }
 
 
@@ -3727,58 +3005,6 @@ def _graph_edge_split(spark, sf_dir):
     negative-sampling op for KG-embedding eval prep."""
     from .operators.graph import edge_split
     return edge_split(_doc_two_level_edges(spark, sf_dir))
-
-
-# Host-boilerplate fixture: a shared per-source header/footer wrapped
-# around each doc's body — both engines assemble the identical string;
-# `source` stands in for the page host.
-_BOILER_DOCS_SQL = """
-select doc_id, source as host,
-       'Copyright ' || source || chr(10) || text || chr(10) ||
-       'All rights reserved ' || source as text
-from documents
-"""
-
-
-def _boiler_docs(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", F.col("source").alias("host"),
-        F.concat(F.lit("Copyright "), F.col("source"), F.lit("\n"),
-                 F.col("text"), F.lit("\n"),
-                 F.lit("All rights reserved "), F.col("source"))
-        .alias("text"))
-
-
-def _text_host_boilerplate(spark, sf_dir):
-    """Host-scoped boilerplate detection
-    (operators/text.host_boilerplate_lines): lines repeating across ≥50%
-    of a host's pages — the template-removal complement of C4's global
-    repeated-line rule; counts key on the per-host line vocabulary, page
-    totals broadcast back."""
-    from .operators.text import host_boilerplate_lines
-    return host_boilerplate_lines(_boiler_docs(spark, sf_dir))
-
-
-def _text_keyphrases(spark, sf_dir):
-    """RAKE-style keyphrase candidates (operators/text.keyphrases):
-    stopword/punctuation-delimited word runs scored freq·n_words (Rose et
-    al. 2010, corpus-level simplification) — one narrow split+explode and
-    one phrase-vocabulary aggregation."""
-    from .operators.text import keyphrases
-    return keyphrases(_t(spark, sf_dir, "documents"), min_freq=5)
-
-
-def _split_boiler_sql() -> dict[str, str]:
-    from .operators.graph import edge_split_sql
-    from .operators.text import host_boilerplate_lines_sql, keyphrases_sql
-    return {
-        "graph_edge_split": edge_split_sql(_TWO_LEVEL_EDGES_SQL),
-        "text_host_boilerplate":
-            host_boilerplate_lines_sql(_BOILER_DOCS_SQL),
-        "text_keyphrases":
-            keyphrases_sql("select text from documents", min_freq=5),
-    }
 
 
 # --- RDFa-lite facet (round-4 cont.) ----------------------------------------
@@ -3866,16 +3092,7 @@ def _kg_entity_disambiguation_sql() -> str:
                             _DISAMB_CANDIDATES_SQL)
 
 
-# --- corpus drift + sampled centrality (round-4 cont.) ----------------------
-
-def _corpus_source_divergence(spark, sf_dir):
-    """Per-source corpus drift (operators/text.source_divergence):
-    total-variation distance between each source's word distribution and
-    the corpus — in exact scaled integers (log divergences are
-    summation-order-dependent and can never hash-match; TV can).
-    Vocabulary-keyed shuffles only."""
-    from .operators.text import source_divergence
-    return source_divergence(_t(spark, sf_dir, "documents"))
+# --- sampled centrality (round-4 cont.) -------------------------------------
 
 
 _HARMONIC_SEEDS_SQL = ("select 'http://pages.example.org/doc/' || doc_id"
@@ -3897,12 +3114,9 @@ def _graph_harmonic_sampled(spark, sf_dir):
         _doc_two_level_edges(spark, sf_dir), seeds, max_hops=4)
 
 
-def _drift_centrality_sql() -> dict[str, str]:
+def _centrality_sql() -> dict[str, str]:
     from .operators.graph import harmonic_sql, predicate_cardinality_sql
-    from .operators.text import source_divergence_sql
     return {
-        "corpus_source_divergence":
-            source_divergence_sql("select source, text from documents"),
         "graph_harmonic_sampled":
             harmonic_sql(_TWO_LEVEL_EDGES_SQL, _HARMONIC_SEEDS_SQL,
                          max_hops=4),
@@ -3919,24 +3133,6 @@ def _kg_pred_cardinality(spark, sf_dir):
     discriminates both flags."""
     from .operators.graph import predicate_cardinality
     return predicate_cardinality(_kg_pages_triples(spark, sf_dir))
-
-
-_BM25_TERMS = ("join", "merge", "sort")
-
-
-def _text_bm25(spark, sf_dir):
-    """Okapi BM25 relevance against a fixed query-term set
-    (operators/text.bm25_scores) — the topic-relevance filter for
-    targeted corpus builds.  One stats aggregation, broadcast crossJoin,
-    narrow fixed-order scoring expression; the per-doc total never goes
-    through a shuffle-ordered sum, so the doubles are engine-stable."""
-    from .operators.text import bm25_scores
-    return bm25_scores(_t(spark, sf_dir, "documents"), _BM25_TERMS)
-
-
-def _text_bm25_sql() -> str:
-    from .operators.text import bm25_sql
-    return bm25_sql("select doc_id, text from documents", _BM25_TERMS)
 
 
 def _graph_component_sizes(spark, sf_dir):
@@ -3970,22 +3166,6 @@ with dec as (select doc_id // 10 as d, count(*) as sz
 select sz::bigint as component_size, count(*)::bigint as n_components
 from dec group by sz
 """
-
-
-def _text_chunks(spark, sf_dir):
-    """RAG-prep sliding-window chunking (operators/text.chunk_documents):
-    64-token windows, 16-token overlap — one sequence + slice + explode,
-    narrow and shuffle-free; the oracle mirrors the start sequence and
-    the clamped slice semantics."""
-    from .operators.text import chunk_documents
-    return chunk_documents(_t(spark, sf_dir, "documents"),
-                           size=64, overlap=16)
-
-
-def _text_chunks_sql() -> str:
-    from .operators.text import chunk_documents_sql
-    return chunk_documents_sql("select doc_id, text from documents",
-                               size=64, overlap=16)
 
 
 def _kg_triples_half_sql(parity: int) -> str:
@@ -4022,27 +3202,6 @@ def _kg_pred_profiles(spark, sf_dir):
     review material; one map-side-combined vocabulary-keyed agg."""
     from .operators.graph import pred_value_profiles
     return pred_value_profiles(_kg_pages_triples(spark, sf_dir))
-
-
-def _corpus_lang_confusion(spark, sf_dir):
-    """Language-ID confusion matrix: the documents table's declared lang
-    column vs the marker-word identifier (operators/text.lang_id) →
-    (lang, lang_id, n_docs) — the diagnostic that says where the cheap
-    identifier disagrees with ground truth before anyone trusts it as a
-    router.  One small keyed agg over a narrow projection."""
-    from .operators.text import lang_id
-    d = _t(spark, sf_dir, "documents")
-    return (d.select(F.col("lang"), lang_id(F.col("text")).alias("lang_id"))
-            .groupBy("lang", "lang_id")
-            .agg(F.count("*").cast("long").alias("n_docs")))
-
-
-def _corpus_lang_confusion_sql() -> str:
-    lid = _langid_case_sql(TOKS_SQL)
-    return f"""
-select lang, {lid} as lang_id, count(*)::bigint as n_docs
-from documents group by lang, {lid}
-"""
 
 
 def _kg_star_estimate(spark, sf_dir):
@@ -4086,7 +3245,6 @@ def _profiling_sql() -> dict[str, str]:
     return {
         "kg_schema_drift": _kg_schema_drift_sql(),
         "kg_pred_profiles": pred_value_profiles_sql(_KG_PAGES_TRIPLES_SQL),
-        "corpus_lang_confusion": _corpus_lang_confusion_sql(),
         "kg_star_estimate":
             star_cardinality_estimate_sql(_KG_PAGES_TRIPLES_SQL,
                                           ("lang", "n_chars")),
@@ -4150,19 +3308,9 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_canonical_dupes": _kg_canonical_dupes,
     "kg_pred_stats": _kg_pred_stats,
     "kg_property_table": _kg_property_table,
-    "text_pii_scrub": _text_pii_scrub,
-    "sample_stratified": _sample_stratified,
-    "pack_sequences": _pack_sequences,
-    "text_decontaminate": _text_decontaminate,
-    "corpus_curated": _corpus_curated,
-    "corpus_vocabulary": _corpus_vocabulary,
     "corpus_length_quantiles": _corpus_length_quantiles,
     "fk_group_integrity": _fk_group_integrity,
-    "corpus_stats": _corpus_stats,
-    "text_quality": _text_quality,
-    "text_langid": _text_langid,
     "kg_pages_triples": _kg_pages_triples,
-    "text_decontaminate_bloom": _text_decontaminate_bloom,
     "csvw_triples_nation": _csvw_triples_nation,
     "csvw_coerce_numeric": _csvw_coerce_numeric,
     "csvw_date_format": _csvw_date_format,
@@ -4177,31 +3325,23 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "agg_events_daily": _agg_events_daily,
     "agg_salted_count": _agg_salted_count,
     "fk_orders_customer": _fk_orders_customer,
-    "text_gopher_quality": _text_gopher_quality,
-    "text_fingerprint": _text_fingerprint,
     "text_url_normalize": _text_url_normalize,
     "dedup_minhash_scale_sig": _dedup_minhash_scale_sig,
     "dedup_minhash_scale_pairs": _dedup_minhash_scale_pairs,
-    "dedup_minhash_verified_pairs": _dedup_minhash_verified_pairs,
-    "dedup_corpus_near": _dedup_corpus_near,
-    "corpus_cap_per_source": _corpus_cap_per_source,
     "kg_entity_mentions": _kg_entity_mentions,
     "kg_comention_pmi": _kg_comention_pmi,
-    "text_c4_lines": _text_c4_lines,
     "graph_bfs_depths": _graph_bfs_depths,
     "kg_degree_histogram": _kg_degree_histogram,
     "kg_negative_samples": _kg_negative_samples,
     "kg_page_links": _kg_page_links,
     "kg_anchor_texts": _kg_anchor_texts,
     "dedup_url_latest": _dedup_url_latest,
-    "text_tfidf_terms": _text_tfidf_terms,
     "graph_hits": _graph_hits,
     "kg_anchor_labels": _kg_anchor_labels,
     "graph_random_walks": _graph_random_walks,
     "events_sessionize": _events_sessionize,
     "graph_triangles": _graph_triangles,
     "kg_related_pages": _kg_related_pages,
-    "text_quality_classifier": _text_quality_classifier,
     "curate_blocklist": _curate_blocklist,
     "graph_communities": _graph_communities,
     "kg_jsonld_triples": _kg_jsonld_triples,
@@ -4216,7 +3356,6 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "crawl_recrawl_schedule": _crawl_recrawl_schedule,
     "crawl_sitemap_frontier": _crawl_sitemap_frontier,
     "join_supplier_profit": _join_supplier_profit,
-    "text_script_profile": _text_script_profile,
     "dedup_url_canonical": _dedup_url_canonical,
     # WebTables distributed type intuition (round-4 cont.; pytest-mirror
     # oracle coverage — rotate into the window once it reopens)
@@ -4230,7 +3369,6 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # SHACL-lite shape validation (round-4 cont. 12)
     "kg_shacl_report": _kg_shacl_report,
     "kg_shacl_summary": _kg_shacl_summary,
-    "sample_mixture": _sample_mixture,
     "graph_kcore": _graph_kcore,
     # round-4 cont. 14: fusion, relations, graph summarization, skip-gram
     # prep
@@ -4239,25 +3377,17 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_hearst_pairs": _kg_hearst_pairs,
     "graph_clustering_coeff": _graph_clustering_coeff,
     "graph_assortativity": _graph_assortativity,
-    "text_bpe_pairs": _text_bpe_pairs,
-    "text_readability": _text_readability,
     "graph_neighbor_sample": _graph_neighbor_sample,
     "graph_sage_features": _graph_sage_features,
     "graph_reciprocity": _graph_reciprocity,
     "graph_edge_split": _graph_edge_split,
-    "text_host_boilerplate": _text_host_boilerplate,
-    "text_keyphrases": _text_keyphrases,
     "kg_rdfa_triples": _kg_rdfa_triples,
     "kg_entity_disambiguation": _kg_entity_disambiguation,
-    "corpus_source_divergence": _corpus_source_divergence,
     "graph_harmonic_sampled": _graph_harmonic_sampled,
     "kg_pred_cardinality": _kg_pred_cardinality,
-    "text_bm25": _text_bm25,
     "graph_component_sizes": _graph_component_sizes,
-    "text_chunks": _text_chunks,
     "kg_schema_drift": _kg_schema_drift,
     "kg_pred_profiles": _kg_pred_profiles,
-    "corpus_lang_confusion": _corpus_lang_confusion,
     "kg_star_estimate": _kg_star_estimate,
     "crawl_url_templates": _crawl_url_templates,
     "kg_characteristic_sets": _kg_characteristic_sets,
@@ -4328,17 +3458,9 @@ _ORACLES: dict[str, str] = {
     "agg_salted_count": _AGG_SALTED_COUNT_SQL,
     "fk_orders_customer": _FK_ORDERS_CUSTOMER_SQL,
     "fk_group_integrity": _FK_GROUP_INTEGRITY_SQL,
-    "text_quality": _TEXT_QUALITY_SQL,
-    "text_gopher_quality": _TEXT_GOPHER_QUALITY_SQL,
-    "corpus_stats": _CORPUS_STATS_SQL,
-    "text_langid": _TEXT_LANGID_SQL,
-    "text_fingerprint": _TEXT_FINGERPRINT_SQL,
     "text_url_normalize": _TEXT_URL_NORMALIZE_SQL,
     "dedup_minhash_scale_sig": _DEDUP_MINHASH_SCALE_SIG_SQL,
     "dedup_minhash_scale_pairs": _DEDUP_MINHASH_SCALE_PAIRS_SQL,
-    "dedup_minhash_verified_pairs": _DEDUP_MINHASH_VERIFIED_PAIRS_SQL,
-    "dedup_corpus_near": _DEDUP_CORPUS_NEAR_SQL,
-    "corpus_cap_per_source": _CORPUS_CAP_PER_SOURCE_SQL,
     "kg_pages_triples": _KG_PAGES_TRIPLES_SQL,
     "kg_entity_mentions": _KG_ENTITY_MENTIONS_SQL,
     "kg_entity_mentions_join": _KG_ENTITY_MENTIONS_SQL,
@@ -4356,22 +3478,13 @@ _ORACLES: dict[str, str] = {
     "crawl_recrawl_schedule": _CRAWL_RECRAWL_SCHEDULE_SQL,
     "crawl_sitemap_frontier": _CRAWL_SITEMAP_FRONTIER_SQL,
     "join_supplier_profit": _JOIN_SUPPLIER_PROFIT_SQL,
-    "text_script_profile": _text_script_profile_sql(),
     "dedup_url_canonical": _DEDUP_URL_CANONICAL_SQL,
     "kg_canonicalized_triples": _KG_CANONICALIZED_TRIPLES_SQL,
     "kg_canonical_dupes": _KG_CANONICAL_DUPES_SQL,
-    "text_pii_scrub": _TEXT_PII_SCRUB_SQL,
-    "sample_stratified": _SAMPLE_STRATIFIED_SQL,
-    "pack_sequences": _PACK_SEQUENCES_SQL,
-    "text_decontaminate": _TEXT_DECONTAMINATE_SQL,
     "kg_pred_stats": _KG_PRED_STATS_SQL,
     "kg_property_table": _KG_PROPERTY_TABLE_SQL,
-    "corpus_curated": _CORPUS_CURATED_SQL,
-    "corpus_vocabulary": _CORPUS_VOCABULARY_SQL,
     "corpus_length_quantiles": _CORPUS_LENGTH_QUANTILES_SQL,
-    "text_decontaminate_bloom": _TEXT_DECONTAMINATE_BLOOM_SQL,
     "kg_comention_pmi": _KG_COMENTION_PMI_SQL,
-    "text_c4_lines": _TEXT_C4_LINES_SQL,
     "graph_bfs_depths": _GRAPH_BFS_DEPTHS_SQL,
     "kg_degree_histogram":
         _KG_DEGREE_HISTOGRAM_SQL.format(sparse=_KG_SPARSE_GRAPH_SQL),
@@ -4380,11 +3493,9 @@ _ORACLES: dict[str, str] = {
     "kg_page_links": _TREE_EDGES_SQL,
     "kg_anchor_texts": _KG_ANCHOR_TEXTS_SQL,
     "dedup_url_latest": _DEDUP_URL_LATEST_SQL,
-    "text_tfidf_terms": _TEXT_TFIDF_TERMS_SQL,
     "kg_anchor_labels": _KG_ANCHOR_LABELS_SQL,
     "graph_random_walks": _GRAPH_RANDOM_WALKS_SQL,
     "events_sessionize": _EVENTS_SESSIONIZE_SQL,
-    "text_quality_classifier": _TEXT_QUALITY_CLASSIFIER_SQL,
     "curate_blocklist": _CURATE_BLOCKLIST_SQL,
     "webtables_type_profile": _WEBTABLES_TYPE_PROFILE_SQL,
     "webtables_typed_triples": _WEBTABLES_TYPED_TRIPLES_SQL,
@@ -4395,19 +3506,15 @@ _ORACLES: dict[str, str] = {
     "webtables_pred_induction": _WEBTABLES_PRED_INDUCTION_SQL,
     "kg_shacl_report": _KG_SHACL_REPORT_SQL,
     "kg_shacl_summary": _KG_SHACL_SUMMARY_SQL,
-    "sample_mixture": _SAMPLE_MIXTURE_SQL,
     **_graph_sql(),
     **_webgraph_sql(),
     **_summary_sql(),
     **_fusion_relations_sql(),
     **_gnn_sql(),
-    **_split_boiler_sql(),
     "kg_rdfa_triples": _KG_RDFA_TRIPLES_SQL,
     "kg_entity_disambiguation": _kg_entity_disambiguation_sql(),
-    "text_bm25": _text_bm25_sql(),
-    **_drift_centrality_sql(),
+    **_centrality_sql(),
     "graph_component_sizes": _GRAPH_COMPONENT_SIZES_SQL,
-    "text_chunks": _text_chunks_sql(),
     **_profiling_sql(),
 }
 

@@ -74,15 +74,15 @@ def triples_rate_per_host(spark: SparkSession, input_dir: str, out_dir: str,
     this runs indefinitely at constant memory per key — the Structured
     Streaming answer to the north rule's per-partition metrics requirement.
     """
-    import json as _json
     from typing import Iterator
     import pandas as pd
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType, TimestampType)
     from ..session import ensure_package_on_executors
+    from ..web import _default_meta_json
     ensure_package_on_executors(spark)
     pages = read_page_stream(spark, input_dir)
-    meta_json = _json.dumps(default_meta) if default_meta else None
+    meta_json = _default_meta_json(default_meta, True)
 
     counts_schema = StructType([
         StructField("url", StringType(), False),
@@ -94,20 +94,14 @@ def triples_rate_per_host(spark: SparkSession, input_dir: str, out_dir: str,
         # per-page triple counts computed in-kernel: no stream-stream join,
         # no triple rows shuffled — only (url, ts, count) reaches the agg
         from ..sources.html_extract import _decode, extract_page
-        from ..web import _kernel_for_meta
+        from ..web import _emit_table_triples
         for pdf in batches:
             urls, tss, ns = [], [], []
             for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                page = extract_page(_decode(html))
-                mj = page.csvw_meta or meta_json
-                n = 0
-                if mj is not None:
-                    tk = _kernel_for_meta(mj, True)
-                    for t in page.tables:
-                        for i, row in enumerate(t.rows):
-                            if i >= 1:
-                                n += len(tk.row_triples(row, i, i + 1, url=url))
-                urls.append(url); tss.append(ts); ns.append(n)
+                triples: list[tuple] = []
+                _emit_table_triples(extract_page(_decode(html)), url,
+                                    meta_json, True, 1, triples, [], [])
+                urls.append(url); tss.append(ts); ns.append(len(triples))
             yield pd.DataFrame({"url": urls, "warc_ts": tss, "n_triples": ns})
 
     counts = pages.mapInPandas(count_kernel, schema=counts_schema)

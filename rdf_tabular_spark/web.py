@@ -17,7 +17,9 @@ the cost is a single read of the html column + CPU, embarrassingly parallel.
 
 from __future__ import annotations
 
+import functools
 import json
+import re
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -32,19 +34,44 @@ from .session import ensure_package_on_executors
 KG_MENTIONS = "https://kg.example.org/ontology#mentions"
 KG_RELATED = "https://kg.example.org/ontology#relatedTo"
 
-# executor-global cache: metadata JSON string → compiled TripleKernel
-_KERNEL_CACHE: dict[str, TripleKernel] = {}
+# compiled kernels kept per executor process, one per distinct (embedded
+# metadata document, minimal) pair
+_KERNEL_CACHE_SIZE = 256
+
+# what parsing, loading, compiling and applying malformed embedded metadata
+# raises: bad JSON, JSON values of the wrong type, a schema reference that
+# is not fetched, a format that is not a regular expression
+_BAD_META = (ValueError, TypeError, AttributeError, OSError, RecursionError,
+             re.error)
 
 
-def _kernel_for_meta(meta_json: str, minimal: bool) -> TripleKernel:
-    key = f"{minimal}:{meta_json}"
-    k = _KERNEL_CACHE.get(key)
-    if k is None:
+def _no_fetch(url: str) -> str:
+    raise FileNotFoundError(f"embedded page metadata cannot load {url}")
+
+
+@functools.lru_cache(maxsize=_KERNEL_CACHE_SIZE)
+def _kernel_for_meta(meta_json: str, minimal: bool) -> Optional[TripleKernel]:
+    """The compiled kernel of one metadata document, or None if the document
+    is malformed: the page then emits no table triples."""
+    try:
         raw = json.loads(meta_json)
-        table = load_metadata(raw, base=raw.get("url") or "http://page.invalid/")
-        mapping = compile_mapping(table, minimal=minimal)
-        k = _KERNEL_CACHE[key] = TripleKernel(mapping)
-    return k
+        table = load_metadata(raw, base=raw.get("url") or "http://page.invalid/",
+                              resolver=_no_fetch)
+        return TripleKernel(compile_mapping(table, minimal=minimal))
+    except _BAD_META:
+        return None
+
+
+def _default_meta_json(default_meta: Optional[dict],
+                       minimal: bool) -> Optional[str]:
+    """The caller's fallback metadata as JSON. Unlike a page's own metadata
+    it comes from the program, so if it does not load, the call fails."""
+    if not default_meta:
+        return None
+    meta_json = json.dumps(default_meta)
+    if _kernel_for_meta(meta_json, minimal) is None:
+        raise ValueError("default_meta is not loadable CSVW metadata")
+    return meta_json
 
 
 def pages_to_triples(pages: DataFrame, minimal: bool = True,
@@ -59,7 +86,7 @@ def pages_to_triples(pages: DataFrame, minimal: bool = True,
     """
     spark = pages.sparkSession
     ensure_package_on_executors(spark)
-    default_meta_json = json.dumps(default_meta) if default_meta else None
+    default_meta_json = _default_meta_json(default_meta, minimal)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .sources.html_extract import extract_page, _decode
@@ -87,19 +114,26 @@ def _emit_table_triples(page, url: str, default_meta_json: Optional[str],
                         minimal: bool, header_rows: int,
                         out: list, urls: list, srcs: list) -> None:
     """Shared per-page CSVW-table emission (single source of truth for the
-    single-facet and fused kernels)."""
+    single-facet and fused kernels). Malformed metadata counts as absent:
+    the page emits no table triples."""
     meta_json = page.csvw_meta or default_meta_json
     if meta_json is None:
         return
     tk = _kernel_for_meta(meta_json, minimal)
-    for t in page.tables:
-        for i, row in enumerate(t.rows):
-            if i < header_rows:
-                continue
-            ts = tk.row_triples(row, i - header_rows + 1, i + 1, url=url)
-            out.extend(ts)
-            urls.extend([url] * len(ts))
-            srcs.extend([i + 1] * len(ts))
+    if tk is None:
+        return
+    n = len(out)
+    try:
+        for t in page.tables:
+            for i, row in enumerate(t.rows):
+                if i < header_rows:
+                    continue
+                ts = tk.row_triples(row, i - header_rows + 1, i + 1, url=url)
+                out.extend(ts)
+                urls.extend([url] * len(ts))
+                srcs.extend([i + 1] * len(ts))
+    except _BAD_META:
+        del out[n:], urls[n:], srcs[n:]
 
 
 def _emit_microdata_triples(page, url: str,
@@ -110,7 +144,6 @@ def _emit_microdata_triples(page, url: str,
     obj_is_iri for a NULL value, matching ``rlike`` null semantics).
     Multiset parity between this and the projection path is CI-tested."""
     import hashlib
-    import re
     iri_re = re.compile(r"^https?://")
     vocab_re = re.compile(r"^(.*/)[^/]*$")
     uh = None
@@ -159,7 +192,6 @@ def _emit_rdfa_triples(page, url: str,
     IRI detection as :func:`rdfa_to_triples` (set-parity CI-tested);
     ``source_num`` 0 like the microdata facet."""
     import hashlib
-    import re as _re
     seen_types = set()
     for item in page.rdfa:
         subj = item.subject
@@ -170,7 +202,7 @@ def _emit_rdfa_triples(page, url: str,
             subj = url + subj
         for prop, value in item.props:
             out.append((subj, prop, value,
-                        bool(_re.match(r"https?://", value)), None, None))
+                        bool(re.match(r"https?://", value)), None, None))
             urls.append(url)
             srcs.append(0)
         for t in item.types.split():
@@ -204,7 +236,7 @@ def pages_to_combined_triples(pages: DataFrame, minimal: bool = True,
     distinct includes the url."""
     spark = pages.sparkSession
     ensure_package_on_executors(spark)
-    default_meta_json = json.dumps(default_meta) if default_meta else None
+    default_meta_json = _default_meta_json(default_meta, minimal)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .sources.html_extract import extract_page, _decode

@@ -236,3 +236,18 @@ def test_url_templates_generalization(spark):
     assert out[("a.ex", "/tag/red")] == 2       # non-id segment survives
     assert out[("b.ex", "/x/{id}/view")] == 2   # hex ids generalize
     assert ("c.ex", "/once/{id}") not in out    # min_urls floor
+
+
+def test_filter_blocked_domains_suffix_semantics(spark):
+    from rdf_tabular_spark.operators.urls import filter_blocked_domains
+    df = spark.createDataFrame(
+        [(1, "http://evil.com/x"),          # exact match -> blocked
+         (2, "http://a.evil.com/x"),        # subdomain -> blocked
+         (3, "http://notevil.com/x"),       # suffix of the STRING only -> kept
+         (4, "http://evil.com.safe.org/x"),  # blocked name mid-host -> kept
+         (5, "http://ok.org/x")],
+        "doc_id long, url string")
+    bl = spark.createDataFrame([("evil.com",)], "domain string")
+    kept = {r["doc_id"]
+            for r in filter_blocked_domains(df, bl, key="doc_id").collect()}
+    assert kept == {3, 4, 5}

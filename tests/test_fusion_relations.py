@@ -1,9 +1,8 @@
-"""Unit tests for the fusion / relation-extraction / graph-structure /
-tokenizer-stats tier — hand-computed expectations on tiny fixtures (the
-oracle-parity sweep covers the corpus-scale versions)."""
+"""Unit tests for the fusion / relation-extraction / graph-structure tier —
+hand-computed expectations on tiny fixtures (the oracle-parity sweep covers
+the corpus-scale versions)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from rdf_tabular_spark.operators.fusion import (RDF_NS, fuse_majority,
                                                 reify_statements)
@@ -11,9 +10,6 @@ from rdf_tabular_spark.operators.graph import (clustering_coeff,
                                                degree_assortativity)
 from rdf_tabular_spark.operators.relations import (hearst_matches,
                                                    hearst_pair_counts)
-from rdf_tabular_spark.operators.text import (bpe_pair_counts,
-                                              flesch_reading_ease_milli,
-                                              readability_metrics)
 
 
 # --- fusion -----------------------------------------------------------------
@@ -127,42 +123,6 @@ def test_assortativity_regular_graph_degenerate(spark):
     assert row["assortativity"] == 0.0
 
 
-# --- BPE pair stats ---------------------------------------------------------
-
-def test_bpe_pair_counts_weighted_by_word_freq(spark):
-    df = spark.createDataFrame([(1, "ab ab b")], "doc_id long, text string")
-    out = {r["pair"]: r["n_occurrences"]
-           for r in bpe_pair_counts(df).collect()}
-    # vocab: ab_ (freq 2) -> pairs ab, b_ ; b_ (freq 1) -> pair b_
-    assert out == {"ab": 2, "b_": 3}
-
-
-def test_bpe_first_merge_argmax(spark):
-    df = spark.createDataFrame([(1, "low low lower")],
-                               "doc_id long, text string")
-    top = (bpe_pair_counts(df)
-           .orderBy(F.desc("n_occurrences"), "pair").first())
-    # 'lo' and 'ow' both occur 3x; lexical tie-break -> 'lo'
-    assert (top["pair"], top["n_occurrences"]) == ("lo", 3)
-
-
-# --- readability ------------------------------------------------------------
-
-def test_readability_counts_and_score(spark):
-    df = spark.createDataFrame(
-        [(1, "the cat sat. the dog ran! done?")], "doc_id long, text string")
-    out = df.select(
-        *[v.alias(k) for k, v in readability_metrics(F.col("text")).items()],
-        flesch_reading_ease_milli(F.col("text")).alias("fm")).first()
-    assert out["n_words"] == 7
-    assert out["n_sentences"] == 3
-    # vowel groups: e,a,a,e,o,a,o,e -> 8
-    assert out["n_syllables"] == 8
-    w, s, y = 7, 3, 8
-    expected = (206835 * s * w - 1015 * w * w - 84600 * y * s) // (s * w)
-    assert out["fm"] == expected
-
-
 # --- job integration --------------------------------------------------------
 
 def test_extract_job_fuse_reify_hearst(spark, tmp_path):
@@ -242,7 +202,7 @@ def test_reciprocity_half(spark):
     assert row["reciprocity"] == 0.5
 
 
-# --- edge split / boilerplate / keyphrases ----------------------------------
+# --- edge split -------------------------------------------------------------
 
 def test_edge_split_deterministic_partition(spark):
     from rdf_tabular_spark.operators.graph import edge_split
@@ -263,92 +223,6 @@ def test_edge_split_deterministic_partition(spark):
     s3 = {(r["src"], r["dst"]): r["split"]
           for r in edge_split(edges, salt="epoch1").collect()}
     assert s3 != s1
-
-
-def test_host_boilerplate_detect_and_remove(spark):
-    from rdf_tabular_spark.operators.text import (host_boilerplate_lines,
-                                                  remove_host_boilerplate)
-    rows = [
-        (1, "h1", "NAV BAR\nunique body one\nFOOTER"),
-        (2, "h1", "NAV BAR\nunique body two\nFOOTER"),
-        (3, "h1", "no template this time"),
-        (4, "h2", "NAV BAR\nother host body"),   # h2: 1 page -> min_pages floor
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, host string, text string")
-    bl = {(r["host"], r["line"]): r["frac"]
-          for r in host_boilerplate_lines(docs, min_frac=0.6).collect()}
-    assert bl[("h1", "NAV BAR")] == pytest.approx(2 / 3, abs=1e-6)
-    assert bl[("h1", "FOOTER")] == pytest.approx(2 / 3, abs=1e-6)
-    assert ("h1", "unique body one") not in bl
-    # 1-page host: every line is 100% of pages, but min_pages=2 floors it
-    assert not any(h == "h2" for h, _ in bl)
-    cleaned = {r["doc_id"]: (r["clean_text"], r["n_removed"])
-               for r in remove_host_boilerplate(docs, min_frac=0.6).collect()}
-    assert cleaned[1] == ("unique body one", 2)
-    assert cleaned[3] == ("no template this time", 0)
-    assert cleaned[4] == ("NAV BAR\nother host body", 0)
-
-
-def test_keyphrases_stopword_delimited(spark):
-    from rdf_tabular_spark.operators.text import keyphrases
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox and the quick brown fox. slow snail"),
-         (2, "quick brown fox wins")],
-        "doc_id long, text string")
-    out = {r["phrase"]: (r["n_words"], r["freq"], r["score"])
-           for r in keyphrases(docs, min_freq=2).collect()}
-    # twice in doc1; doc2's run is "quick brown fox wins" — 4 words,
-    # dropped by max_words=3 (a DIFFERENT candidate, not this phrase)
-    assert out["quick brown fox"] == (3, 2, 6)
-    # single-occurrence phrases filtered by min_freq
-    assert "slow snail" not in out
-
-
-def test_bm25_ranking_and_idf_behavior(spark):
-    import math
-
-    from rdf_tabular_spark.operators.text import bm25_scores
-    docs = spark.createDataFrame(
-        [(1, "join join join filler filler"),
-         (2, "join filler filler filler filler"),
-         (3, "filler filler filler filler filler"),
-         (4, "rare filler filler filler filler")],
-        "doc_id long, text string")
-    out = {r["doc_id"]: (r["n_matched"], r["score"])
-           for r in bm25_scores(docs, ("join", "rare")).collect()}
-    # more tf -> higher score; no match -> 0
-    assert out[1][1] > out[2][1] > 0
-    assert out[3] == (0, 0.0)
-    # rarer term carries higher idf: doc4's single 'rare' (df=1) outscores
-    # doc2's single 'join' (df=2) at equal tf and length
-    assert out[4][1] > out[2][1]
-    # spot-check doc2 against the closed formula
-    N, df, tf, dl, avgdl = 4, 2, 1, 5, 5.0
-    k1, b = 1.2, 0.75
-    idf = math.log(1.0 + (N - df + 0.5) / (df + 0.5))
-    expected = idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
-    assert out[2][1] == round(expected, 4)
-
-
-def test_chunk_documents_windows(spark):
-    from rdf_tabular_spark.operators.text import chunk_documents
-    text = " ".join(f"w{i}" for i in range(1, 11))   # 10 tokens
-    docs = spark.createDataFrame([(1, text), (2, "short doc")],
-                                 "doc_id long, text string")
-    out = {(r["doc_id"], r["chunk_idx"]): (r["chunk_text"], r["n_tokens"])
-           for r in chunk_documents(docs, size=4, overlap=1).collect()}
-    # stride 3: windows at 1, 4, 7 (stop = 10 - 1 = 9)
-    assert out[(1, 0)] == ("w1 w2 w3 w4", 4)
-    assert out[(1, 1)] == ("w4 w5 w6 w7", 4)
-    assert out[(1, 2)] == ("w7 w8 w9 w10", 4)
-    assert (1, 3) not in out
-    # overlap: consecutive windows share exactly one token
-    assert out[(1, 0)][0].split()[-1] == out[(1, 1)][0].split()[0]
-    # short doc -> one remainder chunk
-    assert out[(2, 0)] == ("short doc", 2)
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="overlap"):
-        chunk_documents(docs, size=4, overlap=4)
 
 
 def test_fuse_retract_batch_maintenance(spark, tmp_path):

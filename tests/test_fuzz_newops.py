@@ -1,45 +1,10 @@
 """Property tests for the round-4 continuation operators: invariants a
-single fixture can't pin — chunking's reconstruction property, fusion's
-majority invariant, and edge-split totality.  Spark actions are expensive,
-so each property batches ALL its hypothesis examples into ONE DataFrame and
-a single collect."""
+single fixture can't pin — fusion's majority invariant and edge-split
+totality.  Spark actions are expensive, so each property batches ALL its
+hypothesis examples into ONE DataFrame and a single collect."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-_WORD = st.sampled_from(["alpha", "beta", "gamma", "delta", "eps",
-                         "zeta", "eta", "theta", "iota", "kappa"])
-_DOC = st.lists(_WORD, min_size=0, max_size=12).map(" ".join)
-
-
-@settings(max_examples=5, deadline=None, derandomize=True)
-@given(st.lists(st.tuples(_DOC, st.integers(3, 8), st.integers(0, 2)),
-                min_size=10, max_size=10))
-def test_chunk_reconstruction_property(spark, cases):
-    """Dropping each chunk's first `overlap` tokens (except chunk 0) and
-    concatenating reproduces the original token stream exactly."""
-    from rdf_tabular_spark.operators.text import chunk_documents
-    # one (size, overlap) config per run keeps it a single Spark job
-    size, overlap = 5, 2
-    docs = spark.createDataFrame(
-        [(i, t) for i, (t, _, _) in enumerate(cases)],
-        "doc_id long, text string")
-    chunks: dict[int, list] = {}
-    for r in chunk_documents(docs, size=size, overlap=overlap).collect():
-        chunks.setdefault(r["doc_id"], []).append(
-            (r["chunk_idx"], r["chunk_text"]))
-    for i, (t, _, _) in enumerate(cases):
-        orig = t.strip().split() if t.strip() else [""]
-        parts = [c for _, c in sorted(chunks[i])]
-        rebuilt = parts[0].split() if parts[0] else [""]
-        for p in parts[1:]:
-            toks = p.split()
-            # a remainder window shorter than overlap repeats only its
-            # tail; drop the overlapping prefix it shares with rebuilt
-            share = min(overlap, len(toks))
-            assert rebuilt[-share:] == toks[:share]
-            rebuilt.extend(toks[share:])
-        assert rebuilt == orig or (t.strip() == "" and parts == [""])
 
 
 @settings(max_examples=5, deadline=None, derandomize=True)

@@ -794,28 +794,6 @@ def test_bfs_per_seed_and_harmonic(spark):
     assert h["b"] == (6, 1)
 
 
-def test_source_divergence_identical_strata_zero(spark):
-    from rdf_tabular_spark.operators.text import source_divergence
-    docs = spark.createDataFrame(
-        [(1, "s1", "x y"), (2, "s2", "x y")],
-        "doc_id long, source string, text string")
-    out = {r["source"]: (r["n_tokens"], r["tv_micro"])
-           for r in source_divergence(docs).collect()}
-    # both strata match the corpus distribution exactly -> TV = 0
-    assert out == {"s1": (2, 0), "s2": (2, 0)}
-
-
-def test_source_divergence_disjoint_vocab(spark):
-    from rdf_tabular_spark.operators.text import source_divergence
-    docs = spark.createDataFrame(
-        [(1, "s1", "x x"), (2, "s2", "y y")],
-        "doc_id long, source string, text string")
-    out = {r["source"]: r["tv_micro"]
-           for r in source_divergence(docs).collect()}
-    # stratum {x:1} vs corpus {x:.5, y:.5} -> TV = 0.5
-    assert out == {"s1": 500000, "s2": 500000}
-
-
 def test_predicate_cardinality_flags(spark):
     from rdf_tabular_spark.operators.graph import predicate_cardinality
     rows = [

@@ -36,13 +36,6 @@ def test_agg_pricing_summary_prunes_columns(spark):
     assert p.count("HashAggregate") >= 2, "partial (map-side) agg missing"
 
 
-def test_text_quality_prunes_columns(spark):
-    p = plan_of(Q.queries()["text_quality"](spark, SF))
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"doc_id", "text"}
-
-
 def test_pages_to_triples_is_shuffle_free(spark):
     """Stages 1+2 must stay narrow — one Arrow pass over the pages table;
     any Exchange here would shuffle the whole corpus at 10^12 docs."""
@@ -118,13 +111,6 @@ def test_combined_triples_is_shuffle_free(spark):
     assert "Exchange" not in p, "fused pages->triples must not shuffle"
 
 
-def test_dedup_corpus_near_drop_set_broadcasts(spark):
-    """The corpus-dedup anti-join must broadcast the (tiny) drop set so the
-    document payload never shuffles."""
-    p = plan_of(Q.queries()["dedup_corpus_near"](spark, SF))
-    assert "BroadcastHashJoin" in p and "LeftAnti" in p, p[:500]
-
-
 def test_read_subject_pushes_filters(spark, tmp_path):
     """Subject point-lookup: both the subj_bucket equality (row-group
     stats pruning) and the subj equality must reach the parquet scan."""
@@ -147,42 +133,6 @@ def test_read_subject_pushes_filters(spark, tmp_path):
         "EqualTo(subj,http://s/7)" in p, p[-2000:]
     rows = got.collect()
     assert len(rows) == 1 and rows[0]["obj"] == "7"
-
-
-def test_pii_scrub_shuffle_free_and_pruned(spark):
-    """PII redaction is a pure codegen stage: no Exchange, scan reads only
-    (doc_id, text) — it must stream at parquet-scan speed at 100 TB."""
-    p = plan_of(Q.queries()["text_pii_scrub"](spark, SF))
-    assert "Exchange" not in p, "pii scrub must not shuffle"
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"doc_id", "text"}
-
-
-def test_stratified_sample_is_pure_filter(spark):
-    """Hash sampling must stay a narrow filter — no shuffle, no sample
-    operator with partition-dependent state."""
-    p = plan_of(Q.queries()["sample_stratified"](spark, SF))
-    assert "Exchange" not in p
-    assert "Sample" not in p, "must use the deterministic hash filter"
-
-
-def test_pack_sequences_single_group_shuffle(spark):
-    """Packing shuffles ONCE on the hash group key; the window runs per
-    group (parallelism = n_groups), never as one global window."""
-    p = plan_of(Q.queries()["pack_sequences"](spark, SF))
-    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
-    assert "SinglePartition" not in p, \
-        "global window would serialize the corpus through one task"
-    assert "Window" in p
-
-
-def test_decontaminate_broadcasts_benchmark(spark):
-    """The benchmark shingle set is the small side — it must broadcast;
-    shuffling the exploded doc shingles against it would move the whole
-    corpus' n-grams."""
-    p = plan_of(Q.queries()["text_decontaminate"](spark, SF))
-    assert "BroadcastHashJoin" in p
 
 
 def test_property_table_single_subject_shuffle(spark):
@@ -440,14 +390,6 @@ def test_retraction_read_broadcasts_delete_set(spark, tmp_path):
         "retraction read shuffled the data stream"
 
 
-def test_bloom_probe_broadcasts_bit_sets(spark):
-    """Bloom decontamination probes via broadcast LEFT SEMI joins on the
-    hashed positions — the bit sets are bounded by filter geometry."""
-    p = plan_of(Q.queries()["text_decontaminate_bloom"](spark, SF))
-    assert "LeftSemi" in p
-    assert p.count("BroadcastHashJoin") >= 2
-
-
 def test_every_python_kernel_site_ships_the_package():
     """Structural lint: every mapInPandas / mapInArrow / applyInPandas
     launch site in the package must be preceded (within the same file,
@@ -547,18 +489,6 @@ def test_pages_to_anchors_is_narrow(spark):
     assert "Exchange" not in p
 
 
-def test_tfidf_prunes_columns_and_partial_aggs(spark):
-    """TF-IDF reads only (doc_id, text); both keyed counts combine
-    map-side before their exchanges."""
-    from rdf_tabular_spark.operators.text import tfidf_top_terms
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(tfidf_top_terms(docs))
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"doc_id", "text"}
-    assert "partial_count" in p, "map-side combine missing on tf/df aggs"
-
-
 def test_sessionize_single_exchange(spark):
     """Sessionization: the (user, session) groupBy must reuse the lag
     window's user_id hash partitioning — exactly ONE Exchange; a second
@@ -583,16 +513,6 @@ def test_neighbor_jaccard_no_cartesian_and_prunes(spark):
     m = re.search(r"ReadSchema: struct<([^>]*)>", p)
     cols = {c.split(":")[0] for c in m.group(1).split(",")}
     assert cols == {"doc_id"}, f"edge build reads too much: {cols}"
-
-
-def test_classifier_margin_is_one_narrow_stage(spark):
-    """The model gate is a projection — any Exchange means the linear
-    scorer stopped being a map-side stage."""
-    p = plan_of(Q.queries()["text_quality_classifier"](spark, SF))
-    assert "Exchange" not in p
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"doc_id", "text"}
 
 
 def test_join_supplier_profit_broadcasts_all_dims(spark):
@@ -668,28 +588,6 @@ def test_hearst_single_vocab_shuffle(spark):
     assert cols == {"doc_id", "text"}, f"scan reads too much: {cols}"
 
 
-def test_bpe_pairs_vocab_first(spark):
-    """BPE pair stats: corpus collapses to the word vocabulary before the
-    pair expansion — two exchanges total, both aggs with map-side
-    partials, text column only in the scan."""
-    p = plan_of(Q.queries()["text_bpe_pairs"](spark, SF))
-    assert n_exchanges(p) == 2
-    assert p.count("HashAggregate") >= 4, "both aggs need map-side partials"
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"text"}, f"scan reads too much: {cols}"
-
-
-def test_readability_shuffle_free(spark):
-    """Readability: pure per-row regexp_count projection — zero exchanges,
-    pruned scan."""
-    p = plan_of(Q.queries()["text_readability"](spark, SF))
-    assert "Exchange" not in p, "readability must stay narrow"
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"doc_id", "text"}, f"scan reads too much: {cols}"
-
-
 def test_neighbor_sample_single_window_shuffle(spark):
     """GraphSAGE fan-out: distinct + one src-keyed window — two exchanges
     total, no join."""
@@ -715,25 +613,6 @@ def test_edge_split_no_shuffle_beyond_distinct(spark):
     p = plan_of(Q.queries()["graph_edge_split"](spark, SF))
     assert n_exchanges(p) <= 1
     assert "Join" not in p
-
-
-def test_host_boilerplate_vocab_keyed_and_broadcast_totals(spark):
-    """Boilerplate detection: counts key on the per-host line vocabulary
-    and the page totals come back via a broadcast join — never a
-    sort-merge on the line table."""
-    p = plan_of(Q.queries()["text_host_boilerplate"](spark, SF))
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-
-
-def test_keyphrases_single_vocab_agg(spark):
-    """Keyphrases: narrow split+explode, one aggregation keyed on the
-    phrase vocabulary, text-only scan."""
-    p = plan_of(Q.queries()["text_keyphrases"](spark, SF))
-    assert n_exchanges(p) == 1
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"text"}, f"scan reads too much: {cols}"
 
 
 def test_pred_profiles_single_vocab_agg(spark):

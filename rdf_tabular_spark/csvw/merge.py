@@ -32,7 +32,6 @@ CSVW_CONTEXT = "http://www.w3.org/ns/csvw"
 ARRAY_PROPS = {"resources", "columns", "transformations", "foreignKeys"}
 OBJECT_PROPS = {"tableSchema", "dialect", "reference", "datatype"}
 NATURAL_LANGUAGE_PROPS = {"title"}
-LINK_PROPS = {"url", "@id"}
 
 #: W3C-final property names → the reference repo's draft-era internal
 #: names. ``normalize`` canonicalizes so both spellings merge together

@@ -25,17 +25,6 @@ INHERITED = (
     "datatype", "aboutUrl", "propertyUrl", "valueUrl",
 )
 
-# Supported datatype bases + aliases (reference: metadata.rb:39-90 DATATYPES)
-DATATYPE_ALIASES = {
-    "any": "anyAtomicType",
-    "binary": "base64Binary",
-    "datetime": "dateTime",
-    "number": "double",
-    "xml": "xml",      # → rdf:XMLLiteral
-    "html": "html",    # → rdf:HTML
-    "json": "json",    # → csvw:JSON
-}
-
 REJECTED_TYPES = frozenset(
     ["anyType", "anySimpleType", "ENTITIES", "IDREFS", "NMTOKENS", "ENTITY", "ID", "IDREF", "NOTATION"]
 )

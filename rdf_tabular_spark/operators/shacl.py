@@ -68,10 +68,6 @@ class NodeShape:
     properties: tuple[PropertyShape, ...] = field(default_factory=tuple)
 
 
-_REPORT_COLS = ("focus", "shape_id", "path", "constraint", "actual",
-                "expected")
-
-
 def _report(df: DataFrame, shape: NodeShape, prop: PropertyShape,
             constraint: str, actual, expected: str) -> DataFrame:
     return df.select(

@@ -87,14 +87,6 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     )
 
 
-def _manifest_dir(root: str) -> str:
-    # physical layer routed through the StorageLayout seam (physical.py):
-    # swap set_layout(IcebergLayout(...)) to commit snapshots instead of
-    # JSON manifests — the store logic above this line never changes
-    from .physical import get_layout
-    return get_layout().manifest_dir(root)
-
-
 def _manifests(root: str) -> list[dict]:
     from .physical import get_layout
     return get_layout().read_manifests(root)

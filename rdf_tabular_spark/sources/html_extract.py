@@ -7,17 +7,17 @@ deterministic: ``extract_page`` is the single source of truth for text
 extraction, shared by the synthetic-page generator and the pipeline, so the
 byte-identical-text-per-url invariant is checkable end-to-end.
 
-Executed via ``mapInPandas`` over the pages table (url, warc_ts, html:binary,
-text, lang) — one Arrow batch in, exploded virtual rows out; no per-row Python
-UDF calls, no shuffle.
+Every page stage runs through :func:`map_pages`, one ``mapInPandas`` over the
+pages table (url, warc_ts, html:binary, text, lang) — one Arrow batch in,
+exploded rows out; no per-row Python UDF calls, no shuffle.
 """
 
 from __future__ import annotations
 
-import json
+import hashlib
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
-from typing import Iterator, Optional
+from typing import Callable, Iterable, Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -531,52 +531,60 @@ def _decode(html) -> str:
     return str(html)
 
 
+def map_pages(pages: DataFrame, schema: StructType | str,
+              emit: Callable[[tuple, PageContent], Iterable[tuple]]
+              ) -> DataFrame:
+    """The one pages → rows pass that every page stage runs through: each
+    page's HTML is decoded and parsed ONCE, ``emit(row, page)`` returns the
+    page's output tuples in ``schema`` order (``row`` is the input row as a
+    named tuple: ``row.url``, ``row.warc_ts``, ...), and each Arrow batch
+    in becomes one batch out. Narrow, no shuffle; the JVM/Python boundary
+    of stage 1 lives here and nowhere else."""
+    from ..session import ensure_package_on_executors
+    ensure_package_on_executors(pages.sparkSession)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    cols = schema.fieldNames()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[tuple] = []
+            for row in pdf.itertuples(index=False):
+                out.extend(emit(row, extract_page(_decode(row.html))))
+            yield pd.DataFrame(out, columns=cols)
+
+    return pages.mapInPandas(kernel, schema=schema)
+
+
+def skolem(url: str, prefix: str, label: str) -> str:
+    """Deterministic per-page blank node for parser label ``_:x`` (the
+    process hash is randomized, so the page url's sha1 scopes it)."""
+    return f"_:{prefix}-{hashlib.sha1(url.encode()).hexdigest()[:10]}-{label[2:]}"
+
+
 def pages_to_virtual_rows(pages: DataFrame, header_rows: int = 1) -> DataFrame:
     """pages(url, html, ...) → virtual rows. Narrow Arrow stage, no shuffle;
     row numbering is page-local (no global ordering needed at 10^12 docs)."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in
-                                    ("url", "table_index", "values", "row_num", "source_num",
-                                     "csvw_meta", "lang")}
-            for url, html, lang in zip(pdf["url"], pdf["html"], pdf.get("lang", [None] * len(pdf))):
-                page = extract_page(_decode(html))
-                for t in page.tables:
-                    for i, row in enumerate(t.rows):
-                        if i < header_rows:
-                            continue
-                        out["url"].append(url)
-                        out["table_index"].append(t.index)
-                        out["values"].append(row)
-                        out["row_num"].append(i - header_rows + 1)
-                        out["source_num"].append(i + 1)
-                        out["csvw_meta"].append(page.csvw_meta)
-                        out["lang"].append(lang)
-            yield pd.DataFrame(out)
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(pages.sparkSession)
-    return pages.mapInPandas(kernel, schema=VIRTUAL_ROWS_SCHEMA)
+    def emit(row, page):
+        lang = getattr(row, "lang", None)
+        return [(row.url, t.index, values, i - header_rows + 1, i + 1,
+                 page.csvw_meta, lang)
+                for t in page.tables for i, values in enumerate(t.rows)
+                if i >= header_rows]
+    return map_pages(pages, VIRTUAL_ROWS_SCHEMA, emit)
 
 
 def pages_to_microdata(pages: DataFrame) -> DataFrame:
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                for item in page.microdata:
-                    iid = item.item_id
-                    if iid.startswith("_:"):
-                        # deterministic skolem (process-hash is randomized)
-                        import hashlib
-                        uh = hashlib.sha1(url.encode()).hexdigest()[:10]
-                        iid = f"_:md-{uh}-{item.item_id[2:]}"
-                    for prop, value in item.props:
-                        rows.append((url, iid, item.itemtype, prop, value))
-            yield pd.DataFrame(rows, columns=["url", "item_id", "itemtype", "prop", "value"])
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(pages.sparkSession)
-    return pages.mapInPandas(kernel, schema=MICRODATA_SCHEMA)
+    def emit(row, page):
+        out = []
+        for item in page.microdata:
+            iid = item.item_id
+            if iid.startswith("_:"):
+                iid = skolem(row.url, "md", iid)
+            out.extend((row.url, iid, item.itemtype, prop, value)
+                       for prop, value in item.props)
+        return out
+    return map_pages(pages, MICRODATA_SCHEMA, emit)
 
 
 def pages_to_rdfa(pages: DataFrame) -> DataFrame:
@@ -586,38 +594,23 @@ def pages_to_rdfa(pages: DataFrame) -> DataFrame:
     vocab/prefix expansion already happened inside the parser, blank-node
     subjects skolemize per url so reruns and engines agree.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                for item in page.rdfa:
-                    subj = item.subject
-                    if subj.startswith("_:"):
-                        uh = hashlib.sha1(url.encode()).hexdigest()[:10]
-                        subj = f"_:ra-{uh}-{item.subject[2:]}"
-                    for prop, value in item.props:
-                        rows.append((url, subj, item.types, prop, value))
-                    if not item.props:
-                        # sentinel row: a typeof scope with no property
-                        # elements still carries its rdf:type triples
-                        rows.append((url, subj, item.types, None, None))
-            yield pd.DataFrame(
-                rows, columns=["url", "subject", "typeof", "prop", "value"])
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(pages.sparkSession)
-    return pages.mapInPandas(kernel, schema=RDFA_SCHEMA)
+    def emit(row, page):
+        out = []
+        for item in page.rdfa:
+            subj = item.subject
+            if subj.startswith("_:"):
+                subj = skolem(row.url, "ra", subj)
+            out.extend((row.url, subj, item.types, prop, value)
+                       for prop, value in item.props)
+            if not item.props:
+                # sentinel row: a typeof scope with no property elements
+                # still carries its rdf:type triples
+                out.append((row.url, subj, item.types, None, None))
+        return out
+    return map_pages(pages, RDFA_SCHEMA, emit)
 
 
 def pages_to_text(pages: DataFrame) -> DataFrame:
     """Re-extract text per url (for the byte-identical invariant check)."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "extracted_text": [extract_page(_decode(h)).text for h in pdf["html"]],
-            })
-    from ..session import ensure_package_on_executors
-    ensure_package_on_executors(pages.sparkSession)
-    return pages.mapInPandas(kernel, schema=EXTRACTED_TEXT_SCHEMA)
+    return map_pages(pages, EXTRACTED_TEXT_SCHEMA,
+                     lambda row, page: [(row.url, page.text)])

@@ -4,12 +4,14 @@ The reference is strictly batch (SURVEY.md §2.7: no streaming anywhere in
 lib/); this is the Spark-native generalization for a continuously-crawled
 corpus: new page files land in the input directory (the streaming face of
 an Iceberg append), each micro-batch runs the SAME stage-1+2 Arrow kernel
-as the batch path (``web.pages_to_triples`` — mapInPandas is streaming-
-compatible because it is stateless per batch), and the sink checkpoints
-progress so a crashed or re-run job resumes exactly where it left off
-without reprocessing (file-source + checkpoint = exactly-once file
-accounting; complements the batch layer's per-batch manifests in
-sinks/graph_store.py).
+as the batch path — ``stream_pages_to_store`` the fused
+``web.pages_to_combined_triples`` that ``web_pipeline`` runs,
+``stream_pages_to_triples`` its CSVW-table facet ``web.pages_to_triples``
+(mapInPandas is streaming-compatible because it is stateless per batch) —
+and the sink checkpoints progress so a crashed or re-run job resumes
+exactly where it left off without reprocessing (file-source + checkpoint =
+exactly-once file accounting; complements the batch layer's per-batch
+manifests in sinks/graph_store.py).
 
 ``Trigger.AvailableNow`` drains everything pending then stops — the
 cron-style incremental-batch mode a 10^12-doc pipeline actually runs
@@ -74,13 +76,10 @@ def triples_rate_per_host(spark: SparkSession, input_dir: str, out_dir: str,
     this runs indefinitely at constant memory per key — the Structured
     Streaming answer to the north rule's per-partition metrics requirement.
     """
-    from typing import Iterator
-    import pandas as pd
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType, TimestampType)
-    from ..session import ensure_package_on_executors
-    from ..web import _default_meta_json
-    ensure_package_on_executors(spark)
+    from ..sources.html_extract import map_pages
+    from ..web import _default_meta_json, _emit_table_triples
     pages = read_page_stream(spark, input_dir)
     meta_json = _default_meta_json(default_meta, True)
 
@@ -89,22 +88,11 @@ def triples_rate_per_host(spark: SparkSession, input_dir: str, out_dir: str,
         StructField("warc_ts", TimestampType(), False),
         StructField("n_triples", LongType(), False),
     ])
-
-    def count_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-page triple counts computed in-kernel: no stream-stream join,
-        # no triple rows shuffled — only (url, ts, count) reaches the agg
-        from ..sources.html_extract import _decode, extract_page
-        from ..web import _emit_table_triples
-        for pdf in batches:
-            urls, tss, ns = [], [], []
-            for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                triples: list[tuple] = []
-                _emit_table_triples(extract_page(_decode(html)), url,
-                                    meta_json, True, 1, triples, [], [])
-                urls.append(url); tss.append(ts); ns.append(len(triples))
-            yield pd.DataFrame({"url": urls, "warc_ts": tss, "n_triples": ns})
-
-    counts = pages.mapInPandas(count_kernel, schema=counts_schema)
+    # per-page triple counts computed in-kernel: no stream-stream join,
+    # no triple rows shuffled — only (url, ts, count) reaches the agg
+    counts = map_pages(pages, counts_schema, lambda row, page: [
+        (row.url, row.warc_ts,
+         len(_emit_table_triples(page, row.url, meta_json, True, 1)))])
     host = F.regexp_extract("url", r"^[a-z]+://([^/]+)/", 1)
     agg = (counts.withColumn("host", host)
            .withWatermark("warc_ts", watermark)
@@ -169,13 +157,16 @@ def stream_pages_to_store(spark: SparkSession, input_dir: str,
                           available_now: bool = True,
                           max_files_per_trigger: Optional[int] = None,
                           batch_prefix: str = "crawl",
-                          combined: bool = False,
                           respect_noindex: bool = False):
     """Continuous KG construction: crawled pages land in ``input_dir``,
-    each micro-batch runs stages 1-2 (HTML extraction + CSVW triple
-    kernel + optional broadcast entity linking — all narrow, identical
-    to the batch path) and commits into the graph store under the
-    deterministic id ``{batch_prefix}-{epoch:08d}``.
+    each micro-batch runs stages 1-2 and commits into the graph store
+    under the deterministic id ``{batch_prefix}-{epoch:08d}``.
+
+    Stages 1-2 are identical to the batch path (``web_pipeline``): the
+    fused kernel ``web.pages_to_combined_triples`` (tables, microdata,
+    JSON-LD and RDFa from one parse of each page, robots-noindex pages
+    dropped inside that parse when ``respect_noindex``) plus optional
+    broadcast entity linking — all narrow.
 
     Exactly-once by the same composition as
     :func:`stream_ntriples_to_store`: file-source checkpoint assigns each
@@ -186,21 +177,11 @@ def stream_pages_to_store(spark: SparkSession, input_dir: str,
     ``canonicalize_subjects``-derived map merges as periodic maintenance
     (sinks/graph_store.merge_mappings), the lambda-architecture split the
     north_rule's checkpoint/lineage design anticipates."""
-    from ..session import ensure_package_on_executors
     from ..sinks.graph_store import materialize
-    from ..web import (link_entities, pages_to_combined_triples,
-                       pages_to_triples)
-    ensure_package_on_executors(spark)
+    from ..web import link_entities, pages_to_combined_triples
     pages = read_page_stream(spark, input_dir, max_files_per_trigger)
-    if combined:
-        # fused single-parse kernel: tables + microdata + JSON-LD per
-        # micro-batch, optional robots-noindex compliance — mapInPandas is
-        # streaming-compatible, so batch and stream share the exact stage
-        triples = pages_to_combined_triples(
-            pages, default_meta=default_meta,
-            respect_noindex=respect_noindex)
-    else:
-        triples = pages_to_triples(pages, default_meta=default_meta)
+    triples = pages_to_combined_triples(pages, default_meta=default_meta,
+                                        respect_noindex=respect_noindex)
     if entity_dict:
         triples = triples.unionByName(link_entities(triples, entity_dict))
 

@@ -9,7 +9,8 @@ north_rule stages:
   4. materialize deduplicated triples into partitioned graph tables
      (sinks/graph_store.py)
 
-All per-row logic runs inside Arrow-batched mapInPandas kernels; stages 1+2
+All per-row logic runs inside Arrow-batched mapInPandas kernels (every
+pages → rows stage through ``sources.html_extract.map_pages``); stages 1+2
 fuse into ONE narrow pass over the pages table (no shuffle until the
 canonicalization groupBy), which is what survives a 10^12-document scan:
 the cost is a single read of the html column + CPU, embarrassingly parallel.
@@ -21,6 +22,7 @@ import functools
 import json
 import re
 from typing import Iterator, Optional
+from urllib.parse import urljoin
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -30,9 +32,13 @@ from .csvw.model import load_metadata
 from .operators.triples import (TRIPLE_SCHEMA, TripleKernel,
                                 compile_mapping)
 from .session import ensure_package_on_executors
+from .sources.html_extract import map_pages, skolem
 
 KG_MENTIONS = "https://kg.example.org/ontology#mentions"
 KG_RELATED = "https://kg.example.org/ontology#relatedTo"
+
+_IRI_RE = re.compile(r"^https?://")
+_VOCAB_RE = re.compile(r"^(.*/)[^/]*$")
 
 # compiled kernels kept per executor process, one per distinct (embedded
 # metadata document, minimal) pair
@@ -84,134 +90,99 @@ def pages_to_triples(pages: DataFrame, minimal: bool = True,
     ``default_meta``); kernels are compiled once per distinct metadata
     document and reused across pages (cache hit ≈ always at web scale).
     """
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
     default_meta_json = _default_meta_json(default_meta, minimal)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.html_extract import extract_page, _decode
-        cols = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "obj_lang"]
-        for pdf in batches:
-            out: list[tuple] = []
-            urls: list[str] = []
-            srcs: list[int] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                _emit_table_triples(page, url, default_meta_json, minimal,
-                                    header_rows, out, urls, srcs)
-            res = pd.DataFrame(out, columns=cols)
-            res["table_url"] = pd.Series(urls, dtype="object")
-            res["source_num"] = pd.Series(srcs, dtype="int64")
-            yield res
-
-    return pages.mapInPandas(kernel, schema=TRIPLE_SCHEMA)
+    return map_pages(pages, TRIPLE_SCHEMA, lambda row, page: _emit_table_triples(
+        page, row.url, default_meta_json, minimal, header_rows))
 
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
 def _emit_table_triples(page, url: str, default_meta_json: Optional[str],
-                        minimal: bool, header_rows: int,
-                        out: list, urls: list, srcs: list) -> None:
+                        minimal: bool, header_rows: int) -> list:
     """Shared per-page CSVW-table emission (single source of truth for the
-    single-facet and fused kernels). Malformed metadata counts as absent:
-    the page emits no table triples."""
+    single-facet and fused kernels) → TRIPLE_SCHEMA tuples. Malformed
+    metadata counts as absent: the page emits no table triples."""
     meta_json = page.csvw_meta or default_meta_json
     if meta_json is None:
-        return
+        return []
     tk = _kernel_for_meta(meta_json, minimal)
     if tk is None:
-        return
-    n = len(out)
+        return []
+    out: list = []
     try:
         for t in page.tables:
             for i, row in enumerate(t.rows):
                 if i < header_rows:
                     continue
-                ts = tk.row_triples(row, i - header_rows + 1, i + 1, url=url)
-                out.extend(ts)
-                urls.extend([url] * len(ts))
-                srcs.extend([i + 1] * len(ts))
+                tail = (url, i + 1)
+                out += [tr + tail for tr in
+                        tk.row_triples(row, i - header_rows + 1, i + 1, url=url)]
     except _BAD_META:
-        del out[n:], urls[n:], srcs[n:]
+        return []
+    return out
 
 
-def _emit_microdata_triples(page, url: str,
-                            out: list, urls: list, srcs: list) -> None:
+def _emit_microdata_triples(page, url: str) -> list:
     """Shared per-page microdata emission — mirrors the Column projection in
     :func:`microdata_to_triples` exactly (pred vocab resolution, skolem ids,
     per-(item,type,url) dedup == the projection's distinct, and NULL
     obj_is_iri for a NULL value, matching ``rlike`` null semantics).
     Multiset parity between this and the projection path is CI-tested."""
-    import hashlib
-    iri_re = re.compile(r"^https?://")
-    vocab_re = re.compile(r"^(.*/)[^/]*$")
-    uh = None
+    out: list = []
     seen_types: set[tuple] = set()
-    n_md = 0
     for item in page.microdata:
         iid = item.item_id
         if iid.startswith("_:"):
-            if uh is None:
-                uh = hashlib.sha1(url.encode()).hexdigest()[:10]
-            iid = f"_:md-{uh}-{item.item_id[2:]}"
-        m = vocab_re.match(item.itemtype or "")
+            iid = skolem(url, "md", iid)
+        m = _VOCAB_RE.match(item.itemtype or "")
         vocab = m.group(1) if m else ""
         for prop, value in item.props:
-            pred = prop if iri_re.match(prop) else (vocab or url + "#") + prop
+            pred = prop if _IRI_RE.match(prop) else (vocab or url + "#") + prop
             out.append((iid, pred, value,
-                        None if value is None else bool(iri_re.match(value)),
-                        None, None))
-            n_md += 1
+                        None if value is None else bool(_IRI_RE.match(value)),
+                        None, None, url, 0))
         if item.itemtype and (iid, item.itemtype) not in seen_types:
             seen_types.add((iid, item.itemtype))
-            out.append((iid, RDF_TYPE, item.itemtype, True, None, None))
-            n_md += 1
-    urls.extend([url] * n_md)
-    srcs.extend([0] * n_md)
+            out.append((iid, RDF_TYPE, item.itemtype, True, None, None, url, 0))
+    return out
 
 
-def _emit_jsonld_triples(page, url: str,
-                         out: list, urls: list, srcs: list) -> None:
+def _emit_jsonld_triples(page, url: str) -> list:
     """Shared per-page JSON-LD emission — same expansion as
     :func:`pages_to_jsonld_triples` (sources/jsonld.expand_jsonld), with
     ``source_num`` = block index offset by -1..: blocks use negative
     source_nums (-1, -2, ...) so they never collide with table source rows
     or the microdata 0 sentinel."""
     from .sources.jsonld import expand_jsonld
+    out: list = []
     for i, block in enumerate(page.jsonld):
-        ts = expand_jsonld(block, url)
-        out.extend(ts)
-        urls.extend([url] * len(ts))
-        srcs.extend([-(i + 1)] * len(ts))
+        tail = (url, -(i + 1))
+        out += [t + tail for t in expand_jsonld(block, url)]
+    return out
 
 
-def _emit_rdfa_triples(page, url: str,
-                       out: list, urls: list, srcs: list) -> None:
+def _emit_rdfa_triples(page, url: str) -> list:
     """Shared per-page RDFa-lite emission — same subject resolution and
     IRI detection as :func:`rdfa_to_triples` (set-parity CI-tested);
     ``source_num`` 0 like the microdata facet."""
-    import hashlib
+    out: list = []
     seen_types = set()
     for item in page.rdfa:
         subj = item.subject
         if subj.startswith("_:"):
-            uh = hashlib.sha1(url.encode()).hexdigest()[:10]
-            subj = f"_:ra-{uh}-{item.subject[2:]}"
+            subj = skolem(url, "ra", subj)
         elif subj.startswith("#"):
             subj = url + subj
         for prop, value in item.props:
-            out.append((subj, prop, value,
-                        bool(re.match(r"https?://", value)), None, None))
-            urls.append(url)
-            srcs.append(0)
+            out.append((subj, prop, value, bool(_IRI_RE.match(value)),
+                        None, None, url, 0))
         for t in item.types.split():
             if (subj, t) in seen_types:
                 continue
             seen_types.add((subj, t))
-            out.append((subj, RDF_TYPE, t, True, None, None))
-            urls.append(url)
-            srcs.append(0)
+            out.append((subj, RDF_TYPE, t, True, None, None, url, 0))
+    return out
 
 
 def pages_to_combined_triples(pages: DataFrame, minimal: bool = True,
@@ -221,47 +192,36 @@ def pages_to_combined_triples(pages: DataFrame, minimal: bool = True,
     """Stages 1+1b+1d+1e+2 in ONE Arrow pass: each page's HTML is parsed
     ONCE and the CSVW-table triples, the microdata triples, the embedded
     JSON-LD triples, and the RDFa-lite triples are all emitted from the
-    same ``extract_page`` result.
+    same ``extract_page`` result — the four ``_emit_*_triples`` emitters
+    over one :func:`~.sources.html_extract.map_pages` pass.
 
-    The separate operators (:func:`pages_to_triples`,
-    :func:`microdata_to_triples`) parse every page twice — two full scans
-    of the corpus and two HTML parses per page, plus a distinct-shuffle
-    for the microdata type triples. At 10^12 documents stage 1 is the
-    dominant cost, so the pipeline uses this fused kernel; the separate
-    operators remain the oracle-checked single-facet tiers, and
+    This is the extraction stage of both :func:`web_pipeline` and the
+    streaming ``stream_pages_to_store``. The single-facet operators
+    (:func:`pages_to_triples`, :func:`pages_to_jsonld_triples`, and the
+    Column projections :func:`microdata_to_triples` and
+    :func:`rdfa_to_triples`) remain the oracle-checked references, and
     set-parity between the two paths is CI-tested
     (test_web_pipeline.test_combined_parity). The in-kernel per-page type
     dedup is equivalent to the projection's distinct over
     (item_id, itemtype, url): skolemized item ids are url-scoped and the
-    distinct includes the url."""
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
+    distinct includes the url.
+
+    ``respect_noindex=True`` drops every page whose ``<meta name="robots">``
+    says ``noindex``, inside the same parse: a pre-filter would cost a
+    second full parse pass and a semi-join."""
     default_meta_json = _default_meta_json(default_meta, minimal)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.html_extract import extract_page, _decode
-        cols = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "obj_lang"]
-        for pdf in batches:
-            out: list[tuple] = []
-            urls: list[str] = []
-            srcs: list[int] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                # robots compliance INSIDE the one parse — a pre-filter
-                # would cost a second full parse pass + a semi-join
-                if respect_noindex and _page_noindex(page):
-                    continue
-                _emit_table_triples(page, url, default_meta_json, minimal,
-                                    header_rows, out, urls, srcs)
-                _emit_microdata_triples(page, url, out, urls, srcs)
-                _emit_jsonld_triples(page, url, out, urls, srcs)
-                _emit_rdfa_triples(page, url, out, urls, srcs)
-            res = pd.DataFrame(out, columns=cols)
-            res["table_url"] = pd.Series(urls, dtype="object")
-            res["source_num"] = pd.Series(srcs, dtype="int64")
-            yield res
+    def emit(row, page):
+        if respect_noindex and _page_noindex(page):
+            return []
+        url = row.url
+        return [*_emit_table_triples(page, url, default_meta_json, minimal,
+                                     header_rows),
+                *_emit_microdata_triples(page, url),
+                *_emit_jsonld_triples(page, url),
+                *_emit_rdfa_triples(page, url)]
 
-    return pages.mapInPandas(kernel, schema=TRIPLE_SCHEMA)
+    return map_pages(pages, TRIPLE_SCHEMA, emit)
 
 
 def microdata_to_triples(pages: DataFrame) -> DataFrame:
@@ -447,25 +407,12 @@ def pages_to_links(pages: DataFrame,
     crawler-compliance contract — inside the same parse (no extra scan,
     no join against the head-meta table).
     """
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
+    def emit(row, page):
+        if respect_nofollow and _page_nofollow(page):
+            return []
+        return [(row.url, urljoin(row.url, href)) for href in page.links]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from urllib.parse import urljoin
-
-        from .sources.html_extract import _decode, extract_page
-        for pdf in batches:
-            src, dst = [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                if respect_nofollow and _page_nofollow(page):
-                    continue
-                for href in page.links:
-                    src.append(url)
-                    dst.append(urljoin(url, href))
-            yield pd.DataFrame({"src": src, "dst": dst})
-
-    return pages.mapInPandas(kernel, schema=LINKS_SCHEMA)
+    return map_pages(pages, LINKS_SCHEMA, emit)
 
 
 ANCHORS_SCHEMA = "src string, dst string, anchor string"
@@ -478,23 +425,8 @@ def pages_to_anchors(pages: DataFrame) -> DataFrame:
     aggregated downstream per dst. Same single-parse kernel, narrow, no
     shuffle; unclosed anchors (no text boundary) are skipped, matching
     PageContent.anchors semantics."""
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from urllib.parse import urljoin
-
-        from .sources.html_extract import _decode, extract_page
-        for pdf in batches:
-            src, dst, anchor = [], [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for href, text in extract_page(_decode(html)).anchors:
-                    src.append(url)
-                    dst.append(urljoin(url, href))
-                    anchor.append(text)
-            yield pd.DataFrame({"src": src, "dst": dst, "anchor": anchor})
-
-    return pages.mapInPandas(kernel, schema=ANCHORS_SCHEMA)
+    return map_pages(pages, ANCHORS_SCHEMA, lambda row, page: [
+        (row.url, urljoin(row.url, href), text) for href, text in page.anchors])
 
 
 def anchor_labels(anchors: DataFrame, min_refs: int = 1) -> DataFrame:
@@ -538,26 +470,8 @@ def pages_to_jsonld_triples(pages: DataFrame) -> DataFrame:
     microdata 0 sentinel, and identical to the fused kernel's numbering),
     so the store / canonicalization stages downstream are shared verbatim.
     """
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.html_extract import _decode, extract_page
-        for pdf in batches:
-            out: list[tuple] = []
-            urls: list[str] = []
-            srcs: list[int] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                _emit_jsonld_triples(extract_page(_decode(html)), url,
-                                     out, urls, srcs)
-            cols = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype",
-                    "obj_lang"]
-            res = pd.DataFrame(out, columns=cols)
-            res["table_url"] = pd.Series(urls, dtype="object")
-            res["source_num"] = pd.Series(srcs, dtype="int64")
-            yield res
-
-    return pages.mapInPandas(kernel, schema=TRIPLE_SCHEMA)
+    return map_pages(pages, TRIPLE_SCHEMA,
+                     lambda row, page: _emit_jsonld_triples(page, row.url))
 
 
 HEAD_META_SCHEMA = ("url string, title string, canonical string, "
@@ -577,27 +491,13 @@ def pages_to_head_meta(pages: DataFrame) -> DataFrame:
     and robots directives are the first curation gate; both need only
     this narrow single-parse stage — no shuffle.
     """
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
+    def emit(row, page):
+        directives = _robots_directives(page)
+        return [(row.url, page.title,
+                 urljoin(row.url, page.canonical) if page.canonical else None,
+                 "noindex" in directives, "nofollow" in directives)]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from urllib.parse import urljoin
-
-        from .sources.html_extract import _decode, extract_page
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                page = extract_page(_decode(html))
-                directives = _robots_directives(page)
-                rows.append((url, page.title,
-                             urljoin(url, page.canonical)
-                             if page.canonical else None,
-                             "noindex" in directives,
-                             "nofollow" in directives))
-            yield pd.DataFrame(rows, columns=["url", "title", "canonical",
-                                              "noindex", "nofollow"])
-
-    return pages.mapInPandas(kernel, schema=HEAD_META_SCHEMA)
+    return map_pages(pages, HEAD_META_SCHEMA, emit)
 
 
 OG_NS = "https://ogp.me/ns#"
@@ -613,24 +513,12 @@ def pages_to_og_triples(pages: DataFrame) -> DataFrame:
     subject is the page URL itself (OpenGraph describes the page). Narrow
     Arrow stage, TRIPLE_SCHEMA output, ``source_num`` = position within
     the page's og tags."""
-    spark = pages.sparkSession
-    ensure_package_on_executors(spark)
+    def emit(row, page):
+        og = [(k, v) for k, v in page.meta if k.startswith("og:")]
+        return [(row.url, OG_NS + k[3:], v, False, None, None, row.url, n)
+                for n, (k, v) in enumerate(og, 1)]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sources.html_extract import _decode, extract_page
-        cols = [f.name for f in TRIPLE_SCHEMA]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                n = 0
-                for k, v in extract_page(_decode(html)).meta:
-                    if k.startswith("og:"):
-                        n += 1
-                        rows.append((url, OG_NS + k[3:], v, False,
-                                     None, None, url, n))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.mapInPandas(kernel, schema=TRIPLE_SCHEMA)
+    return map_pages(pages, TRIPLE_SCHEMA, emit)
 
 
 def canonical_groups(head_meta: DataFrame) -> DataFrame:
@@ -851,10 +739,14 @@ def canonicalize_subjects(triples: DataFrame, num_perm: int = 64,
 def web_pipeline(spark: SparkSession, pages: DataFrame, out_root: str,
                  batch_id: str, entity_dict: Optional[dict[str, str]] = None,
                  canonicalize: bool = True, default_meta: Optional[dict] = None,
-                 include_microdata: bool = True,
                  incremental_canonical: bool = False,
                  respect_noindex: bool = False) -> dict:
     """Full stage 1→4 run over a pages batch; returns the commit manifest.
+
+    Stages 1+2 are the fused kernel :func:`pages_to_combined_triples`:
+    tables, microdata, JSON-LD and RDFa from one parse of each page, the
+    same extraction ``stream_pages_to_store`` runs per micro-batch.
+    ``respect_noindex`` drops robots-noindex pages inside that parse.
 
     ``incremental_canonical``: subject identity becomes GLOBAL across
     batches — each batch's local mapping is union-find-merged into the
@@ -872,18 +764,8 @@ def web_pipeline(spark: SparkSession, pages: DataFrame, out_root: str,
         return materialize(pages.limit(0).sparkSession.createDataFrame([], TRIPLE_SCHEMA),
                            out_root, batch_id)  # no-op resume hit
     held: list = []
-    if include_microdata:
-        # fused single-parse kernel: tables + microdata + JSON-LD from ONE
-        # scan, robots-noindex compliance checked inside the same parse
-        triples = pages_to_combined_triples(pages, default_meta=default_meta,
-                                            respect_noindex=respect_noindex)
-    else:
-        triples = pages_to_triples(pages, default_meta=default_meta)
-        if respect_noindex:
-            keep = pages_to_head_meta(pages).where("not noindex") \
-                .select("url")
-            triples = triples.join(
-                keep, triples["table_url"] == keep["url"], "left_semi")
+    triples = pages_to_combined_triples(pages, default_meta=default_meta,
+                                        respect_noindex=respect_noindex)
     if entity_dict:
         # branch point: the mention scan AND the final union both read the
         # base triples — without a persist, link_entities' lineage re-runs

@@ -17,8 +17,14 @@ def _docs(spark, ids):
 
 
 def _host(pages, host):
+    """The pages moved to ``host``: the url and every IRI inside the html
+    (the JSON-LD @id, the microdata itemid)."""
     return pages.withColumn(
-        "url", F.regexp_replace("url", "^http://pages\\.", f"http://{host}."))
+        "url", F.regexp_replace("url", "^http://pages\\.", f"http://{host}.")
+    ).withColumn(
+        "html", F.regexp_replace(F.col("html").cast("string"),
+                                 "http://pages\\.", f"http://{host}.")
+        .cast("binary"))
 
 
 def test_global_canonical_across_batches(spark, tmp_path):
@@ -30,10 +36,10 @@ def test_global_canonical_across_batches(spark, tmp_path):
     base = pages_from_documents(_docs(spark, [1, 2, 3]))
     web_pipeline(spark, _host(base, "a").unionByName(_host(base, "m")),
                  root, "b1", default_meta=DOC_PAGE_META,
-                 include_microdata=False, incremental_canonical=True)
+                 incremental_canonical=True)
     web_pipeline(spark, _host(base, "m").unionByName(_host(base, "z")),
                  root, "b2", default_meta=DOC_PAGE_META,
-                 include_microdata=False, incremental_canonical=True)
+                 incremental_canonical=True)
 
     m = {r["id"]: r["canonical_id"]
          for r in load_canonical_map(spark, root).collect()}
@@ -54,7 +60,7 @@ def test_first_batch_bootstraps_map(spark, tmp_path):
     base = pages_from_documents(_docs(spark, [1]))
     web_pipeline(spark, _host(base, "a").unionByName(_host(base, "m")),
                  root, "b1", default_meta=DOC_PAGE_META,
-                 include_microdata=False, incremental_canonical=True)
+                 incremental_canonical=True)
     m = {r["id"]: r["canonical_id"]
          for r in load_canonical_map(spark, root).collect()}
     assert any(k.startswith("http://m.") and v.startswith("http://a.")
@@ -83,10 +89,10 @@ def test_read_graph_canonical_applies_retroactive_merges(spark, tmp_path):
     base = pages_from_documents(_docs(spark, [1, 2]))
     web_pipeline(spark, _host(base, "m").unionByName(_host(base, "z")),
                  root, "b1", default_meta=DOC_PAGE_META,
-                 include_microdata=False, incremental_canonical=True)
+                 incremental_canonical=True)
     web_pipeline(spark, _host(base, "a").unionByName(_host(base, "m")),
                  root, "b2", default_meta=DOC_PAGE_META,
-                 include_microdata=False, incremental_canonical=True)
+                 incremental_canonical=True)
 
     def hosts(df):
         return {r["subj"].split("//")[1].split(".")[0]
@@ -109,10 +115,10 @@ def test_canonical_compaction_bakes_identities(spark, tmp_path):
     base = pages_from_documents(_docs(spark, [1, 2]))
     web_pipeline(spark, _host(base, "m").unionByName(_host(base, "z")),
                  root, "b1", default_meta=DOC_PAGE_META,
-                 include_microdata=False, incremental_canonical=True)
+                 incremental_canonical=True)
     web_pipeline(spark, _host(base, "a").unionByName(_host(base, "m")),
                  root, "b2", default_meta=DOC_PAGE_META,
-                 include_microdata=False, incremental_canonical=True)
+                 incremental_canonical=True)
     m = compact(spark, root, canonical=True)
     assert m is not None and m["lineage"]["canonical"] is True
     g = read_graph(spark, root)

@@ -51,23 +51,19 @@ def _page(meta: str, facets: str = "") -> str:
 
 
 def _table_triples(html: str) -> list:
-    out: list = []
-    _emit_table_triples(extract_page(html), "http://p.example.org/1", None,
-                        True, 1, out, [], [])
-    return out
+    return _emit_table_triples(extract_page(html), "http://p.example.org/1",
+                               None, True, 1)
 
 
 @pytest.mark.parametrize("meta", MALFORMED, ids=range(len(MALFORMED)))
 def test_malformed_meta_is_absent(meta):
     page = extract_page(_page(meta, _FACETS))
     url = "http://p.example.org/1"
-    table: list = []
-    _emit_table_triples(page, url, None, True, 1, table, [], [])
+    table = _emit_table_triples(page, url, None, True, 1)
     assert table == []
     for emit in (_emit_microdata_triples, _emit_jsonld_triples,
                  _emit_rdfa_triples):
-        facet: list = []
-        emit(page, url, facet, [], [])
+        facet = emit(page, url)
         assert facet, emit.__name__
 
 

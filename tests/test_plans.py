@@ -409,8 +409,12 @@ def test_every_python_kernel_site_ships_the_package():
         for i, line in enumerate(lines):
             if not launch.search(line):
                 continue
-            defs = [re.match(r"\s*def (\w+)", x) for x in lines[i::-1]]
-            sites.add((path.name, next(d.group(1) for d in defs if d)))
+            # the enclosing function: the nearest def indented less than
+            # the launch line (a nested kernel def is not it)
+            indent = len(line) - len(line.lstrip())
+            defs = [re.match(r"(\s*)def (\w+)", x) for x in lines[i::-1]]
+            sites.add((path.name, next(d.group(2) for d in defs
+                                       if d and len(d.group(1)) < indent)))
             window = "\n".join(lines[max(0, i - 60):i + 1])
             if not ship.search(window):
                 missing.append(f"{path.name}:{i + 1}")
@@ -420,6 +424,13 @@ def test_every_python_kernel_site_ships_the_package():
             ("triples.py", "rows_to_triples"),
             ("csv_source.py", "read_lines"),
             ("csv_source.py", "read_rows")} <= sites
+    # every pages → rows stage runs through the one page kernel: the only
+    # other launch sites of the page modules map triples or N-Triples lines
+    page_modules = {"web.py", "html_extract.py", "ingest.py"}
+    assert {x for x in sites if x[0] in page_modules} == {
+        ("html_extract.py", "map_pages"),
+        ("web.py", "link_entities"),
+        ("ingest.py", "stream_ntriples_to_store")}
 
 
 def test_csvw_to_triples_one_python_kernel_on_every_slot(spark, tmp_path):

@@ -242,8 +242,8 @@ def test_stream_sessionize_matches_batch_query(spark, tmp_path):
 
 
 def test_stream_pages_to_store_combined_facets(spark, tmp_path):
-    """combined=True streams the fused three-facet kernel (tables +
-    microdata + JSON-LD) with in-kernel robots compliance — the stream
+    """The stream runs the fused kernel (tables + microdata + JSON-LD +
+    RDFa) with in-kernel robots compliance — the stream
     path and the batch path share the exact stage, so per-facet subjects
     all land in the store and noindex pages (doc_id % 7 == 3) emit
     nothing."""
@@ -258,7 +258,7 @@ def test_stream_pages_to_store_combined_facets(spark, tmp_path):
 
     q = stream_pages_to_store(spark, in_dir, store, ckpt,
                               default_meta=DOC_PAGE_META,
-                              combined=True, respect_noindex=True)
+                              respect_noindex=True)
     q.awaitTermination(180)
     subs = {r.subj for r in
             read_graph(spark, store).select("subj").distinct().collect()}

@@ -326,6 +326,35 @@ def test_combined_parity_jsonld_pages(spark):
     assert a == b
 
 
+def test_web_pipeline_respect_noindex(spark, tmp_path):
+    """The batch path drops robots-noindex pages (doc_id % 7 == 3) inside
+    the fused parse: the store holds no triple of such a page, and what it
+    commits is exactly the fused kernel's triples of the other pages."""
+    from rdf_tabular_spark.sinks.graph_store import read_graph
+    from rdf_tabular_spark.sources.pages import (DOC_PAGE_META, doc_page_url,
+                                                 pages_from_documents)
+    from rdf_tabular_spark.web import pages_to_combined_triples
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
+        .filter("doc_id >= 0 and doc_id <= 20")
+    pages = pages_from_documents(docs).persist()
+    noindex = [doc_page_url(d) for d in range(21) if d % 7 == 3]
+    root = str(tmp_path / "g")
+    web_pipeline(spark, pages, root, "b1", default_meta=DOC_PAGE_META,
+                 canonicalize=False, respect_noindex=True)
+    terms = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "obj_lang"]
+    g = read_graph(spark, root)
+    stored = g.select(terms).collect()
+    kept = pages.filter(~F.col("url").isin(noindex))
+    want = pages_to_combined_triples(kept, default_meta=DOC_PAGE_META) \
+        .select(terms).collect()
+    hit = g.filter(F.col("table_url").isin(noindex)).count()
+    pages.unpersist()
+    assert hit == 0
+    assert not any(r["subj"].startswith(u + "#")
+                   for r in stored for u in noindex)
+    assert want and set(map(tuple, stored)) == set(map(tuple, want))
+
+
 def test_graph_store_compaction(spark, tmp_path):
     """Compaction merges live batches into one (cross-batch re-dedup with
     summed support), shadows the inputs atomically via the `replaces`

@@ -5,15 +5,32 @@ Generic over any (id, text) DataFrame; used for (a) subject canonicalization
 blocking in the KG pipeline (north_rule stage 3) and (b) the document
 near-duplicate queries of the query registry (``dedup_minhash_scale_*``).
 
-Plan shape (what matters at 100 TB):
+Plan shape:
   signatures: narrow Arrow stage (numpy, O(n_rows · num_perm))
-  banding:    explode to (band, band_hash, id) — num_bands× row inflation of a
-              THIN table (3 cols), then ONE shuffle: self-join on
-              (band, band_hash) with id< id to form candidate pairs.
-  verify:     estimated Jaccard on the candidates only: two joins back to
-              the signatures, which AQE turns into broadcasts at run time
-              when the candidate set is small.
-AQE skew-join handles hot buckets; a bucket-size cap guards degenerate bands.
+  buckets:    explode to num_bands (band, band_hash) keys per row and ONE
+              groupBy on them that collects each bucket's members (and their
+              signatures, when verifying) — the one shuffle of the bands.
+  pairs:      formed inside each bucket of at most max_bucket members by
+              Column expressions, with their estimated Jaccard when
+              verifying (pairs below the threshold drop before they are
+              shuffled); then one groupBy(a, b) counts the bands a pair
+              collides in (min_band_matches). No self-join, no join back to
+              the signatures, nothing persisted.
+The bucket-size cap guards degenerate (hot) buckets.
+
+Cost: two shuffles and no persist, which at crawl-batch size (a few hundred
+signatures) is 3 Spark jobs against 8 for a band self-join plus two joins
+back to the signatures. Verifying inside the buckets carries each
+signature once per band through the band shuffle, and pairs are formed by
+interpreted higher-order functions rather than a codegen'd join. On a
+20k-page ``synth_pages`` crawl (866,799 triples, ``canonicalize_subjects``
+defaults, 4 cores, 3 warm runs) the whole canonicalization took
+17.0-17.4 s against 16.4-19.7 s with the self-join plan, in 11 jobs
+against 17, but its shuffles wrote 420 MB against 121 MB (405 MB of it
+the band shuffle). On that crawl's 122,838 distinct-profile signatures
+the verified-edge pass alone took 10.7-12.8 s against 9.1-9.6 s, and an
+ids-only bucket pass 9.3-10.6 s before any verification, so collecting
+only ids and joining the signatures back afterwards would not be faster.
 """
 
 from __future__ import annotations
@@ -102,12 +119,12 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     return df.mapInPandas(kernel, schema=schema)
 
 
-def lsh_bands(sig_df: DataFrame, num_bands: int = 16) -> DataFrame:
-    """(id, sig) → (id, band, band_hash): thin exploded table for the
-    bucket join. Pure Column expressions (codegen), no Python."""
-    num_perm = None  # derived per row with slice
+def _band_keys(num_bands: int):
+    """The ``array<struct<band, band_hash>>`` of a row's signature ``sig``:
+    band b hashes the b-th of ``num_bands`` equal slices. Pure Column
+    expressions (codegen), no Python."""
     rows_per_band = F.floor(F.size("sig") / num_bands).cast("int")
-    bands = F.transform(
+    return F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
         lambda b: F.struct(
             b.alias("band"),
@@ -116,50 +133,71 @@ def lsh_bands(sig_df: DataFrame, num_bands: int = 16) -> DataFrame:
                 lambda x: x.cast("string")))).alias("band_hash"),
         ),
     )
-    return (sig_df.select("id", F.explode(bands).alias("bh"))
-            .select("id", F.col("bh.band").alias("band"), F.col("bh.band_hash").alias("band_hash")))
+
+
+def _bucket_pairs(sig_df: DataFrame, num_bands: int, max_bucket: int,
+                  min_band_matches: int, threshold: float | None) -> DataFrame:
+    """The one bucket pass behind :func:`lsh_candidate_pairs` and
+    :func:`signature_similarity_edges`: one ``groupBy(band, band_hash)``
+    collects each bucket's members (with their signatures when
+    ``threshold`` is given), and the pairs a < b of every bucket of 2 to
+    ``max_bucket`` members are formed inside that bucket, together with
+    their ``sim``, by Column expressions, and those below ``threshold``
+    drop there; one ``groupBy(a, b)`` then keeps the pairs that collide in
+    at least ``min_band_matches`` bands. → (a, b[, sim])."""
+    with_sig = threshold is not None
+    member = F.struct("id", "sig") if with_sig else F.struct("id")
+    banded = sig_df.select(*(["id", "sig"] if with_sig else ["id"]),
+                           F.explode(_band_keys(num_bands)).alias("bh"))
+    buckets = (banded.groupBy(F.col("bh.band").alias("band"),
+                              F.col("bh.band_hash").alias("band_hash"))
+               # sorted by id, so a pair of distinct ids comes out as a < b
+               .agg(F.array_sort(F.collect_list(member)).alias("m"))
+               .filter(F.size("m").between(2, max_bucket)))
+
+    def pair(x, y):
+        fields = [x["id"].alias("a"), y["id"].alias("b")]
+        if with_sig:
+            fields.append((F.size(F.filter(
+                F.zip_with(x["sig"], y["sig"], lambda p, q: p == q),
+                lambda eq: eq)) / F.size(x["sig"])).alias("sim"))
+        return F.struct(*fields)
+
+    pairs = buckets.select(F.explode(F.flatten(F.transform(
+        "m", lambda x, i: F.transform(F.slice("m", i + 2, F.size("m")),
+                                      lambda y: pair(x, y))))).alias("p")
+                           ).select("p.*").filter(F.col("a") < F.col("b"))
+    agg = [F.count("*").alias("_nb")]
+    if with_sig:
+        # a pair's sim is the same in every band it collides in, so the
+        # threshold can drop it before the pair shuffle
+        pairs = pairs.filter(F.col("sim") >= threshold)
+        agg.append(F.max("sim").alias("sim"))  # one value per pair
+    return (pairs.groupBy("a", "b").agg(*agg)
+            .filter(F.col("_nb") >= min_band_matches).drop("_nb"))
 
 
 def lsh_candidate_pairs(sig_df: DataFrame, num_bands: int = 16,
                         max_bucket: int = 2000,
                         releases: list | None = None,
                         min_band_matches: int = 1) -> DataFrame:
-    """→ distinct (a, b) candidate pairs, a < b. One shuffle (self-join on
-    band keys); degenerate buckets (> max_bucket ids) are dropped with the cap
-    logged into the plan rather than silently exploding quadratically.
+    """→ distinct (a, b) candidate pairs, a < b, formed inside each
+    (band, band_hash) bucket of one grouping pass (:func:`_bucket_pairs`);
+    degenerate buckets (> max_bucket ids) are dropped rather than
+    silently exploding quadratically.
 
     ``min_band_matches``: require the pair to collide in at least this many
-    bands (the count falls out of the same join — no extra shuffle). With
-    r-row bands, P(k of b bands match) falls off as C(b,k)·J^rk, so k=2
-    cuts low-similarity accidental collisions ~50-100x while keeping
-    recall at the threshold ≳0.93 — the difference between a 3M-pair and a
-    40k-pair verification join on a corpus whose profiles draw from small
-    vocabularies (measured on the 20k-page scenario).
+    bands (the count falls out of the pair grouping). With r-row bands,
+    P(k of b bands match) falls off as C(b,k)·J^rk, so k=2 cuts
+    low-similarity accidental collisions ~50-100x while keeping recall at
+    the threshold ≳0.93 — the difference between a 3M-pair and a 40k-pair
+    candidate set on a corpus whose profiles draw from small vocabularies
+    (measured on the 20k-page scenario).
 
-    The FILTERED band table is persisted — the self-join's two sides would
-    otherwise each recompute the bucket-size window AND the signature
-    kernel's whole upstream lineage (persisting upstream of the window
-    still leaves the window+filter running twice, once per join side —
-    a full extra pass over the band table at scale)."""
-    bands = lsh_bands(sig_df, num_bands)
-    # prune oversized buckets before the quadratic pair join
-    sized = bands.withColumn(
-        "bucket_n", F.count("*").over(
-            __import__("pyspark.sql.window", fromlist=["Window"]).Window
-            .partitionBy("band", "band_hash")))
-    bands = sized.filter(F.col("bucket_n") <= max_bucket).drop("bucket_n") \
-        .persist()
-    if releases is not None:
-        releases.append(bands)  # caller unpersists after its terminal action
-    left = bands.alias("l")
-    right = bands.alias("r")
-    hits = (left.join(right, on=["band", "band_hash"])
-            .filter(F.col("l.id") < F.col("r.id"))
-            .select(F.col("l.id").alias("a"), F.col("r.id").alias("b")))
-    if min_band_matches > 1:
-        return (hits.groupBy("a", "b").agg(F.count("*").alias("_nb"))
-                .filter(F.col("_nb") >= min_band_matches).drop("_nb"))
-    return hits.distinct()
+    ``releases`` is accepted for callers that collect persisted frames;
+    nothing is persisted here, so nothing is appended."""
+    return _bucket_pairs(sig_df, num_bands, max_bucket, min_band_matches,
+                         threshold=None)
 
 
 def signature_similarity_edges(sig_df: DataFrame, num_bands: int = 16,
@@ -170,27 +208,10 @@ def signature_similarity_edges(sig_df: DataFrame, num_bands: int = 16,
     """Candidate pairs verified by estimated Jaccard (matching minhash
     fraction) ≥ threshold → (a, b, sim) edges.
 
-    Verification is two plain equi-joins of the candidate pairs with the
-    signature table, one per endpoint. AQE sees the candidate set's real
-    size once its shuffle stage has run and broadcasts whichever side is
-    small (a few thousand pairs at crawl-batch size), so the 64-long
-    signature arrays are scanned narrowly instead of shuffled; at scale,
-    where the pair set is the big side, the joins stay shuffle joins.
-
-    ``releases``: optional list that receives every DataFrame persisted
-    inside (the LSH band table) — the caller unpersists them after its
-    terminal action so storage memory doesn't accumulate across batches
-    in a long-lived driver."""
-    pairs = lsh_candidate_pairs(sig_df, num_bands, max_bucket, releases,
-                                min_band_matches)
-    sigs = sig_df.select(F.col("id"), F.col("sig"))
-    sim = (F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                           lambda eq: eq)) / F.size("sig_a"))
-    joined = (pairs
-              .join(sigs.withColumnsRenamed({"id": "a", "sig": "sig_a"}),
-                    on="a")
-              .join(sigs.withColumnsRenamed({"id": "b", "sig": "sig_b"}),
-                    on="b"))
-    return (joined.withColumn("sim", sim)
-            .filter(F.col("sim") >= threshold)
-            .select("a", "b", "sim"))
+    Verification happens inside the bucket pass: each bucket carries its
+    members' signatures, so a pair's ``sim`` is computed where the pair is
+    formed — no join back to the signature table. The same pairs as
+    :func:`lsh_candidate_pairs`, minus those below ``threshold``.
+    ``releases``: as in :func:`lsh_candidate_pairs`, nothing is persisted."""
+    return _bucket_pairs(sig_df, num_bands, max_bucket, min_band_matches,
+                         threshold)

@@ -167,9 +167,11 @@ def materialize(triples: DataFrame, root: str, batch_id: str,
     ``pred_buckets=None`` sizes the bucket count to the batch
     (:func:`sized_pred_buckets`): the deduplicated batch is persisted,
     counted once, written from the cache and released. An explicit count
-    skips that job. Either way the batch writes one file per bucket dir,
-    and the triple and per-bucket counts are observed on the write itself
-    (``pyspark.sql.Observation``) — no read-back of the written files.
+    (``web_pipeline`` sizes one from the triples its canonicalization
+    cached) skips that job. Either way the batch writes one file per
+    bucket dir, and the triple and per-bucket counts are observed on the
+    write itself (``pyspark.sql.Observation``) — no read-back of the
+    written files.
     """
     if batch_id in processed_batches(root):
         return _read_manifest(root, batch_id)
@@ -384,9 +386,11 @@ def read_predicate(spark: SparkSession, root: str, pred: str,
     """Predicate-restricted read with PARTITION PRUNING: the salted
     pred_bucket scheme places a predicate's triples in at most
     ``DEFAULT_SALT`` of a batch's ``pred_buckets`` partitions (bucket =
-    (xxhash64(pred) + salt) mod buckets, salt ∈ [0, SALT)), so the scan
-    enumerates those driver-side and prunes the rest — reading SALT/buckets
-    of a batch instead of all of it (16/64 = 25% for a 64-bucket batch).
+    (xxhash64(pred) + salt) mod buckets, salt ∈ [0, SALT)), so the filter
+    lists those buckets as expressions over the literal pred, which the
+    optimizer folds to constants (no job), and the scan prunes the rest —
+    reading SALT/buckets of a batch instead of all of it (16/64 = 25% for
+    a 64-bucket batch).
     A sized batch of at most SALT buckets (under ~16M triples) keeps every
     predicate in every bucket, so its few files are all read. The exact
     pred equality filter is pushed to the parquet scan on top of the
@@ -407,9 +411,9 @@ def read_predicate(spark: SparkSession, root: str, pred: str,
         counts.add(pred_buckets)
     if not counts:
         counts = {DEFAULT_PRED_BUCKETS}
-    h = spark.range(1).select(F.xxhash64(F.lit(pred)).alias("h")).first()["h"]
-    wanted = sorted({int((h + s) % n)
-                     for n in counts for s in range(DEFAULT_SALT)})
+    h = F.xxhash64(F.lit(pred))
+    wanted = [F.pmod(h + F.lit(s), F.lit(n)).cast("int")
+              for n in sorted(counts) for s in range(DEFAULT_SALT)]
     g = read_graph(spark, root, batches=batches)
     return g.filter(F.col("pred_bucket").isin(wanted)) \
             .filter(F.col("pred") == pred)
@@ -935,21 +939,22 @@ def read_subject(spark: SparkSession, root: str, subj: str,
     pred_bucket partition pruning cannot help here — a subject's triples
     spread across predicate buckets by design — but ``subj_bucket`` is a
     data column with parquet min/max row-group statistics, so pushing the
-    bucket equality (computed with the SAME JVM xxhash64 the writer used,
-    via a one-row literal job) skips every row group whose bucket range
-    excludes it, and the subj equality itself also reaches the scan
-    (PushedFilters, CI-audited). On a sorted/compacted store this reads
-    ~1/SUBJ_BUCKETS of the data.
+    bucket equality (the SAME JVM xxhash64 the writer used, over a literal,
+    which the optimizer folds to a constant: no job) skips every row group
+    whose bucket range excludes it, and the subj equality itself also
+    reaches the scan (PushedFilters, CI-audited). On a sorted/compacted
+    store this reads ~1/SUBJ_BUCKETS of the data.
 
     The modulus is ``SUBJ_BUCKETS`` for every batch whose manifest records
     ``subj_buckets``; older batches used their pred_bucket count, so their
     bucket is unioned in."""
-    h = spark.range(1).select(F.xxhash64(F.lit(subj))).first()[0]
     moduli = {m.get("subj_buckets", m.get("pred_buckets", SUBJ_BUCKETS))
               for m in _manifests(root) if m.get("status") == "committed"
               and m.get("kind") != "retraction"} or {SUBJ_BUCKETS}
+    wanted = [F.pmod(F.xxhash64(F.lit(subj)), F.lit(n)).cast("int")
+              for n in sorted(moduli)]
     df = read_graph(spark, root, batches)
-    return df.filter(F.col("subj_bucket").isin(sorted({h % n for n in moduli}))
+    return df.filter(F.col("subj_bucket").isin(wanted)
                      & (F.col("subj") == subj))
 
 

@@ -539,7 +539,12 @@ def map_pages(pages: DataFrame, schema: StructType | str,
     page's output tuples in ``schema`` order (``row`` is the input row as a
     named tuple: ``row.url``, ``row.warc_ts``, ...), and each Arrow batch
     in becomes one batch out. Narrow, no shuffle; the JVM/Python boundary
-    of stage 1 lives here and nowhere else."""
+    of stage 1 lives here and nowhere else.
+
+    The output records its pass as ``_page_pass = (pages, schema, emit)``
+    (see :func:`page_pass`), so a per-page Python stage over it can extend
+    ``emit`` and rerun this one pass instead of adding a second Python
+    runner to every task (``web.link_entities(keep_input=True)``)."""
     from ..session import ensure_package_on_executors
     ensure_package_on_executors(pages.sparkSession)
     if isinstance(schema, str):
@@ -553,7 +558,16 @@ def map_pages(pages: DataFrame, schema: StructType | str,
                 out.extend(emit(row, extract_page(_decode(row.html))))
             yield pd.DataFrame(out, columns=cols)
 
-    return pages.mapInPandas(kernel, schema=schema)
+    mapped = pages.mapInPandas(kernel, schema=schema)
+    mapped._page_pass = (pages, schema, emit)
+    return mapped
+
+
+def page_pass(df: DataFrame):
+    """``(pages, schema, emit)`` of a DataFrame exactly as :func:`map_pages`
+    returned it, else None: any further transformation is a new DataFrame,
+    and a persisted one is read from its cache, not re-run."""
+    return None if df.is_cached else vars(df).get("_page_pass")
 
 
 def skolem(url: str, prefix: str, label: str) -> str:

@@ -165,8 +165,10 @@ def stream_pages_to_store(spark: SparkSession, input_dir: str,
     Stages 1-2 are identical to the batch path (``web_pipeline``): the
     fused kernel ``web.pages_to_combined_triples`` (tables, microdata,
     JSON-LD and RDFa from one parse of each page, robots-noindex pages
-    dropped inside that parse when ``respect_noindex``) plus optional
-    broadcast entity linking — all narrow.
+    dropped inside that parse when ``respect_noindex``) and, with
+    ``entity_dict``, broadcast entity linking inside that pass
+    (``web.link_entities`` with ``keep_input=True``): one page parse per
+    micro-batch, all narrow.
 
     Exactly-once by the same composition as
     :func:`stream_ntriples_to_store`: file-source checkpoint assigns each
@@ -183,7 +185,7 @@ def stream_pages_to_store(spark: SparkSession, input_dir: str,
     triples = pages_to_combined_triples(pages, default_meta=default_meta,
                                         respect_noindex=respect_noindex)
     if entity_dict:
-        triples = triples.unionByName(link_entities(triples, entity_dict))
+        triples = link_entities(triples, entity_dict, keep_input=True)
 
     def commit(batch_df, epoch_id: int) -> None:
         materialize(batch_df, store_root,

@@ -11,9 +11,10 @@ north_rule stages:
 
 All per-row logic runs inside Arrow-batched mapInPandas kernels (every
 pages → rows stage through ``sources.html_extract.map_pages``); stages 1+2
-fuse into ONE narrow pass over the pages table (no shuffle until the
-canonicalization groupBy), which is what survives a 10^12-document scan:
-the cost is a single read of the html column + CPU, embarrassingly parallel.
+fuse into ONE narrow pass over the pages table, entity linking included
+(no shuffle until the canonicalization groupBy), which is what survives a
+10^12-document scan: the cost is a single read of the html column + CPU,
+embarrassingly parallel.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from .csvw.model import load_metadata
 from .operators.triples import (TRIPLE_SCHEMA, TripleKernel,
                                 compile_mapping)
 from .session import ensure_package_on_executors
-from .sources.html_extract import map_pages, skolem
+from .sources.html_extract import map_pages, page_pass, skolem
 
 KG_MENTIONS = "https://kg.example.org/ontology#mentions"
 KG_RELATED = "https://kg.example.org/ontology#relatedTo"
@@ -297,56 +298,100 @@ def rdfa_to_triples(pages: DataFrame) -> DataFrame:
     return props.unionByName(types)
 
 
+class EntityScorer:
+    """Mention detection + link scoring against an entity dictionary
+    (surface → entity IRI): an exact surface match scores 1.0, otherwise
+    the best token-set Jaccard among the surfaces that share a token with
+    the literal, kept at ``min_score`` or above. The token inverted index
+    is built once per scorer, i.e. once per task."""
+
+    def __init__(self, entities: dict[str, str], min_score: float = 0.5):
+        self.entities = entities
+        self.min_score = min_score
+        self.tokens = {s: frozenset(s.lower().split()) for s in entities}
+        self.index: dict[str, list[str]] = {}
+        for surface, toks in self.tokens.items():
+            for t in toks:
+                self.index.setdefault(t, []).append(surface)
+
+    def link(self, obj: str) -> Optional[str]:
+        """The entity IRI a literal mentions, or None."""
+        iri = self.entities.get(obj)
+        if iri is not None:
+            return iri
+        otoks = frozenset(obj.lower().split())
+        best, best_s = None, 0.0
+        for c in {c for t in otoks for c in self.index.get(t, ())}:
+            ct = self.tokens[c]
+            s = len(otoks & ct) / len(otoks | ct)
+            if s > best_s:
+                best, best_s = c, s
+        return self.entities[best] if best is not None \
+            and best_s >= self.min_score else None
+
+    def mentions(self, triples) -> list[tuple]:
+        """The ``kg:mentions`` triples of the literal triples among
+        ``triples`` (TRIPLE_SCHEMA tuples), each keeping its literal's
+        ``table_url`` and ``source_num``."""
+        out = []
+        for subj, _, obj, is_iri, _, _, turl, snum in triples:
+            if is_iri is None or is_iri or obj is None:
+                continue
+            iri = self.link(obj)
+            if iri is not None:
+                out.append((subj, KG_MENTIONS, iri, True, None, None, turl,
+                            int(snum)))
+        return out
+
+
 def link_entities(triples: DataFrame, entity_dict: dict[str, str],
-                  min_score: float = 0.5) -> DataFrame:
+                  min_score: float = 0.5, keep_input: bool = False) -> DataFrame:
     """Stage 2b: mention detection + link scoring against a broadcast
     entity dictionary → (subj, kg:mentions, entity_iri) triples.
 
     The dictionary ships once per executor via broadcast (north_rule:
     "batched mention detection and entity-link scoring against a broadcast
-    entity dictionary"); scoring is token-set Jaccard with an exact-match
-    fast path, vectorized over Arrow batches. Narrow — no shuffle.
+    entity dictionary"); scoring is :class:`EntityScorer`'s token-set
+    Jaccard with an exact-match fast path, vectorized over Arrow batches.
+    Narrow — no shuffle.
+
+    ``keep_input`` → input ∪ mentions, in one pass over the input. When the
+    input is a page pass exactly as ``map_pages`` returned it (the
+    pipeline's extraction, :func:`pages_to_combined_triples`), linking runs
+    inside that pass: each page's emitter appends the mentions of its own
+    triples, so the plan keeps one Python node over the page scan. Any
+    other input streams through this kernel, each Arrow batch ahead of its
+    mentions. Either way nothing is persisted or read twice, and no union
+    is planned.
     """
     spark = triples.sparkSession
     ensure_package_on_executors(spark)
     bc = spark.sparkContext.broadcast(entity_dict)
 
-    literals = triples.filter(~F.col("obj_is_iri") & F.col("obj").isNotNull())
+    fused = page_pass(triples) if keep_input else None
+    if fused is not None:
+        pages, schema, emit = fused
+        scorer = None
+
+        def linked(row, page):
+            nonlocal scorer
+            if scorer is None:  # once per task
+                scorer = EntityScorer(bc.value, min_score)
+            out = list(emit(row, page))
+            return out + scorer.mentions(out)
+        return map_pages(pages, schema, linked)
+
+    cols = TRIPLE_SCHEMA.fieldNames()
+    literals = (triples.select(*cols) if keep_input else
+                triples.filter(~F.col("obj_is_iri") & F.col("obj").isNotNull()))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ents: dict[str, str] = bc.value
-        # token inverted index for fuzzy candidates, built once per task
-        inv: dict[str, list[str]] = {}
-        tokset: dict[str, frozenset] = {}
-        for surface in ents:
-            toks = frozenset(surface.lower().split())
-            tokset[surface] = toks
-            for t in toks:
-                inv.setdefault(t, []).append(surface)
-        cols = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "obj_lang",
-                "table_url", "source_num"]
+        scorer = EntityScorer(bc.value, min_score)
         for pdf in batches:
-            out: list[tuple] = []
-            for subj, obj, turl, snum in zip(pdf["subj"], pdf["obj"],
-                                             pdf["table_url"], pdf["source_num"]):
-                iri = ents.get(obj)
-                score = 1.0 if iri is not None else 0.0
-                if iri is None:
-                    otoks = frozenset(str(obj).lower().split())
-                    cands: set[str] = set()
-                    for t in otoks:
-                        cands.update(inv.get(t, ()))
-                    best, best_s = None, 0.0
-                    for c in cands:
-                        ct = tokset[c]
-                        s = len(otoks & ct) / len(otoks | ct)
-                        if s > best_s:
-                            best, best_s = c, s
-                    if best is not None and best_s >= min_score:
-                        iri, score = ents[best], best_s
-                if iri is not None:
-                    out.append((subj, KG_MENTIONS, iri, True, None, None, turl, int(snum)))
-            yield pd.DataFrame(out, columns=cols)
+            if keep_input:
+                yield pdf
+            yield pd.DataFrame(scorer.mentions(
+                pdf[cols].itertuples(index=False, name=None)), columns=cols)
 
     # NB: no dropDuplicates here — dedup happens once, at materialization
     # (stage 4), so the only shuffles in the whole pipeline are the
@@ -653,28 +698,31 @@ def canonicalize_subjects(triples: DataFrame, num_perm: int = 64,
     mapping, so the rewrite is a broadcast join against the full stream.
 
     The mapping is materialized eagerly (localCheckpoint — it is tiny: only
-    clustered subjects), so every persist upstream of it (profiles,
-    member_map, sigs, LSH bands) is released before returning. The two
-    persists that must outlive the call — ``triples``, scanned again by the
-    caller's terminal action over the rewrite, and the mapping's checkpoint
-    — are appended to ``releases`` for the caller to unpersist (long-lived
-    drivers would otherwise accumulate storage memory across batches); with
-    ``releases=None`` both are left cached.
+    clustered subjects), so the one persist upstream of it (``member_map``,
+    the profiles tagged with their representative) is released before
+    returning. The two persists that must outlive the call — ``triples``,
+    scanned again by the caller's terminal action over the rewrite, and the
+    mapping's checkpoint — are appended to ``releases`` for the caller to
+    unpersist (long-lived drivers would otherwise accumulate storage memory
+    across batches); with ``releases=None`` both are left cached.
 
-    The near-dup tier's rep → canonical map comes back from
+    The near-dup tier is :func:`~.operators.minhash.signature_similarity_edges`:
+    one bucket pass that forms and verifies the pairs inside each LSH
+    bucket. Its rep → canonical map comes back from
     :func:`~.operators.components.canonical_mapping` as a LocalRelation at
     crawl-batch size, so the member join broadcasts it instead of
-    shuffling ``member_map``.
+    shuffling ``member_map``. That map's edge collect is the first action
+    over ``triples``: it runs the extraction and fills the triples' cache.
     """
     from .operators.components import canonical_mapping, rewrite_triples
     from .operators.minhash import minhash_signatures, signature_similarity_edges
 
     # Persist at every DAG-reuse boundary: ``triples`` feeds both the profile
     # aggregation and the final rewrite join — without the persist the whole
-    # pages→triples extraction would run twice; ``sigs`` feeds the band join
-    # (2 sides) and the verification join (2 more) — 4 recomputes of the
-    # signature kernel otherwise. All persists are small relative to the
-    # corpus (triples are post-extraction; sigs are id + k longs).
+    # pages→triples extraction would run twice; ``member_map`` feeds the
+    # signatures and the member join. The signatures feed only the one LSH
+    # bucket pass, so they are not persisted. Both persists are small
+    # relative to the corpus (triples are post-extraction).
     from pyspark.sql.window import Window
 
     triples = triples.persist()
@@ -702,14 +750,13 @@ def canonicalize_subjects(triples: DataFrame, num_perm: int = 64,
             .select("subj", "profile"))
 
     sigs = minhash_signatures(reps, "subj", "profile", num_perm=num_perm,
-                              token_sep="|").persist()
-    _owned = [member_map, sigs]
+                              token_sep="|")
     try:
         # min_band_matches default 2: web-corpus profiles draw from small
         # vocabularies, so single-band collisions between genuinely
         # different records dominate the candidate set (measured: 3M pairs
-        # for 1.3k true edges at 20k pages, and the verify join then
-        # shuffles 64-long sig arrays per pair — 60 s of a 78 s stage).
+        # for 1.3k true edges at 20k pages, when verification joined 64-long
+        # sig arrays per pair — 60 s of a 78 s stage).
         # Requiring 2 of 8 matching bands keeps recall ≥0.93 at the 0.9
         # threshold and cuts candidates ~50x. Recall-sensitive callers can
         # pass min_band_matches=1 to restore exhaustive banding (~8% more
@@ -717,7 +764,6 @@ def canonicalize_subjects(triples: DataFrame, num_perm: int = 64,
         edges = signature_similarity_edges(sigs, num_bands=num_bands,
                                            threshold=threshold,
                                            max_bucket=max_bucket,
-                                           releases=_owned,
                                            min_band_matches=min_band_matches)
         rep_mapping = canonical_mapping(edges)  # rep → canonical (near-dup tier)
         mapping = (member_map
@@ -731,8 +777,7 @@ def canonicalize_subjects(triples: DataFrame, num_perm: int = 64,
         if releases is not None:
             releases.append(_CheckpointRelease(mapping))
     finally:
-        for df in _owned:
-            df.unpersist()
+        member_map.unpersist()
     return rewrite_triples(triples, mapping), mapping
 
 
@@ -745,8 +790,17 @@ def web_pipeline(spark: SparkSession, pages: DataFrame, out_root: str,
 
     Stages 1+2 are the fused kernel :func:`pages_to_combined_triples`:
     tables, microdata, JSON-LD and RDFa from one parse of each page, the
-    same extraction ``stream_pages_to_store`` runs per micro-batch.
+    same extraction ``stream_pages_to_store`` runs per micro-batch. With
+    ``entity_dict``, :func:`link_entities` (``keep_input=True``) links
+    inside that pass: each page's ``kg:mentions`` triples are appended to
+    its own, and nothing is persisted or read twice before
+    canonicalization.
     ``respect_noindex`` drops robots-noindex pages inside that parse.
+
+    With ``canonicalize``, the store write is sized
+    (``pred_buckets=sized_pred_buckets(count)``) from a count of the
+    triples :func:`canonicalize_subjects` has cached, so ``materialize``
+    persists and counts nothing of its own.
 
     ``incremental_canonical``: subject identity becomes GLOBAL across
     batches — each batch's local mapping is union-find-merged into the
@@ -759,28 +813,28 @@ def web_pipeline(spark: SparkSession, pages: DataFrame, out_root: str,
     query-time source of truth, and an offline compaction can rewrite old
     batches — the Iceberg maintenance-job split.
     """
-    from .sinks.graph_store import materialize, processed_batches
+    from .sinks.graph_store import (materialize, processed_batches,
+                                    sized_pred_buckets)
     if batch_id in processed_batches(out_root):
         return materialize(pages.limit(0).sparkSession.createDataFrame([], TRIPLE_SCHEMA),
                            out_root, batch_id)  # no-op resume hit
-    held: list = []
-    triples = pages_to_combined_triples(pages, default_meta=default_meta,
-                                        respect_noindex=respect_noindex)
-    if entity_dict:
-        # branch point: the mention scan AND the final union both read the
-        # base triples — without a persist, link_entities' lineage re-runs
-        # the whole HTML extraction a second time inside the union
-        triples = triples.persist()
-        held.append(triples)
-        mentions = link_entities(triples, entity_dict)
-        triples = triples.unionByName(mentions)
     if incremental_canonical and not canonicalize:
         raise ValueError(
             "incremental_canonical requires canonicalize=True — the global "
             "map can only grow from a batch that was canonicalized")
+    held: list = []
+    triples = pages_to_combined_triples(pages, default_meta=default_meta,
+                                        respect_noindex=respect_noindex)
+    if entity_dict:
+        triples = link_entities(triples, entity_dict, keep_input=True)
+    pred_buckets = None
     pending_map_commit = False
     if canonicalize:
-        triples, mapping = canonicalize_subjects(triples, releases=held)
+        extracted = triples
+        triples, mapping = canonicalize_subjects(extracted, releases=held)
+        # canonicalize_subjects left the extracted triples cached: counting
+        # them reads memory, not pages
+        pred_buckets = sized_pred_buckets(extracted.count())
         if incremental_canonical:
             from .operators.components import merge_mappings, rewrite_triples
             from .sinks.graph_store import (load_canonical_map,
@@ -804,7 +858,8 @@ def web_pipeline(spark: SparkSession, pages: DataFrame, out_root: str,
                            else "canonicalize") if canonicalize else None,
                           "materialize"]}
     try:
-        manifest = materialize(triples, out_root, batch_id, lineage=lineage)
+        manifest = materialize(triples, out_root, batch_id, lineage=lineage,
+                               pred_buckets=pred_buckets)
         if pending_map_commit:
             from .sinks.graph_store import commit_canonical_map
             commit_canonical_map(out_root, batch_id)

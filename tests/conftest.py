@@ -1,5 +1,8 @@
+import contextlib
 import os
 import sys
+import types
+import uuid
 
 import pytest
 
@@ -23,3 +26,26 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """→ ``count_jobs()``: a context manager whose value's ``n`` is, on
+    exit, the number of Spark jobs run inside the block. The block runs
+    under a job group of its own, and its job ids are read back with
+    ``statusTracker().getJobIdsForGroup`` once the listener bus has
+    delivered every job event."""
+    @contextlib.contextmanager
+    def counting():
+        sc = spark.sparkContext
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        box = types.SimpleNamespace(n=None)
+        try:
+            yield box
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            box.n = len(sc.statusTracker().getJobIdsForGroup(group))
+    return counting

@@ -644,3 +644,68 @@ def test_schema_drift_joins_summaries_not_triples(spark):
     assert "hashpartitioning(cs" in p, "join must key on the cs summary"
     for keys in re.findall(r"hashpartitioning\(([^)]*)\)", p):
         assert "obj" not in keys, f"object column shuffled: {keys}"
+
+
+def test_web_pipeline_job_budget_one_page_pass(spark, tmp_path, count_jobs,
+                                               monkeypatch):
+    """A small crawl batch (stages 1-4 with entity linking and the global
+    canonical map, as the benchmark runs them) stays within its Spark job
+    budget, and the triples it canonicalizes come from ONE Python node over
+    the page scan: linking runs inside the page pass, so there is no second
+    Python runner, no union and no cached base triples."""
+    from rdf_tabular_spark import web
+    from rdf_tabular_spark.sources.pages import entity_dictionary, synth_pages
+    path = str(tmp_path / "pages")
+    synth_pages(spark, 120, seed=5, partitions=4).write.parquet(path)
+    pages = spark.read.parquet(path)
+    seen = []
+    real = web.canonicalize_subjects
+
+    def spy(triples, *args, **kwargs):
+        seen.append(plan_of(triples, "simple"))
+        return real(triples, *args, **kwargs)
+
+    monkeypatch.setattr(web, "canonicalize_subjects", spy)
+    with count_jobs() as jobs:
+        m = web.web_pipeline(spark, pages, str(tmp_path / "store"), "b0",
+                             entity_dict=entity_dictionary(),
+                             incremental_canonical=True)
+    assert m["n_triples"] > 0
+    # 14: 7 for the canonicalization's edge collect (which also runs the
+    # page pass), the mapping checkpoint, 2 to count the cached triples,
+    # the canonical map write and 4 for the store write
+    assert jobs.n <= 14, f"{jobs.n} Spark jobs for one small batch"
+    python_nodes = re.findall(
+        r"MapInPandas|MapInArrow|EvalPython|InPandas|PythonUDTF", seen[0])
+    assert python_nodes == ["MapInPandas"], seen[0]
+    assert not re.search(r"\bUnion\b|InMemoryRelation|InMemoryTableScan",
+                         seen[0]), seen[0]
+    # the Python node reads the page scan directly
+    assert re.search(r"MapInPandas[^\n]*\n(\s*\+- [^\n]*ColumnarToRow[^\n]*\n)?"
+                     r"\s*\+- [^\n]*FileScan parquet", seen[0]), seen[0]
+
+
+def test_point_reads_launch_no_job(spark, tmp_path, count_jobs):
+    """read_subject and read_predicate fold the key's bucket hash into the
+    filter as a constant: building either read runs no Spark job; only
+    the caller's action does."""
+    from rdf_tabular_spark.sinks.graph_store import (materialize,
+                                                     read_predicate,
+                                                     read_subject)
+    triples = (spark.range(200).select(
+        F.concat(F.lit("http://s/"), F.col("id")).alias("subj"),
+        F.concat(F.lit("http://p/"), F.col("id") % 3).alias("pred"),
+        F.col("id").cast("string").alias("obj"),
+        F.lit(False).alias("obj_is_iri"),
+        F.lit(None).cast("string").alias("obj_datatype"),
+        F.lit(None).cast("string").alias("obj_lang"),
+        F.lit("http://t").alias("table_url"),
+        F.lit(1).cast("long").alias("source_num")))
+    root = str(tmp_path / "store")
+    materialize(triples, root, "b1", pred_buckets=32)
+    with count_jobs() as jobs:
+        subj = read_subject(spark, root, "http://s/7")
+        pred = read_predicate(spark, root, "http://p/1")
+    assert jobs.n == 0, f"{jobs.n} jobs before any action"
+    assert [r["obj"] for r in subj.collect()] == ["7"]
+    assert pred.count() == 67

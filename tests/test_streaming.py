@@ -2,6 +2,7 @@
 checkpoint resume, and the watermarked per-host rate aggregation."""
 
 import os
+import re
 
 import pytest
 
@@ -269,3 +270,44 @@ def test_stream_pages_to_store_combined_facets(spark, tmp_path):
     # robots: doc 3 (and 10, 17) are noindex — no facet emits for them
     assert not any(f"/doc/3#" in s for s in subs)
     assert not any(f"/doc/10#" in s for s in subs)
+
+
+def test_stream_pages_to_store_one_page_pass_with_linking(spark, tmp_path):
+    """With an entity dictionary the stream still parses each page once:
+    its plan holds ONE page ``MapInPandas`` (linking runs inside the page
+    pass) and no union, and its committed triples equal the batch
+    pipeline's (``web_pipeline(canonicalize=False)``) on the same
+    pages."""
+    import contextlib
+    import io
+
+    from rdf_tabular_spark.sinks.graph_store import read_graph
+    from rdf_tabular_spark.sources.pages import entity_dictionary, synth_pages
+    from rdf_tabular_spark.streaming.ingest import stream_pages_to_store
+    from rdf_tabular_spark.web import web_pipeline
+
+    tmp = str(tmp_path)
+    in_dir = os.path.join(tmp, "pages_in")
+    synth_pages(spark, 60, seed=9, partitions=2).write.parquet(in_dir)
+    ents = entity_dictionary()
+    q = stream_pages_to_store(spark, in_dir, os.path.join(tmp, "stream"),
+                              os.path.join(tmp, "ckpt"), entity_dict=ents)
+    q.awaitTermination(180)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q.explain()
+    assert buf.getvalue().count("MapInPandas") == 1, buf.getvalue()
+    assert not re.search(r"\bUnion\b", buf.getvalue()), buf.getvalue()
+
+    web_pipeline(spark, spark.read.parquet(in_dir), os.path.join(tmp, "batch"),
+                 "b0", entity_dict=ents, canonicalize=False)
+    cols = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype", "obj_lang",
+            "table_url", "source_num", "support"]
+
+    def rows(root):
+        return sorted(tuple(r) for r in
+                      read_graph(spark, root).select(cols).collect())
+
+    streamed = rows(os.path.join(tmp, "stream"))
+    assert any(r[1].endswith("#mentions") for r in streamed)
+    assert streamed == rows(os.path.join(tmp, "batch"))

@@ -120,6 +120,54 @@ def test_canonicalization_merges_near_dups(spark):
         df.unpersist()
 
 
+def _planted_pair(i: int, changed: int, n_tokens: int = 50) -> list[tuple]:
+    """Two subjects whose profiles share ``n_tokens - changed`` of their
+    ``n_tokens`` field=value tokens (token Jaccard
+    ``(n - changed) / (n + changed)``); no token is shared with any other
+    pair, and the two profiles differ, so only the near-dup tier can
+    merge them."""
+    out = []
+    for side in "ab":
+        subj = f"http://planted.example.org/r{i:03d}{side}"
+        for k in range(n_tokens):
+            obj = (f"v{i}-{k}-{side}" if side == "b" and k < changed
+                   else f"v{i}-{k}")
+            out.append((subj, f"http://planted.example.org/f{k}", obj,
+                        False, None, None, "http://planted.example.org/t", k))
+    return out
+
+
+def test_near_dup_tier_recall_and_precision(spark):
+    """canonicalize_subjects' MinHash-LSH tier at its defaults (threshold
+    0.9, 2 of 8 bands): 40 planted pairs at token Jaccard 0.96 (1 of 50
+    tokens changed) must merge, with recall >= 0.9; 40 pairs at 0.70
+    (9 changed) must not, and nothing merges across pairs."""
+    from rdf_tabular_spark.operators.triples import TRIPLE_SCHEMA
+    near, far = range(40), range(40, 80)
+    rows = [t for i in near for t in _planted_pair(i, 1)]
+    rows += [t for i in far for t in _planted_pair(i, 9)]
+    releases = []
+    _, mapping = canonicalize_subjects(
+        spark.createDataFrame(rows, TRIPLE_SCHEMA), releases=releases)
+    try:
+        canon = {r["id"]: r["canonical_id"] for r in mapping.collect()}
+    finally:
+        for df in releases:
+            df.unpersist()
+
+    def merged(i):
+        a = f"http://planted.example.org/r{i:03d}a"
+        b = f"http://planted.example.org/r{i:03d}b"
+        return canon.get(b, b) == canon.get(a, a)
+
+    hits_near = sum(map(merged, near))
+    hits_far = sum(map(merged, far))
+    assert hits_near / len(near) >= 0.9, f"recall {hits_near}/{len(near)}"
+    assert hits_far == 0, f"{hits_far} pairs below the threshold merged"
+    # every merge stays inside its planted pair
+    assert all(k[:-1] == v[:-1] for k, v in canon.items()), canon
+
+
 def test_materialize_and_resume(spark, pages, tmp_path):
     root = str(tmp_path / "graph")
     triples = pages_to_triples(pages.limit(50))
@@ -298,6 +346,71 @@ def test_combined_parity(spark):
     pages.unpersist()
     assert len(a) == len(b)
     assert a == b
+
+
+def test_link_entities_keep_input_matches_union(spark):
+    """``link_entities(keep_input=True)`` ≡ its input ∪ ``link_entities``
+    over it, both when it links inside the page pass that produced its
+    input (one Python node) and when its input streams through its own
+    kernel (here a persisted frame): exact multiset equality, mentions of
+    every facet's literals included, over pages whose text holds exact
+    and fuzzy dictionary surfaces."""
+    from rdf_tabular_spark.web import pages_to_combined_triples
+    pages = synth_pages(spark, 200, seed=11, partitions=4).persist()
+    ents = entity_dictionary()
+    fused = link_entities(pages_to_combined_triples(pages), ents,
+                          keep_input=True)
+
+    def python_nodes(df):
+        return df._jdf.queryExecution().executedPlan().toString() \
+            .count("MapInPandas")
+    # linking adds no Python node to the page pass's plan
+    assert python_nodes(fused) == python_nodes(pages_to_combined_triples(pages))
+    base = pages_to_combined_triples(pages).persist()
+    want = sorted(tuple(r) for r in
+                  base.unionByName(link_entities(base, ents)).collect())
+    streamed = sorted(tuple(r) for r in
+                      link_entities(base, ents, keep_input=True).collect())
+    got = sorted(tuple(r) for r in fused.collect())
+    base.unpersist()
+    pages.unpersist()
+    assert streamed == want
+    assert any(t[1].endswith("#mentions") for t in got)
+    assert got == want
+
+
+def test_web_pipeline_empty_batch_commits(spark, tmp_path):
+    """Pages that yield no triple at all: the batch commits empty; sizing
+    the store write from the count of an empty batch, and canonicalizing
+    a batch with no subject, neither block nor fail it."""
+    import datetime
+    import threading
+
+    from rdf_tabular_spark.sinks.graph_store import read_graph
+    from rdf_tabular_spark.sources.pages import PAGES_SCHEMA
+    html = b"<html><body><p>no tables, items or scripts</p></body></html>"
+    pages = spark.createDataFrame(
+        [(f"http://empty.example.org/p{i}", datetime.datetime(2024, 1, 1),
+          html, "no tables", "en") for i in range(8)], PAGES_SCHEMA)
+    root = str(tmp_path / "graph")
+    box = {}
+
+    def run():
+        try:
+            box["manifest"] = web_pipeline(spark, pages, root, "b0",
+                                           entity_dict=entity_dictionary(),
+                                           incremental_canonical=True)
+        except BaseException as e:  # reported by the assertion below
+            box["error"] = e
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(300)
+    assert not worker.is_alive(), "web_pipeline blocked on an empty batch"
+    assert "error" not in box, box.get("error")
+    assert box["manifest"]["status"] == "committed"
+    assert box["manifest"]["n_triples"] == 0
+    assert read_graph(spark, root).count() == 0
 
 
 def test_combined_parity_jsonld_pages(spark):

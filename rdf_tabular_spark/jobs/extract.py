@@ -11,7 +11,11 @@ Cluster invocation (north_rule: "run via spark-submit --py-files"):
         [--no-canonicalize] [--synth N]
 
 Re-running with the same --batch-id is a no-op once the batch manifest is
-committed (resume semantics live in sinks/graph_store.py).
+committed (resume semantics live in sinks/graph_store.py). The opt-in
+side outputs (--links, --anchors, --text, --head-meta, --shapes, --fuse,
+--reify, --hearst, --disambiguate) each write parquet under a per-batch
+directory of --out and add its path to the returned summary; --help says
+where.
 """
 
 from __future__ import annotations
@@ -94,13 +98,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="keep extracted pairs supported by >= N distinct "
                         "pages (default 2 — single-page pairs are mostly "
                         "noise, cf. WebIsA's support threshold)")
-    p.add_argument("--stats", action="store_true",
-                   help="ANALYZE-style graph statistics for the committed "
-                        "batch: per-predicate cardinality profile "
-                        "(functional/inverse-functional flags) and "
-                        "characteristic sets under <out>/stats/<batch-id> "
-                        "— the inputs a SPARQL planner and the fusion "
-                        "stage read")
     p.add_argument("--disambiguate", default=None, metavar="CANDS.parquet",
                    help="context-scored entity disambiguation over the "
                         "page text: candidates parquet (surface, entity, "
@@ -228,20 +225,6 @@ def main(argv: list[str] | None = None) -> dict:
         manifest = dict(manifest, relations_dir=rel_dir,
                         n_hearst_pairs=pairs.count())
         pairs.unpersist()
-    if args.stats:
-        from rdf_tabular_spark.operators.graph import (characteristic_sets,
-                                                       predicate_cardinality)
-        from rdf_tabular_spark.sinks.graph_store import read_graph
-        sdir = os.path.join(args.out, "stats", args.batch_id)
-        bt = read_graph(spark, args.out, batches=[args.batch_id])
-        card = predicate_cardinality(bt).persist()
-        card.write.mode("overwrite").parquet(
-            os.path.join(sdir, "pred_cardinality"))
-        characteristic_sets(bt).write.mode("overwrite").parquet(
-            os.path.join(sdir, "char_sets"))
-        manifest = dict(manifest, stats_dir=sdir,
-                        n_predicates=card.count())
-        card.unpersist()
     if args.disambiguate:
         from rdf_tabular_spark.web import disambiguate_mentions
         cands = spark.read.parquet(args.disambiguate)

@@ -16,6 +16,7 @@ store queries it from the same cluster tooling:
     ... --values '{"columns": ["l"], "rows": [["en"], ["fr"]]}' \
         --bind 'n_len=length(n)' --exists '?d <voc#wordCount> ?w' ...
     ... --infer-rdfs --derive-batch-id rdfs-2024-06-01   # RDFS entailment
+    ... --diff-since 2024-06-01T00:00:00   # statements added/removed since
     ... --bgp '...' --construct '?s <voc#label> ?n' \
         --derive-batch-id rule-2024-06-01 --rule-id name-label   # CONSTRUCT
         # without --derive-batch-id the derived triples go to --out/stdout
@@ -80,11 +81,6 @@ def build_parser() -> argparse.ArgumentParser:
                       help="truth-discovery maintenance: retract every "
                            "assertion losing its (subj, pred) majority "
                            "vote (requires --derive-batch-id)")
-    kind.add_argument("--schema-drift-since", default=None, metavar="TIME",
-                      help="characteristic-set drift: subject shapes of "
-                           "the graph as of TIME vs now (--as-of) — which "
-                           "templates appeared/vanished between crawls; "
-                           "one (cs, n_a, n_b, delta) row per shape")
     kind.add_argument("--diff-since", default=None, metavar="TIME",
                       help="time-travel delta: statements added/removed "
                            "between TIME and --as-of (default: now) — one "
@@ -162,34 +158,6 @@ def main(argv: list[str] | None = None) -> dict:
         # patterns would return wrong (usually empty) results
         raise SystemExit("--term-graph requires --sparql")
 
-    if args.schema_drift_since:
-        import time as _time
-        from pyspark.sql import functions as F
-        from rdf_tabular_spark.operators.graph import schema_drift
-        from rdf_tabular_spark.sinks.graph_store import (read_graph,
-                                                         snapshots_as_of)
-        to = args.as_of or _time.strftime("%Y-%m-%dT%H:%M:%SZ",
-                                          _time.gmtime())
-        old = read_graph(spark, args.store,
-                         batches=snapshots_as_of(args.store,
-                                                 args.schema_drift_since))
-        new = read_graph(spark, args.store,
-                         batches=snapshots_as_of(args.store, to))
-        drift = schema_drift(old, new).where(F.col("delta") != 0)
-        if args.out:
-            drift.write.mode("overwrite").parquet(args.out)
-            summary = {"from": args.schema_drift_since, "to": to,
-                       "out": args.out,
-                       "n_changed_shapes":
-                           spark.read.parquet(args.out).count()}
-        else:
-            rows = drift.orderBy(F.abs(F.col("delta")).desc(), "cs") \
-                .limit(args.show).collect()
-            summary = {"from": args.schema_drift_since, "to": to,
-                       "n_changed_shapes": drift.count(),
-                       "top": [r.asDict() for r in rows]}
-        print(json.dumps(summary))
-        return summary
     if args.diff_since:
         import time as _time
         from pyspark.sql import functions as F

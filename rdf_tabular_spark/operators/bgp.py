@@ -121,7 +121,7 @@ def plan_bgp(patterns: Sequence[Pattern],
 
     ``pred_counts`` upgrades the bound-term heuristic to STATISTICS-DRIVEN
     ordering: a ``{predicate: triple_count}`` map (vocabulary-sized —
-    operators/graph.predicate_stats collects it in one pass) breaks ties
+    sinks/graph_store.predicate_counts collects it in one pass) breaks ties
     among equally-bound patterns by ascending cardinality, so a
     10-row-predicate leg anchors the join tree before a 10^9-row one.
     Join order never changes results (the operators are joins/filters),

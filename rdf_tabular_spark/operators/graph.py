@@ -1,144 +1,26 @@
-"""Graph-side query operators over materialized (subj, pred, obj) triples:
-summary statistics and the property-table pivot.
+"""Iterative graph operators the SPARQL read tier runs over materialized
+(subj, pred, obj) triples.
 
-These are the read-path counterparts of sinks/graph_store.py — once stage 4
-has materialized triples, downstream consumers want (a) a per-predicate
-profile of the graph (cardinality planning, vocabulary drift detection
-between crawl batches) and (b) star-query acceleration by pivoting an
-entity's triples back into one wide row (the classic property-table layout
-RDF stores use for subject-centric access, cf. Wilkinson 2006 "Jena
-property table implementation"; the reference's ATD/JSON sinks
-(rdf-tabular reader.rb:271-325) are the same row-wise view built at emit
-time — this operator reconstructs it FROM the graph, relationally).
+- ``transitive_closure`` computes all reachable ``(src, dst)`` pairs by
+  semi-naive iteration: the ``+`` and ``*`` property paths of
+  operators/paths.py and the transitive-property rule of operators/owl.py
+  run on it. ``transitive_closure_doubling`` is its path-doubling form
+  for deep graphs (log₂(depth) rounds).
+- ``describe`` answers SPARQL ``DESCRIBE`` (sparql.py) as a Concise
+  Bounded Description.
+- ``_ckpt`` truncates lineage between the rounds of these loops and of
+  stage 3's connected components (operators/components.py), locally by
+  default or reliably into a checkpoint directory.
 
-Scale notes (10^12 triples):
-- ``predicate_stats`` is one groupBy on the predicate local name with
-  partial (map-side) aggregation; the distinct counts use Spark's Expand
-  strategy (one pass, 3× intermediate rows) — bounded by the number of
-  predicates in the output, which is vocabulary-sized, not corpus-sized.
-- ``property_table`` pivots with an EXPLICIT property list so Catalyst
-  skips the extra distinct-values job, and aggregates with max (exact for
-  the single-valued predicates CSVW mappings emit; deterministic, unlike
-  first). One shuffle on subj — the same key the graph store buckets by,
-  so on bucketed reads the exchange collapses.
+``closure_sql`` and ``describe_sql`` are the recursive-CTE forms of the
+closure and DESCRIBE (DuckDB oracles; sparql.py compiles DESCRIBE to
+``describe_sql``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def pred_local_name(pred: Column) -> Column:
-    """Fragment (text after the last '#') — the CSVW-mapped property name
-    (propertyUrl defaults to ``{table-url}#{column-name}``,
-    rdf-tabular metadata.rb:1285-1289)."""
-    return F.substring_index(pred, "#", -1)
-
-
-def predicate_stats(triples: DataFrame) -> DataFrame:
-    """Per-predicate graph profile: triple count, distinct subjects,
-    distinct objects — keyed by the predicate's local name so per-document
-    propertyUrl expansions aggregate into one vocabulary row."""
-    return (triples
-            .select(pred_local_name(F.col("pred")).alias("prop"),
-                    "subj", "obj")
-            .groupBy("prop")
-            .agg(F.count("*").alias("n_triples"),
-                 F.countDistinct("subj").alias("n_subjects"),
-                 F.countDistinct("obj").alias("n_objects")))
-
-
-def characteristic_sets(triples: DataFrame) -> DataFrame:
-    """Characteristic-set summary of the graph (Neumann & Moerkotte,
-    ICDE 2011): group subjects by their exact predicate SET → one row per
-    distinct schema shape ``(cs, n_props, n_subjects)``. The classic KG
-    structure-discovery / cardinality-estimation statistic; at web scale
-    the number of characteristic sets is vocabulary-small (thousands)
-    while subjects number in the billions.
-
-    Spark shape: distinct (subj, pred) projection → one groupBy(subj)
-    building the sorted predicate-set string (map-side combined collect_set
-    — predicate vocabularies per subject are tiny) → one vocabulary-sized
-    groupBy on the set string. Two keyed shuffles on narrow rows; the
-    object column never moves.
-    """
-    distinct_sp = (triples
-                   .select("subj", pred_local_name(F.col("pred")).alias("p"))
-                   .distinct())
-    per_subj = (distinct_sp.groupBy("subj")
-                .agg(F.array_join(F.sort_array(F.collect_set("p")),
-                                  " ").alias("cs"),
-                     F.count("*").cast("long").alias("n_props")))
-    return (per_subj.groupBy("cs", "n_props")
-            .agg(F.count("*").cast("long").alias("n_subjects")))
-
-
-def characteristic_sets_sql(triples_sql: str) -> str:
-    """DuckDB mirror of :func:`characteristic_sets`."""
-    return f"""
-with t as ({triples_sql}),
-d as (select distinct subj, split_part(pred, '#', 2) as p from t),
-s as (select subj, string_agg(p, ' ' order by p) as cs,
-             cast(count(*) as bigint) as n_props
-      from d group by subj)
-select cs, n_props, cast(count(*) as bigint) as n_subjects
-from s group by cs, n_props
-"""
-
-
-def pred_cooccurrence(triples: DataFrame) -> DataFrame:
-    """Predicate co-occurrence matrix: for each unordered property pair
-    ``(p1 < p2)``, the number of subjects carrying BOTH — the pairwise
-    marginal of :func:`characteristic_sets`, used for schema induction and
-    join-selectivity estimation.
-
-    Scale shape: the self-join runs on the distinct (subj, prop)
-    projection — per-subject property lists are vocabulary-bounded (a page
-    emits tens of properties, never millions), so the per-subject pair
-    expansion is quadratic only in that small constant. One shuffle on
-    subj, one vocabulary-sized groupBy.
-    """
-    d = (triples
-         .select("subj", pred_local_name(F.col("pred")).alias("p"))
-         .distinct())
-    a, b = d.alias("a"), d.alias("b")
-    return (a.join(b, (F.col("a.subj") == F.col("b.subj"))
-                   & (F.col("a.p") < F.col("b.p")))
-            .groupBy(F.col("a.p").alias("p1"), F.col("b.p").alias("p2"))
-            .agg(F.count("*").cast("long").alias("n_subjects")))
-
-
-def pred_cooccurrence_sql(triples_sql: str) -> str:
-    """DuckDB mirror of :func:`pred_cooccurrence`."""
-    return f"""
-with t as ({triples_sql}),
-d as (select distinct subj, split_part(pred, '#', 2) as p from t)
-select a.p as p1, b.p as p2, cast(count(*) as bigint) as n_subjects
-from d a join d b on a.subj = b.subj and a.p < b.p
-group by a.p, b.p
-"""
-
-
-def property_table(triples: DataFrame, props: Sequence[str]) -> DataFrame:
-    """Pivot triples into one wide row per subject with a column per
-    property local name (star-query / entity-export layout). ``props``
-    must be the explicit property list — passing it avoids the extra
-    distinct-scan pivot job and fixes the output schema for writers."""
-    return (triples
-            .withColumn("prop", pred_local_name(F.col("pred")))
-            .groupBy("subj")
-            .pivot("prop", list(props))
-            .agg(F.max("obj")))
-
-
-# ---------------------------------------------------------------------------
-# iterative graph algorithms over the edge view of the graph
-# (src, dst) = (subj, obj) restricted to IRI objects — entity-to-entity
-# structure, the part of the KG that link analysis runs on.
-# ---------------------------------------------------------------------------
 
 
 def _ckpt(df: DataFrame, checkpoint_dir: str | None = None,
@@ -155,93 +37,6 @@ def _ckpt(df: DataFrame, checkpoint_dir: str | None = None,
         return df.localCheckpoint(eager=eager)
     df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
     return df.checkpoint(eager=eager)
-
-
-def pagerank(edges: DataFrame, n_iter: int = 3, damping: float = 0.85,
-             checkpoint_every: int | None = None,
-             checkpoint_dir: str | None = None) -> DataFrame:
-    """Fixed-iteration PageRank over ``(src, dst)`` edges → ``(node, rank)``.
-
-    Simplified formulation (dangling mass is NOT redistributed — nodes with
-    no out-edges absorb it, the common map-reduce variant):
-    ``r_{k+1}(v) = (1-d)/N + d * Σ_{u→v} r_k(u) / outdeg(u)``.
-
-    Spark shape per iteration: one broadcast-eligible join of ranks with
-    the outdegree table (both node-cardinality), one shuffle join of edges
-    with weighted ranks on ``src``, one ``groupBy(dst)`` with map-side
-    partial sums — the exchange stays on the edge table's join keys, so
-    pre-partitioning edges by ``src`` reuses the exchange across all
-    iterations. ``checkpoint_every`` localCheckpoints the rank table to
-    truncate the growing lineage on long runs (resumability at cluster
-    scale comes from writing ranks per-iteration to the graph store
-    instead).
-
-    Determinism note: float summation order inside ``groupBy(dst)`` is
-    engine-dependent; results are bit-reproducible across engines only
-    when fan-in per node keeps each sum a single IEEE op (≤2 in-edges) —
-    the oracle harness uses a tree-shaped graph for exactly this reason.
-    """
-    e = edges.select("src", "dst")
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct())
-    n = nodes.count()
-    # fresh aliases throughout: every per-iteration relation re-derives from
-    # `e`/`nodes`, so reusing their attribute ids would make the joins
-    # self-join-ambiguous.
-    out = (e.groupBy("src").agg(F.count("*").cast("double").alias("od"))
-           .select(F.col("src").alias("od_node"), "od"))
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
-    for i in range(n_iter):
-        w = (ranks.join(out, ranks["node"] == out["od_node"], "inner")
-             .select(F.col("od_node").alias("w_node"),
-                     (F.col("rank") / F.col("od")).alias("w")))
-        contrib = (e.join(w, e["src"] == w["w_node"])
-                   .groupBy(e["dst"].alias("c_node"))
-                   .agg(F.sum("w").alias("c")))
-        ranks = (nodes.join(contrib, nodes["node"] == contrib["c_node"],
-                            "left")
-                 .select(nodes["node"],
-                         (F.lit(base) + F.lit(damping)
-                          * F.coalesce(F.col("c"), F.lit(0.0))).alias("rank")))
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = _ckpt(ranks, checkpoint_dir)
-    return ranks
-
-
-def pagerank_sql(edges_sql: str, n_iter: int = 3,
-                 damping: float = 0.85) -> str:
-    """The same fixed-iteration PageRank unrolled as SQL CTEs (DuckDB
-    oracle). Float constants are embedded via ``repr`` so both engines
-    start from bit-identical doubles (``1 - 0.85`` is 0.15000000000000002
-    in IEEE doubles; a bare SQL ``0.15`` literal would be decimal-exact
-    and diverge)."""
-    d = repr(float(damping))
-    one_minus_d = repr(1.0 - damping)
-    parts = [
-        f"e as ({edges_sql})",
-        "nodes as (select src as node from e union select dst from e)",
-        "nn as (select cast(count(*) as double) as n from nodes)",
-        "outdeg as (select src, cast(count(*) as double) as od"
-        " from e group by src)",
-        "r0 as (select node, cast(1 as double) / nn.n as rank"
-        " from nodes cross join nn)",
-    ]
-    for i in range(1, n_iter + 1):
-        parts.append(
-            f"c{i} as (select e.dst as node, sum(r.rank / o.od) as c"
-            f" from e join r{i-1} r on e.src = r.node"
-            f" join outdeg o on e.src = o.src group by e.dst)")
-        parts.append(
-            f"r{i} as (select nodes.node,"
-            f" cast('{one_minus_d}' as double) / nn.n"
-            f" + cast('{d}' as double)"
-            f" * coalesce(c{i}.c, cast(0 as double)) as rank"
-            f" from nodes cross join nn"
-            f" left join c{i} on nodes.node = c{i}.node)")
-    return ("with " + ",\n".join(parts)
-            + f"\nselect node, rank from r{n_iter}")
 
 
 def transitive_closure(edges: DataFrame, max_iter: int = 64,
@@ -311,87 +106,6 @@ def transitive_closure_doubling(edges: DataFrame,
     return paths
 
 
-def bfs_distances(edges: DataFrame, sources: DataFrame,
-                  max_iter: int = 64,
-                  checkpoint_dir: str | None = None) -> DataFrame:
-    """Multi-source BFS shortest hop-distances → ``(node, dist)``.
-
-    Classic frontier iteration (Pregel-style): round ``d`` joins only the
-    CURRENT frontier against the edge table and anti-joins everything
-    already reached, so each node is settled exactly once at its true
-    minimum distance (unit weights ⇒ first arrival is shortest). Rounds =
-    eccentricity of the source set, each one keyed join + distinct;
-    lineage is truncated per round (``checkpoint_dir`` switches
-    localCheckpoint → reliable checkpoint, as in
-    :func:`transitive_closure`). ``sources`` is a one-column ``node``
-    DataFrame (distance 0).
-    """
-    e = edges.select("src", "dst").distinct().persist()
-    e.count()
-    known = _ckpt(sources.select("node").distinct()
-                  .withColumn("dist", F.lit(0).cast("long")), checkpoint_dir)
-    frontier = known.select("node")
-    for d in range(1, max_iter + 1):
-        nxt = (frontier.join(e, frontier["node"] == e["src"])
-               .select(F.col("dst").alias("node")).distinct()
-               .join(known.select("node"), "node", "left_anti")
-               .withColumn("dist", F.lit(d).cast("long")))
-        nxt = _ckpt(nxt, checkpoint_dir)
-        if nxt.isEmpty():
-            break
-        known = _ckpt(known.unionByName(nxt), checkpoint_dir)
-        frontier = nxt.select("node")
-    e.unpersist()
-    return known
-
-
-def degree_histogram(triples: DataFrame) -> DataFrame:
-    """Out-degree distribution → ``(degree, n_subjects)`` — the graph-shape
-    telemetry that sizes canonicalization buckets and spots super-nodes
-    before they skew a join. One shuffle on subj (map-side partial count),
-    then a vocabulary-sized re-aggregation on the degree value."""
-    deg = triples.groupBy("subj").agg(F.count("*").alias("degree"))
-    return (deg.groupBy("degree")
-            .agg(F.count("*").cast("long").alias("n_subjects")))
-
-
-def negative_samples(triples: DataFrame, k: int = 2,
-                     max_pool: int = 100_000) -> DataFrame:
-    """KG-embedding training prep: ``k`` deterministically-corrupted tails
-    per triple → ``(subj, pred, neg_obj, neg_idx)`` (TransE-style negative
-    sampling, Bordes et al. 2013).
-
-    The candidate pool is a deterministic md5-min sample of distinct
-    subjects capped at ``max_pool`` — at 10^12 triples uniform negatives
-    only need an unbiased pool, not the full entity set — so it broadcasts;
-    each (triple, i) picks pool index ``md5(s|p|o|i) mod n``: reproducible
-    under retries (no rand()), one narrow stage + a broadcast join. A
-    corruption colliding with the true tail is dropped (standard filtered
-    negative sampling), so a triple may carry fewer than ``k`` rows.
-    """
-    pool = (triples.select("subj").distinct()
-            .orderBy(F.md5("subj"), "subj").limit(max_pool))
-    w = Window.orderBy(F.md5("subj"), "subj")
-    pool_idx = pool.select(
-        (F.row_number().over(w) - 1).alias("neg_idx_key"),
-        F.col("subj").alias("neg_obj"))
-    n = pool_idx.count()
-    cand = (triples.select(
-        "subj", "pred", "obj",
-        F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("neg_idx"))
-        .withColumn(
-            "neg_idx_key",
-            F.pmod(
-                F.conv(F.substring(
-                    F.md5(F.concat_ws("|", "subj", "pred", "obj",
-                                      F.col("neg_idx").cast("string"))),
-                    1, 8), 16, 10).cast("long"),
-                F.lit(n))))
-    return (cand.join(F.broadcast(pool_idx), "neg_idx_key")
-            .filter(F.col("neg_obj") != F.col("obj"))
-            .select("subj", "pred", "neg_obj", "neg_idx"))
-
-
 def describe(triples: DataFrame, seeds: DataFrame,
              max_depth: int = 32,
              checkpoint_dir: str | None = None) -> DataFrame:
@@ -456,953 +170,3 @@ select src, dst from reach
 """
 
 
-def hits(edges: DataFrame, n_iter: int = 2) -> DataFrame:
-    """Fixed-iteration HITS over ``(src, dst)`` edges →
-    ``(node, hub, auth)`` — Kleinberg's hubs-and-authorities centrality,
-    the complement of PageRank for link-graph telemetry (a good hub links
-    to many good authorities; a good authority is linked from many good
-    hubs).
-
-    UNNORMALIZED integer power iterations: ``a_{k}(v) = Σ_{u→v} h_{k-1}(u)``
-    then ``h_k(u) = Σ_{u→v} a_k(v)``, all in exact long arithmetic.
-    Per-iteration normalization is a positive scalar, so the RANKING after
-    k iterations is identical to normalized HITS — and integer sums are
-    order-independent, which makes the result bit-identical across engines
-    regardless of aggregation order (the float-summation caveat PageRank
-    carries does not apply). Two shuffles per iteration (groupBy dst, then
-    groupBy src), each with map-side partial sums; the joins reuse the
-    edge table's key partitioning across iterations.
-    """
-    e = edges.select("src", "dst")
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct())
-    h = nodes.withColumn("hub", F.lit(1).cast("long"))
-    a = nodes.withColumn("auth", F.lit(1).cast("long"))
-    for _ in range(n_iter):
-        a_agg = (e.join(h, e["src"] == h["node"])
-                 .groupBy(e["dst"].alias("a_node"))
-                 .agg(F.sum("hub").alias("s")))
-        a = (nodes.join(a_agg, nodes["node"] == a_agg["a_node"], "left")
-             .select(nodes["node"],
-                     F.coalesce(F.col("s"), F.lit(0)).cast("long")
-                     .alias("auth")))
-        h_agg = (e.join(a, e["dst"] == a["node"])
-                 .groupBy(e["src"].alias("h_node"))
-                 .agg(F.sum("auth").alias("s")))
-        h = (nodes.join(h_agg, nodes["node"] == h_agg["h_node"], "left")
-             .select(nodes["node"],
-                     F.coalesce(F.col("s"), F.lit(0)).cast("long")
-                     .alias("hub")))
-    return (h.join(a.select(F.col("node").alias("a_node"), "auth"),
-                   h["node"] == F.col("a_node"))
-            .select("node", "hub", "auth"))
-
-
-def hits_sql(edges_sql: str, n_iter: int = 2) -> str:
-    """The same fixed-iteration unnormalized HITS unrolled as SQL CTEs
-    (DuckDB oracle) — exact bigint arithmetic end to end."""
-    parts = [
-        f"e as ({edges_sql})",
-        "nodes as (select src as node from e union select dst from e)",
-        "h0 as (select node, 1::bigint as hub from nodes)",
-    ]
-    for i in range(1, n_iter + 1):
-        parts.append(
-            f"a{i} as (select nodes.node,"
-            f" coalesce(s.s, 0)::bigint as auth from nodes left join"
-            f" (select e.dst as node, sum(h.hub) as s from e"
-            f" join h{i-1} h on e.src = h.node group by e.dst) s"
-            f" on nodes.node = s.node)")
-        parts.append(
-            f"h{i} as (select nodes.node,"
-            f" coalesce(s.s, 0)::bigint as hub from nodes left join"
-            f" (select e.src as node, sum(a.auth) as s from e"
-            f" join a{i} a on e.dst = a.node group by e.src) s"
-            f" on nodes.node = s.node)")
-    return ("with " + ",\n".join(parts)
-            + f"\nselect h{n_iter}.node, h{n_iter}.hub, a{n_iter}.auth"
-            + f" from h{n_iter} join a{n_iter} using (node)")
-
-
-def random_walks(edges: DataFrame, length: int = 4,
-                 walks_per_node: int = 1) -> DataFrame:
-    """DeepWalk-style walk corpus over ``(src, dst)`` edges →
-    ``(start, walk, step, node)`` rows in long format (Perozzi et al.
-    2014) — the sentence corpus for skip-gram graph embeddings.
-
-    Deterministic "random": step t of walk w from node u follows the
-    out-edge ranked ``md5(u|w|t) mod outdeg(u)`` — reproducible under
-    task retries (no rand()), the same discipline as negative_samples.
-    Walks stop early at sinks (inner join drops them), matching the
-    recursive-CTE oracle.
-
-    Shape: the ranked-edge table (per-src row_number window, one shuffle)
-    is computed ONCE and persisted; each of the ``length`` steps is one
-    keyed join against it plus a narrow md5 projection — k joins total,
-    no iteration-dependent state. ``walks_per_node`` multiplies rows, not
-    joins (the walk id rides inside the md5)."""
-    e = edges.select("src", "dst")
-    w_rank = Window.partitionBy("src").orderBy("dst")
-    ranked = (e.withColumn("rank", F.row_number().over(w_rank) - 1)
-              .withColumn("outdeg",
-                          F.count("*").over(Window.partitionBy("src")))
-              .select(F.col("src").alias("r_src"), "rank", "outdeg",
-                      F.col("dst").alias("r_dst")))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct())
-    cur = nodes.select(
-        F.col("node").alias("start"),
-        F.explode(F.sequence(F.lit(0),
-                             F.lit(walks_per_node - 1))).alias("walk"),
-        F.col("node").alias("node"))
-    out = cur.withColumn("step", F.lit(0))
-    frames = [out]
-    for t in range(1, length + 1):
-        pick = F.pmod(
-            F.conv(F.substring(
-                F.md5(F.concat_ws("|", "node", F.col("walk").cast("string"),
-                                  F.lit(str(t)))), 1, 8), 16, 10)
-            .cast("long"),
-            F.col("outdeg"))
-        nxt = (cur.join(ranked, cur["node"] == ranked["r_src"])
-               .where(F.col("rank") == pick)
-               .select("start", "walk", F.col("r_dst").alias("node")))
-        frames.append(nxt.withColumn("step", F.lit(t)))
-        cur = nxt
-    res = frames[0]
-    for f in frames[1:]:
-        res = res.unionByName(f)
-    return res.select("start", F.col("walk").cast("long").alias("walk"),
-                      F.col("step").cast("long").alias("step"), "node")
-
-
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """Per-node triangle counts over the undirected view of ``(src, dst)``
-    edges → ``(node, n_triangles)`` — local clustering telemetry for the
-    host link graph (spam farms and boilerplate navigation rings show up
-    as dense triangle clusters; isolated content pages count 0).
-
-    Algorithm (the MapReduce-era standard, cf. Suri & Vassilvitskii 2011
-    "Counting triangles and the curse of the last reducer"): canonicalize
-    to distinct undirected edges ``a < b``, then ORIENT each edge from its
-    lower-(degree, id) endpoint to the higher one. Orientation turns the
-    graph into a DAG where every wedge join fans out by oriented
-    OUT-degree, which is O(sqrt(m)) even when raw degrees are power-law —
-    the super-node wedge explosion a naive neighbor self-join hits on web
-    graphs cannot happen. Each triangle x≺y≺z is found exactly once as
-    oriented edges (x,y)+(x,z) closed by (y,z).
-
-    Cost: two groupBys (dedup, degrees) and two self-joins on the oriented
-    edge key; the per-node rollup is one explode + groupBy with map-side
-    partial counts. Nodes in no triangle are kept with count 0 so the
-    output is a total function of the node set.
-    """
-    und = (edges.where(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    deg = (und.select(F.col("a").alias("node"))
-           .unionAll(und.select(F.col("b").alias("node")))
-           .groupBy("node").agg(F.count("*").alias("deg")))
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("da"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("db"))
-    a_first = (F.col("da") < F.col("db")) | \
-        ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    oriented = (und.join(da, "a").join(db, "b")
-                .select(F.when(a_first, F.col("a")).otherwise(F.col("b"))
-                        .alias("u"),
-                        F.when(a_first, F.col("b")).otherwise(F.col("a"))
-                        .alias("v"))
-                .persist())
-    e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
-    tri = (e1.join(e2, F.col("e1.u") == F.col("e2.u"))
-           .where(F.col("e1.v") != F.col("e2.v"))
-           .join(e3, (F.col("e3.u") == F.col("e1.v"))
-                 & (F.col("e3.v") == F.col("e2.v")))
-           .select(F.col("e1.u").alias("x"), F.col("e1.v").alias("y"),
-                   F.col("e2.v").alias("z")))
-    members = (tri.select(F.col("x").alias("node"))
-               .unionAll(tri.select(F.col("y").alias("node")))
-               .unionAll(tri.select(F.col("z").alias("node")))
-               .groupBy("node").agg(F.count("*").alias("c")))
-    nodes = deg.select("node")
-    return (nodes.join(members, "node", "left")
-            .select("node", F.coalesce(F.col("c"), F.lit(0)).cast("long")
-                    .alias("n_triangles")))
-
-
-def triangles_sql(edges_sql: str) -> str:
-    """DuckDB oracle for :func:`triangle_counts` — orientation-free
-    lexicographic x<y<z enumeration (each triangle once), identical
-    per-node membership counts."""
-    return f"""
-with und as (
-  select distinct least(src, dst) as a, greatest(src, dst) as b
-  from ({edges_sql}) where src <> dst),
-tri as (
-  select e1.a as x, e1.b as y, e2.b as z
-  from und e1
-  join und e2 on e2.a = e1.a and e2.b > e1.b
-  join und e3 on e3.a = e1.b and e3.b = e2.b),
-nodes as (select a as node from und union select b from und),
-cnt as (
-  select node, count(*) as c from (
-    select x as node from tri
-    union all select y from tri
-    union all select z from tri) group by node)
-select nodes.node, coalesce(cnt.c, 0)::bigint as n_triangles
-from nodes left join cnt on nodes.node = cnt.node
-"""
-
-
-def neighbor_jaccard(edges: DataFrame, min_shared: int = 1,
-                     max_dst_in_degree: int | None = None) -> DataFrame:
-    """Out-neighborhood Jaccard similarity between node pairs →
-    ``(node_a, node_b, n_shared, jaccard)`` with ``node_a < node_b`` —
-    co-citation-style related-page detection (two pages that link to the
-    same set of targets are about the same thing, cf. Small 1973; on a
-    host graph this surfaces mirror sites and template families).
-
-    Candidate pairs come from a self-join on the shared TARGET — never an
-    all-pairs product: only node pairs with ≥1 common out-neighbor are
-    materialized, and the fan-out per target is in-degree², so
-    ``max_dst_in_degree`` drops super-node targets (the everyone-links-to-
-    it home page contributes candidate pairs quadratically but almost no
-    Jaccard signal — same cap discipline as the LSH bucket cap and the
-    co-mention vocabulary). Degrees broadcast-join back onto the
-    pair aggregate; |union| = da + db − shared needs no second pass.
-    Jaccard is one integer division — bit-identical across engines.
-    """
-    e = edges.select("src", "dst").distinct()
-    if max_dst_in_degree is not None:
-        hot = (e.groupBy("dst").agg(F.count("*").alias("ind"))
-               .where(F.col("ind") > max_dst_in_degree)
-               .select("dst"))
-        e = e.join(hot, "dst", "left_anti")
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    l, r = e.alias("l"), e.alias("r")
-    pairs = (l.join(r, F.col("l.dst") == F.col("r.dst"))
-             .where(F.col("l.src") < F.col("r.src"))
-             .groupBy(F.col("l.src").alias("node_a"),
-                      F.col("r.src").alias("node_b"))
-             .agg(F.count("*").alias("n_shared"))
-             .where(F.col("n_shared") >= min_shared))
-    dega = deg.select(F.col("src").alias("node_a"), F.col("deg").alias("da"))
-    degb = deg.select(F.col("src").alias("node_b"), F.col("deg").alias("db"))
-    return (pairs.join(dega, "node_a").join(degb, "node_b")
-            .select("node_a", "node_b", F.col("n_shared").cast("long")
-                    .alias("n_shared"),
-                    F.round(F.col("n_shared")
-                            / (F.col("da") + F.col("db") - F.col("n_shared")),
-                            6).alias("jaccard")))
-
-
-def neighbor_jaccard_sql(edges_sql: str, min_shared: int = 1) -> str:
-    """DuckDB oracle for :func:`neighbor_jaccard` (uncapped)."""
-    return f"""
-with e as (select distinct src, dst from ({edges_sql})),
-deg as (select src, count(*) as deg from e group by src),
-pairs as (
-  select l.src as node_a, r.src as node_b, count(*) as n_shared
-  from e l join e r on l.dst = r.dst and l.src < r.src
-  group by l.src, r.src
-  having count(*) >= {min_shared})
-select p.node_a, p.node_b, p.n_shared::bigint as n_shared,
-       round(p.n_shared / (da.deg + db.deg - p.n_shared), 6) as jaccard
-from pairs p
-join deg da on da.src = p.node_a
-join deg db on db.src = p.node_b
-"""
-
-
-def label_propagation(edges: DataFrame, n_iter: int = 2) -> DataFrame:
-    """Synchronous label-propagation communities (Raghavan et al. 2007)
-    over the undirected view of ``(src, dst)`` edges → ``(node, label)``
-    — mirror-site families and template clusters on a host graph, at a
-    per-iteration cost of one join + one groupBy (the reason LPA is the
-    community algorithm that survives web scale; modularity methods
-    need global state).
-
-    DETERMINISTIC variant: every node starts labeled with its own id and
-    all nodes update simultaneously each round to the most frequent
-    neighbor label, ties broken by MINIMUM label — argmax via
-    (count desc, label asc) row_number, no dependence on partition or
-    aggregation order, so a fixed iteration count is exactly replayable
-    as unrolled SQL CTEs (same discipline as hits/pagerank_sql).
-
-    Fixed ``n_iter`` (not convergence-polled): synchronous LPA can
-    oscillate on bipartite structure, and bounded rounds keep lineage
-    flat — the production pattern is a small constant (2-5) anyway.
-    """
-    sym = (edges.where(F.col("src") != F.col("dst"))
-           .select("src", "dst")
-           .unionAll(edges.where(F.col("src") != F.col("dst"))
-                     .select(F.col("dst").alias("src"),
-                             F.col("src").alias("dst")))
-           .distinct()
-           .persist())
-    labels = (sym.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")))
-    w = Window.partitionBy("src").orderBy(F.col("c").desc(),
-                                          F.col("label").asc())
-    for _ in range(n_iter):
-        counts = (sym.join(labels, sym["dst"] == labels["node"])
-                  .groupBy("src", "label").agg(F.count("*").alias("c")))
-        labels = (counts.withColumn("rn", F.row_number().over(w))
-                  .where(F.col("rn") == 1)
-                  .select(F.col("src").alias("node"), "label"))
-    return labels
-
-
-def label_propagation_sql(edges_sql: str, n_iter: int = 2) -> str:
-    """The same fixed-iteration deterministic LPA unrolled as SQL CTEs."""
-    parts = [
-        f"e0 as (select src, dst from ({edges_sql}) where src <> dst)",
-        "e as (select distinct src, dst from ("
-        "select src, dst from e0 union all select dst, src from e0))",
-        "l0 as (select distinct src as node, src as label from e)",
-    ]
-    for i in range(1, n_iter + 1):
-        parts.append(
-            f"c{i} as (select e.src, l.label, count(*) as c"
-            f" from e join l{i-1} l on e.dst = l.node"
-            f" group by e.src, l.label)")
-        parts.append(
-            f"l{i} as (select src as node, label from ("
-            f"select src, label, row_number() over"
-            f" (partition by src order by c desc, label) as rn"
-            f" from c{i}) where rn = 1)")
-    return ("with " + ",\n".join(parts)
-            + f"\nselect node, label from l{n_iter}")
-
-
-def kcore_peel(edges: DataFrame, k: int = 3, n_rounds: int = 3,
-               checkpoint_dir: str | None = None) -> DataFrame:
-    """Fixed-round k-core peeling → surviving (node, degree).
-
-    Each round drops nodes whose UNDIRECTED degree among remaining edges is
-    < k (web-graph core extraction: link farms and boilerplate nav rings
-    survive high cores, long-tail leaf pages peel away). Fixed rounds keep
-    the operator oracle-exact (each round unrolls to three CTEs —
-    degree, keep-set, edge-filter — see :func:`kcore_sql`); true cores
-    need iteration to a fixpoint, which on power-law graphs converges in a
-    handful of rounds for small k — pass a larger ``n_rounds`` when the
-    degree histogram says the tail is deep.
-
-    Plan shape per round: one map-side-combined degree agg + two semi-joins
-    of the edge list against the keep set (vocabulary-sized at useful k —
-    AQE broadcasts it). Each round's surviving edge set is EAGERLY
-    materialized via :func:`_ckpt` (the same lineage-truncation contract as
-    :func:`pagerank` / :func:`transitive_closure`): the next round reads
-    it three times (degree agg + two joins), so leaving it lazy would
-    recompute the whole peel per reference — 3^rounds blowup. Pass
-    ``checkpoint_dir`` for the fault-tolerant variant on a real cluster.
-    """
-    und = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .distinct())
-    cur = _ckpt(und, checkpoint_dir)
-    for _ in range(n_rounds):
-        keep = (cur.groupBy("src").agg(F.count("*").alias("d"))
-                .filter(F.col("d") >= k).select("src"))
-        cur = _ckpt(cur.join(keep, "src")
-                    .join(keep.withColumnRenamed("src", "dst"), "dst")
-                    .select("src", "dst"), checkpoint_dir)
-    return (cur.groupBy(F.col("src").alias("node"))
-            .agg(F.count("*").cast("long").alias("degree")))
-
-
-def kcore_sql(edges_sql: str, k: int = 3, n_rounds: int = 3) -> str:
-    """DuckDB mirror of :func:`kcore_peel`, generated by the same loop."""
-    parts = [f"e0 as (select src, dst from ({edges_sql}) "
-             f"union select dst, src from ({edges_sql}))"]
-    for i in range(1, n_rounds + 1):
-        parts.append(f"k{i} as (select src from (select src, count(*) as d "
-                     f"from e{i - 1} group by src) where d >= {k})")
-        parts.append(f"e{i} as (select e.src, e.dst from e{i - 1} e "
-                     f"join k{i} a on e.src = a.src "
-                     f"join k{i} b on e.dst = b.src)")
-    return ("with " + ",\n".join(parts)
-            + f"\nselect src as node, cast(count(*) as bigint) as degree "
-              f"from e{n_rounds} group by src")
-
-
-def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
-    """Skip-gram training pairs from a walk corpus → ``(center, context,
-    n_pairs)`` — the embedding-training data-prep step downstream of
-    :func:`random_walks` (DeepWalk/node2vec pipelines feed exactly this
-    co-occurrence table to the trainer).
-
-    One self-join of the long-format walk table keyed on (start, walk):
-    each walk is ``length+1`` rows, so the within-walk pair expansion is
-    bounded by ``2*window`` per row — linear in corpus size, one keyed
-    shuffle, then a vocabulary-pair-sized groupBy with map-side combine.
-    """
-    a, b = walks.alias("a"), walks.alias("b")
-    step_gap = F.abs(F.col("a.step") - F.col("b.step"))
-    return (a.join(b, (F.col("a.start") == F.col("b.start"))
-                   & (F.col("a.walk") == F.col("b.walk"))
-                   & (F.col("a.step") != F.col("b.step"))
-                   & (step_gap <= window))
-            .groupBy(F.col("a.node").alias("center"),
-                     F.col("b.node").alias("context"))
-            .agg(F.count("*").cast("long").alias("n_pairs")))
-
-
-def skipgram_sql(walks_sql: str, window: int = 2) -> str:
-    """DuckDB mirror of :func:`skipgram_pairs` (walks SQL nests as a
-    subquery, so the recursive walk CTE stays self-contained)."""
-    return f"""
-with w as (select * from ({walks_sql}))
-select a.node as center, b.node as context,
-       cast(count(*) as bigint) as n_pairs
-from w a join w b
-  on a.start = b.start and a.walk = b.walk and a.step <> b.step
- and abs(a.step - b.step) <= {window}
-group by a.node, b.node
-"""
-
-
-def clustering_coeff(edges: DataFrame) -> DataFrame:
-    """Local clustering coefficient per node → ``(node, deg, n_triangles,
-    lcc)`` with ``lcc = 2·t / (deg·(deg−1))`` (Watts & Strogatz 1998) —
-    the template-farm / link-ring detector on a host graph: organic
-    neighborhoods close triangles, spam rings and hub pages do not.
-
-    Rides :func:`triangle_counts` (degree-oriented wedge join — the
-    power-law-safe enumeration) plus one degree aggregation on the same
-    deduplicated undirected edge set.  The division happens once per node
-    on two exact integers and is rounded to 6 places, so both engines
-    agree bit-for-bit.
-    """
-    und = (edges.where(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    deg = (und.select(F.col("a").alias("node"))
-           .unionAll(und.select(F.col("b").alias("node")))
-           .groupBy("node").agg(F.count("*").alias("deg")))
-    tri = triangle_counts(edges)
-    return (deg.join(tri, "node")
-            .select("node", F.col("deg").cast("long").alias("deg"),
-                    "n_triangles",
-                    F.when(F.col("deg") < 2, F.lit(0.0))
-                    .otherwise(F.round(2.0 * F.col("n_triangles")
-                                       / (F.col("deg")
-                                          * (F.col("deg") - 1)), 6))
-                    .alias("lcc")))
-
-
-def clustering_coeff_sql(edges_sql: str) -> str:
-    """DuckDB oracle for :func:`clustering_coeff` — triangles oracle plus
-    the same degree/round arithmetic."""
-    return f"""
-with und as (
-  select distinct least(src, dst) as a, greatest(src, dst) as b
-  from ({edges_sql}) where src <> dst),
-deg as (
-  select node, count(*) as deg from (
-    select a as node from und union all select b from und) group by node),
-tri as ({triangles_sql(edges_sql)})
-select deg.node, deg.deg::bigint as deg, tri.n_triangles,
-       case when deg.deg < 2 then 0.0
-            else round(2.0 * tri.n_triangles / (deg.deg * (deg.deg - 1)), 6)
-       end as lcc
-from deg join tri on deg.node = tri.node
-"""
-
-
-def degree_assortativity(edges: DataFrame) -> DataFrame:
-    """Degree assortativity coefficient (Newman 2002) → one row
-    ``(n_edges, assortativity)``: the Pearson correlation of endpoint
-    degrees over undirected edges — negative on web graphs (hubs attach
-    to leaves), near zero on random graphs; a one-number structural
-    fingerprint cheap enough to compute per crawl snapshot.
-
-    Sum-form Pearson over the symmetrized edge list: every sum is an
-    exact integer computed by one map-side-combined aggregation (the only
-    shuffle is the single-row final combine), and the floating division
-    happens once on the driver-side row — bit-stable across engines.
-    """
-    und = (edges.where(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    deg = (und.select(F.col("a").alias("node"))
-           .unionAll(und.select(F.col("b").alias("node")))
-           .groupBy("node").agg(F.count("*").alias("deg")))
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("da"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("db"))
-    e = und.join(da, "a").join(db, "b")
-    # symmetrized sums: each edge contributes (da,db) and (db,da)
-    s = e.agg(
-        F.count("*").alias("m"),
-        F.sum(F.col("da") + F.col("db")).alias("sx"),
-        F.sum(F.col("da") * F.col("db") * 2).alias("sxy"),
-        F.sum(F.col("da") * F.col("da")
-              + F.col("db") * F.col("db")).alias("sxx"))
-    n = F.col("m") * 2
-    num = n * F.col("sxy") - F.col("sx") * F.col("sx")
-    den = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    return s.select(F.col("m").cast("long").alias("n_edges"),
-                    F.when(den == 0, F.lit(0.0))
-                    .otherwise(F.round(num.cast("double") / den, 6))
-                    .alias("assortativity"))
-
-
-def degree_assortativity_sql(edges_sql: str) -> str:
-    """DuckDB oracle for :func:`degree_assortativity` — identical integer
-    sum-form Pearson."""
-    return f"""
-with und as (
-  select distinct least(src, dst) as a, greatest(src, dst) as b
-  from ({edges_sql}) where src <> dst),
-deg as (
-  select node, count(*) as deg from (
-    select a as node from und union all select b from und) group by node),
-e as (
-  select x.deg as da, y.deg as db
-  from und join deg x on und.a = x.node join deg y on und.b = y.node),
-s as (
-  select count(*) as m, sum(da + db) as sx, sum(2 * da * db) as sxy,
-         sum(da * da + db * db) as sxx from e)
-select m::bigint as n_edges,
-       case when (2 * m * sxx - sx * sx) = 0 then 0.0
-            else round((2 * m * sxy - sx * sx)::double
-                       / (2 * m * sxx - sx * sx), 6)
-       end as assortativity
-from s
-"""
-
-
-def neighbor_sample(edges: DataFrame, k: int = 10,
-                    salt: str = "s0") -> DataFrame:
-    """Deterministic per-node neighbor sampling → ``(src, dst, rank)``,
-    ``rank ∈ [1, k]`` — the GraphSAGE fan-out step (Hamilton et al. 2017):
-    training needs a bounded neighborhood per node, and a *hash-ranked*
-    top-k (md5 over salt+src+dst) is reproducible across retries, resumed
-    checkpoints, and engines, where ``rand()`` is not.  Changing ``salt``
-    redraws the sample (one salt per epoch).
-
-    One keyed shuffle; the per-node window is bounded by out-degree and
-    AQE's skew handling splits hub partitions.  md5 is the oracle-stable
-    choice (swap xxhash64 at production scale, same plan).
-    """
-    e = edges.select("src", "dst").distinct()
-    h = F.md5(F.concat_ws("|", F.lit(salt), "src", "dst"))
-    w = Window.partitionBy("src").orderBy(h.asc(), F.col("dst").asc())
-    return (e.select("src", "dst", F.row_number().over(w).alias("rank"))
-            .where(F.col("rank") <= k))
-
-
-def neighbor_sample_sql(edges_sql: str, k: int = 10, salt: str = "s0") -> str:
-    """DuckDB oracle for :func:`neighbor_sample` — identical hash ranking."""
-    return f"""
-with e as (select distinct src, dst from ({edges_sql})),
-r as (
-  select src, dst,
-         row_number() over (
-           partition by src
-           order by md5('{salt}' || '|' || src || '|' || dst), dst) as rank
-  from e)
-select src, dst, rank from r where rank <= {k}
-"""
-
-
-def neighbor_mean_agg(edges: DataFrame, features: DataFrame,
-                      node_col: str = "node",
-                      feature_col: str = "f") -> DataFrame:
-    """Two-round mean neighborhood aggregation → ``(node, f, h1, h2)`` —
-    the message-passing feature prep a GraphSAGE/GCN training job consumes:
-    ``h1(v) = mean f(u)`` over out-neighbors, ``h2(v) = mean h1(u)`` over
-    the same edges (missing neighbors → null, as in masked aggregation).
-
-    Each round is one edge-keyed join + one dst-keyed aggregate — the
-    standard two-shuffle-per-layer budget of distributed GNN sampling
-    systems; K layers compose linearly.  Means are single divisions of
-    exact integer sums rounded to 6 places → engine-stable.
-    """
-    e = edges.select("src", "dst").distinct()
-    f0 = features.select(F.col(node_col).alias("node"),
-                         F.col(feature_col).cast("long").alias("f"))
-    nb = (e.join(f0.withColumnsRenamed({"node": "dst", "f": "nf"}), "dst")
-          .groupBy("src")
-          .agg(F.round(F.sum("nf").cast("double") / F.count("nf"), 6)
-               .alias("h1")))
-    h1 = f0.join(nb.withColumnRenamed("src", "node"), "node", "left")
-    nb2 = (e.join(h1.select(F.col("node").alias("dst"),
-                            F.col("h1").alias("nh")), "dst")
-           .where(F.col("nh").isNotNull())
-           .groupBy("src")
-           .agg(F.round(F.sum("nh") / F.count("nh"), 6).alias("h2")))
-    return (h1.join(nb2.withColumnRenamed("src", "node"), "node", "left")
-            .select("node", "f", "h1", "h2"))
-
-
-def neighbor_mean_agg_sql(edges_sql: str, features_sql: str) -> str:
-    """DuckDB oracle for :func:`neighbor_mean_agg` (h2 averages the
-    *rounded* h1, mirroring the Spark composition exactly)."""
-    return f"""
-with e as (select distinct src, dst from ({edges_sql})),
-f0 as (select node, f::bigint as f from ({features_sql})),
-nb as (
-  select e.src, round(sum(f0.f)::double / count(f0.f), 6) as h1
-  from e join f0 on e.dst = f0.node group by e.src),
-h1 as (select f0.node, f0.f, nb.h1 from f0 left join nb on f0.node = nb.src),
-nb2 as (
-  select e.src, round(sum(h1.h1) / count(h1.h1), 6) as h2
-  from e join h1 on e.dst = h1.node where h1.h1 is not null group by e.src)
-select h1.node, h1.f, h1.h1, nb2.h2
-from h1 left join nb2 on h1.node = nb2.src
-"""
-
-
-def reciprocity(edges: DataFrame) -> DataFrame:
-    """Directed-edge reciprocity → one row ``(n_edges, n_reciprocal,
-    reciprocity)``: the fraction of directed edges whose reverse also
-    exists — near zero on hierarchies and content DAGs, high inside link
-    exchanges and mutual-citation rings, which makes it a cheap per-crawl
-    spam fingerprint next to assortativity.
-
-    One self-semi-join on the reversed key; the ratio is a single integer
-    division rounded to 6 — engine-stable.
-    """
-    e = edges.where(F.col("src") != F.col("dst")) \
-        .select("src", "dst").distinct()
-    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    recip = e.join(rev, ["src", "dst"], "left_semi")
-    return (e.agg(F.count("*").alias("n_edges"))
-            .crossJoin(recip.agg(F.count("*").alias("n_reciprocal")))
-            .select(F.col("n_edges").cast("long").alias("n_edges"),
-                    F.col("n_reciprocal").cast("long").alias("n_reciprocal"),
-                    F.round(F.col("n_reciprocal").cast("double")
-                            / F.col("n_edges"), 6).alias("reciprocity")))
-
-
-def reciprocity_sql(edges_sql: str) -> str:
-    """DuckDB oracle for :func:`reciprocity`."""
-    return f"""
-with e as (select distinct src, dst from ({edges_sql}) where src <> dst),
-r as (select count(*) as n_reciprocal from e
-      where exists (select 1 from e e2
-                    where e2.src = e.dst and e2.dst = e.src))
-select (select count(*) from e)::bigint as n_edges,
-       r.n_reciprocal::bigint as n_reciprocal,
-       round(r.n_reciprocal::double / (select count(*) from e), 6)
-         as reciprocity
-from r
-"""
-
-
-def edge_split(edges: DataFrame, salt: str = "split0",
-               train_buckets: int = 8, valid_buckets: int = 1,
-               n_buckets: int = 10) -> DataFrame:
-    """Deterministic link-prediction split → ``(src, dst, split)`` with
-    ``split ∈ {train, valid, test}`` — the evaluation prep for KG-
-    embedding training (pairs with ``negative_samples``): hashing
-    md5(salt|src|dst) into buckets gives a retry-stable 80/10/10 split
-    where ``randomSplit`` would reshuffle on every recomputation, and the
-    assignment is a pure per-row projection (zero shuffles beyond the
-    dedup distinct), so the split of a 10^12-edge graph is free.
-    """
-    e = edges.select("src", "dst").distinct()
-    h = F.conv(F.substring(
-        F.md5(F.concat_ws("|", F.lit(salt), "src", "dst")), 1, 8), 16, 10) \
-        .cast("long") % n_buckets
-    split = (F.when(h < train_buckets, "train")
-             .when(h < train_buckets + valid_buckets, "valid")
-             .otherwise("test"))
-    return e.select("src", "dst", split.alias("split"))
-
-
-def edge_split_sql(edges_sql: str, salt: str = "split0",
-                   train_buckets: int = 8, valid_buckets: int = 1,
-                   n_buckets: int = 10) -> str:
-    """DuckDB oracle for :func:`edge_split` — identical md5-prefix bucket."""
-    h = (f"(('0x' || substr(md5('{salt}' || '|' || src || '|' || dst),"
-         f" 1, 8))::bigint % {n_buckets})")
-    return f"""
-with e as (select distinct src, dst from ({edges_sql}))
-select src, dst,
-       case when {h} < {train_buckets} then 'train'
-            when {h} < {train_buckets + valid_buckets} then 'valid'
-            else 'test' end as split
-from e
-"""
-
-
-def bfs_per_seed(edges: DataFrame, seeds: DataFrame,
-                 max_hops: int = 4,
-                 checkpoint_dir: str | None = None) -> DataFrame:
-    """Per-seed BFS hop-distances → ``(seed, node, dist)`` — the
-    :func:`bfs_distances` frontier loop keyed on (seed, node) so each
-    seed's distance field stays separate (K seeds cost one shared edge
-    scan per round, not K traversals).  ``seeds`` is a one-column
-    ``node`` DataFrame; rounds are bounded by ``max_hops`` (sampled
-    centrality wants a horizon, not eccentricity)."""
-    e = edges.select("src", "dst").distinct().persist()
-    e.count()
-    known = _ckpt(seeds.select(F.col("node").alias("seed"))
-                  .distinct()
-                  .withColumn("node", F.col("seed"))
-                  .withColumn("dist", F.lit(0).cast("long")),
-                  checkpoint_dir)
-    frontier = known.select("seed", "node")
-    for d in range(1, max_hops + 1):
-        nxt = (frontier.join(e, frontier["node"] == e["src"])
-               .select("seed", F.col("dst").alias("node")).distinct()
-               .join(known.select("seed", "node"), ["seed", "node"],
-                     "left_anti")
-               .withColumn("dist", F.lit(d).cast("long")))
-        nxt = _ckpt(nxt, checkpoint_dir)
-        if nxt.isEmpty():
-            break
-        known = _ckpt(known.unionByName(nxt), checkpoint_dir)
-        frontier = nxt.select("seed", "node")
-    e.unpersist()
-    return known
-
-
-def _lcm_upto(n: int) -> int:
-    import math
-    out = 1
-    for i in range(1, n + 1):
-        out = out * i // math.gcd(out, i)
-    return out
-
-
-def harmonic_centrality_sampled(edges: DataFrame, seeds: DataFrame,
-                                max_hops: int = 4,
-                                checkpoint_dir: str | None = None
-                                ) -> DataFrame:
-    """Sampled harmonic centrality (Boldi & Vigna 2014's centrality, over
-    a seed sample instead of all-pairs) → ``(node, harmonic_x, n_seeds)``:
-    ``harmonic_x = Σ_seeds L/d(seed, node)`` for reachable seeds at
-    ``0 < d ≤ max_hops``, with ``L = lcm(1..max_hops)`` so every term —
-    and therefore the SUM — is an exact integer: floating ``Σ 1/d`` is
-    summation-order-dependent and can never hash-match across engines;
-    the scaled-integer form is bit-exact (divide by L for the standard
-    value).  Cost: one shared frontier iteration for all K seeds."""
-    L = _lcm_upto(max_hops)
-    d = bfs_per_seed(edges, seeds, max_hops=max_hops,
-                     checkpoint_dir=checkpoint_dir)
-    return (d.where(F.col("dist") > 0)
-            .groupBy("node")
-            .agg(F.sum(F.expr(f"{L} div dist")).cast("long")
-                 .alias("harmonic_x"),
-                 F.count("*").cast("long").alias("n_seeds")))
-
-
-def harmonic_sql(edges_sql: str, seeds_sql: str, max_hops: int = 4) -> str:
-    """DuckDB oracle for :func:`harmonic_centrality_sampled` — recursive
-    per-seed BFS CTE, identical integer scaling."""
-    L = _lcm_upto(max_hops)
-    return f"""
-with recursive e as (select distinct src, dst from ({edges_sql})),
-s as (select distinct node as seed from ({seeds_sql})),
-r(seed, node, d) as (
-  select seed, seed, 0 from s
-  union
-  select r.seed, e.dst, r.d + 1 from r join e on e.src = r.node
-  where r.d < {max_hops}),
-m as (select seed, node, min(d) as dist from r group by seed, node)
-select node, sum({L} // dist)::bigint as harmonic_x,
-       count(*)::bigint as n_seeds
-from m where dist > 0 group by node
-"""
-
-
-def predicate_cardinality(triples: DataFrame,
-                          functional_frac: float = 0.99) -> DataFrame:
-    """Schema mining: per-predicate cardinality profile →
-    ``(pred, n_triples, n_subjects, n_objects, n_single_subj,
-    is_functional, is_inverse_functional)``.
-
-    A predicate is (quasi-)functional when ≥ ``functional_frac`` of its
-    subjects carry exactly one distinct object (owl:FunctionalProperty as
-    a statistic, not an axiom) — the signal that drives FK/key discovery
-    over extracted web data and tells the fusion stage which attributes
-    SHOULD be single-valued.  Inverse-functional mirrors it on the object
-    side (the identity-resolution hint: email, canonical url).
-
-    Two aggregation passes keyed on (pred, subj) / (pred, obj) — both
-    map-side combinable, payload-free; output is vocabulary-sized.
-    The functional test is exact-integer (n_single·100 ≥ frac·100·n) so
-    both engines agree without float thresholds.
-    """
-    pct = int(round(functional_frac * 100))
-    by_subj = (triples.groupBy("pred", "subj")
-               .agg(F.countDistinct("obj").alias("nv"),
-                    F.count("*").alias("nt")))
-    subj_side = (by_subj.groupBy("pred")
-                 .agg(F.sum("nt").alias("n_triples"),
-                      F.count("*").alias("n_subjects"),
-                      F.sum((F.col("nv") == 1).cast("long"))
-                      .alias("n_single_subj")))
-    by_obj = (triples.groupBy("pred", "obj")
-              .agg(F.countDistinct("subj").alias("ns")))
-    obj_side = (by_obj.groupBy("pred")
-                .agg(F.count("*").alias("n_objects"),
-                     F.sum((F.col("ns") == 1).cast("long"))
-                     .alias("n_single_obj")))
-    j = subj_side.join(obj_side, "pred")
-    return j.select(
-        "pred",
-        F.col("n_triples").cast("long").alias("n_triples"),
-        F.col("n_subjects").cast("long").alias("n_subjects"),
-        F.col("n_objects").cast("long").alias("n_objects"),
-        F.col("n_single_subj").cast("long").alias("n_single_subj"),
-        (F.col("n_single_subj") * 100 >= F.col("n_subjects") * pct)
-        .alias("is_functional"),
-        (F.col("n_single_obj") * 100 >= F.col("n_objects") * pct)
-        .alias("is_inverse_functional"))
-
-
-def predicate_cardinality_sql(triples_sql: str,
-                              functional_frac: float = 0.99) -> str:
-    """DuckDB oracle for :func:`predicate_cardinality`."""
-    pct = int(round(functional_frac * 100))
-    return f"""
-with t as ({triples_sql}),
-bs as (select pred, subj, count(distinct obj) as nv, count(*) as nt
-       from t group by pred, subj),
-ss as (select pred, sum(nt) as n_triples, count(*) as n_subjects,
-              sum(case when nv = 1 then 1 else 0 end) as n_single_subj
-       from bs group by pred),
-bo as (select pred, obj, count(distinct subj) as ns
-       from t group by pred, obj),
-os as (select pred, count(*) as n_objects,
-              sum(case when ns = 1 then 1 else 0 end) as n_single_obj
-       from bo group by pred)
-select ss.pred, n_triples::bigint as n_triples,
-       n_subjects::bigint as n_subjects, n_objects::bigint as n_objects,
-       n_single_subj::bigint as n_single_subj,
-       (n_single_subj * 100 >= n_subjects * {pct}) as is_functional,
-       (n_single_obj * 100 >= n_objects * {pct}) as is_inverse_functional
-from ss join os on ss.pred = os.pred
-"""
-
-
-def schema_drift(triples_a: DataFrame, triples_b: DataFrame) -> DataFrame:
-    """Schema drift between two graph snapshots: full-outer join of their
-    characteristic sets → ``(cs, n_a, n_b, delta)`` — which subject
-    SHAPES appeared, vanished, or changed population between crawls
-    (new template on a host, a vocabulary migration, an extractor
-    regression).  Characteristic-set tables are vocabulary-sized, so the
-    join is trivially broadcastable; the expensive part is the two
-    summaries, each two narrow keyed shuffles."""
-    a = characteristic_sets(triples_a).select(
-        "cs", F.col("n_subjects").alias("n_a"))
-    b = characteristic_sets(triples_b).select(
-        "cs", F.col("n_subjects").alias("n_b"))
-    return (a.join(b, "cs", "full_outer")
-            .select("cs",
-                    F.coalesce("n_a", F.lit(0)).cast("long").alias("n_a"),
-                    F.coalesce("n_b", F.lit(0)).cast("long").alias("n_b"))
-            .withColumn("delta", (F.col("n_b") - F.col("n_a")).cast("long")))
-
-
-def schema_drift_sql(triples_a_sql: str, triples_b_sql: str) -> str:
-    """DuckDB oracle for :func:`schema_drift`."""
-    return f"""
-with a as (select cs, n_subjects as n_a
-           from ({characteristic_sets_sql(triples_a_sql)})),
-b as (select cs, n_subjects as n_b
-      from ({characteristic_sets_sql(triples_b_sql)}))
-select coalesce(a.cs, b.cs) as cs,
-       coalesce(n_a, 0)::bigint as n_a, coalesce(n_b, 0)::bigint as n_b,
-       (coalesce(n_b, 0) - coalesce(n_a, 0))::bigint as delta
-from a full outer join b on a.cs = b.cs
-"""
-
-
-def pred_value_profiles(triples: DataFrame) -> DataFrame:
-    """Per-predicate VALUE profile → ``(prop, n_values, n_numeric,
-    min_len, max_len, total_len)`` — the data-profiling statistic a
-    mapping-quality review reads next to the cardinality flags: a
-    should-be-numeric column with a nonzero non-numeric remainder is an
-    extraction bug surfacing as data.  One map-side-combined aggregation
-    keyed on the predicate local name; exact integers only."""
-    num = F.col("obj").try_cast("double").isNotNull()
-    return (triples
-            .select(pred_local_name(F.col("pred")).alias("prop"),
-                    F.length("obj").alias("_l"), num.alias("_n"))
-            .groupBy("prop")
-            .agg(F.count("*").cast("long").alias("n_values"),
-                 F.sum(F.col("_n").cast("long")).cast("long")
-                 .alias("n_numeric"),
-                 F.min("_l").cast("long").alias("min_len"),
-                 F.max("_l").cast("long").alias("max_len"),
-                 F.sum("_l").cast("long").alias("total_len")))
-
-
-def pred_value_profiles_sql(triples_sql: str) -> str:
-    """DuckDB oracle for :func:`pred_value_profiles`."""
-    return f"""
-select split_part(pred, '#', 2) as prop,
-       count(*)::bigint as n_values,
-       sum(case when try_cast(obj as double) is not null
-                then 1 else 0 end)::bigint as n_numeric,
-       min(length(obj))::bigint as min_len,
-       max(length(obj))::bigint as max_len,
-       sum(length(obj))::bigint as total_len
-from ({triples_sql}) group by split_part(pred, '#', 2)
-"""
-
-
-def star_cardinality_estimate(triples: DataFrame,
-                              props: Sequence[str]) -> DataFrame:
-    """Close the loop on the characteristic-set statistic: estimate the
-    subject cardinality of a star pattern (subjects carrying ALL of
-    ``props``) from the CS summary and verify against the exact count →
-    one row ``(props, estimated, actual)`` — the Neumann & Moerkotte
-    ICDE'11 use-case itself: for distinct-subject star counts the CS
-    estimate is EXACT (every subject belongs to exactly one set), which
-    is precisely what makes the summary a planner statistic rather than
-    a heuristic.
-
-    The estimate side touches only the vocabulary-sized summary; the
-    verification side is the semi-join-count a planner would be avoiding.
-    """
-    cs = characteristic_sets(triples)
-    want = sorted(set(props))
-    member = cs
-    for p in want:
-        member = member.where(
-            F.array_contains(F.split(F.col("cs"), " "), p))
-    est = member.agg(F.coalesce(F.sum("n_subjects"), F.lit(0))
-                     .cast("long").alias("estimated"))
-    d = (triples
-         .select("subj", pred_local_name(F.col("pred")).alias("p"))
-         .where(F.col("p").isin(want)).distinct())
-    actual = (d.groupBy("subj").agg(F.count("*").alias("k"))
-              .where(F.col("k") == len(want))
-              .agg(F.count("*").cast("long").alias("actual")))
-    return (est.crossJoin(actual)
-            .select(F.lit(" ".join(want)).alias("props"),
-                    "estimated", "actual"))
-
-
-def star_cardinality_estimate_sql(triples_sql: str,
-                                  props: Sequence[str]) -> str:
-    """DuckDB oracle for :func:`star_cardinality_estimate`."""
-    want = sorted(set(props))
-    conds = " and ".join(
-        f"list_contains(string_split(cs, ' '), '{p}')" for p in want)
-    return f"""
-with summary as ({characteristic_sets_sql(triples_sql)}),
-est as (select coalesce(sum(n_subjects), 0)::bigint as estimated
-        from summary where {conds}),
-d as (select distinct subj, split_part(pred, '#', 2) as p
-      from ({triples_sql})
-      where split_part(pred, '#', 2) in
-            ({', '.join(repr(p) for p in want)})),
-act as (select count(*)::bigint as actual from (
-          select subj from d group by subj
-          having count(*) = {len(want)}))
-select '{' '.join(want)}' as props, estimated, actual
-from est cross join act
-"""

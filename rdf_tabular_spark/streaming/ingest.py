@@ -200,100 +200,3 @@ def stream_pages_to_store(spark: SparkSession, input_dir: str,
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def stream_sessionize(spark: SparkSession, input_dir: str, out_dir: str,
-                      checkpoint_dir: str, gap_minutes: int = 30,
-                      watermark: str = "1 hour",
-                      available_now: bool = True):
-    """Event-time session windows over a clickstream — the canonical custom
-    stateful operator (``applyInPandasWithState`` + event-time timeout).
-    Batch face: queries.events_sessionize; this is the same 30-min-gap
-    semantics running incrementally.
-
-    Per user the open session lives in state (start/end micros, count,
-    value sum). A new event either extends it (gap ≤ ``gap_minutes``) or
-    closes it (emitted immediately, append mode). Sessions with no further
-    events close when the WATERMARK passes ``end + gap`` — the event-time
-    timeout — so late events inside the watermark still join their
-    session, and state never grows past one row per active user.
-    Output rows carry epoch-microsecond bounds (integer-exact, matching
-    the batch query's convention).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (DoubleType, LongType, StringType,
-                                   StructField, StructType, TimestampType)
-
-    events_schema = StructType([
-        StructField("event_id", LongType(), True),
-        StructField("ts", TimestampType(), True),
-        StructField("user_id", LongType(), True),
-        StructField("event_type", StringType(), True),
-        StructField("value", DoubleType(), True),
-    ])
-    ev = (spark.readStream.schema(events_schema).parquet(input_dir)
-          .withWatermark("ts", watermark)
-          .select("user_id", "ts", "value"))
-
-    out_schema = StructType([
-        StructField("user_id", LongType(), False),
-        StructField("start_us", LongType(), False),
-        StructField("end_us", LongType(), False),
-        StructField("n_events", LongType(), False),
-        StructField("sum_value", DoubleType(), False),
-    ])
-    state_schema = StructType([
-        StructField("start_us", LongType(), False),
-        StructField("end_us", LongType(), False),
-        StructField("n_events", LongType(), False),
-        StructField("sum_value", DoubleType(), False),
-    ])
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def session_fn(key, pdfs, state: GroupState):
-        import pandas as pd
-        (uid,) = key
-        closed = []
-        if state.hasTimedOut:
-            s, e, n, sv = state.get
-            closed.append((int(uid), int(s), int(e), int(n), float(sv)))
-            state.remove()
-        else:
-            cur = list(state.get) if state.exists else None
-            evs = [pdf[["ts", "value"]] for pdf in pdfs if not pdf.empty]
-            if evs:
-                allp = pd.concat(evs).sort_values("ts")
-                us_col = allp["ts"].astype("datetime64[us]").astype("int64")
-                for us, val in zip(us_col, allp["value"]):
-                    us, val = int(us), float(val)
-                    if cur is None:
-                        cur = [us, us, 1, val]
-                    elif us - cur[1] > gap_us:
-                        closed.append((int(uid), cur[0], cur[1],
-                                       cur[2], cur[3]))
-                        cur = [us, us, 1, val]
-                    else:
-                        cur[1] = max(cur[1], us)
-                        cur[2] += 1
-                        cur[3] += val
-            if cur is not None:
-                state.update(tuple(cur))
-                # event-time timeout: fire once the watermark passes
-                # session end + gap (milliseconds API)
-                state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
-        if closed:
-            yield pd.DataFrame(
-                closed, columns=["user_id", "start_us", "end_us",
-                                 "n_events", "sum_value"])
-
-    sessions = ev.groupBy("user_id").applyInPandasWithState(
-        session_fn, outputStructType=out_schema,
-        stateStructType=state_schema, outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout)
-    writer = (sessions.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,13 +1,9 @@
-"""Unit tests for the fusion / relation-extraction / graph-structure tier —
-hand-computed expectations on tiny fixtures (the oracle-parity sweep covers
-the corpus-scale versions)."""
-
-import pytest
+"""Unit tests for the fusion / relation-extraction tier — hand-computed
+expectations on tiny fixtures (the oracle-parity sweep covers the
+corpus-scale versions)."""
 
 from rdf_tabular_spark.operators.fusion import (RDF_NS, fuse_majority,
                                                 reify_statements)
-from rdf_tabular_spark.operators.graph import (clustering_coeff,
-                                               degree_assortativity)
 from rdf_tabular_spark.operators.relations import (hearst_matches,
                                                    hearst_pair_counts)
 
@@ -89,40 +85,6 @@ def test_hearst_no_match_is_empty(spark):
     assert hearst_matches(df).count() == 0
 
 
-# --- graph structure --------------------------------------------------------
-
-def test_clustering_coeff_triangle_plus_tail(spark):
-    # triangle a-b-c plus pendant d hanging off a
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("a", "c"), ("a", "d")],
-        "src string, dst string")
-    out = {r["node"]: (r["deg"], r["n_triangles"], r["lcc"])
-           for r in clustering_coeff(edges).collect()}
-    assert out["a"] == (3, 1, pytest.approx(1 / 3, abs=1e-6))
-    assert out["b"] == (2, 1, 1.0)
-    assert out["c"] == (2, 1, 1.0)
-    assert out["d"] == (1, 0, 0.0)
-
-
-def test_assortativity_star_is_negative(spark):
-    # star: hub with 3 leaves -> perfectly disassortative (r = -1)
-    edges = spark.createDataFrame(
-        [("h", "l1"), ("h", "l2"), ("h", "l3")], "src string, dst string")
-    row = degree_assortativity(edges).collect()[0]
-    assert row["n_edges"] == 3
-    assert row["assortativity"] == pytest.approx(-1.0, abs=1e-6)
-
-
-def test_assortativity_regular_graph_degenerate(spark):
-    # 4-cycle: all degrees equal -> zero variance -> defined 0.0
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")],
-        "src string, dst string")
-    row = degree_assortativity(edges).collect()[0]
-    assert row["n_edges"] == 4
-    assert row["assortativity"] == 0.0
-
-
 # --- job integration --------------------------------------------------------
 
 def test_extract_job_fuse_reify_hearst(spark, tmp_path):
@@ -151,78 +113,6 @@ def test_extract_job_fuse_reify_hearst(spark, tmp_path):
     rel = spark.read.parquet(os.path.join(out, "relations", "fr1"))
     assert set(rel.columns) == {"hyponym", "hypernym", "n_mentions",
                                 "n_docs"}
-
-
-# --- GNN feature prep + reciprocity -----------------------------------------
-
-def test_neighbor_sample_bounded_and_deterministic(spark):
-    from rdf_tabular_spark.operators.graph import neighbor_sample
-    edges = spark.createDataFrame(
-        [("a", f"n{i}") for i in range(10)] + [("b", "n0")],
-        "src string, dst string")
-    s1 = neighbor_sample(edges, k=3, salt="e0").collect()
-    per_src = {}
-    for r in s1:
-        per_src.setdefault(r["src"], []).append((r["rank"], r["dst"]))
-    assert len(per_src["a"]) == 3 and sorted(r for r, _ in per_src["a"]) == [1, 2, 3]
-    assert per_src["b"] == [(1, "n0")]
-    # deterministic: identical on rerun...
-    s2 = neighbor_sample(edges, k=3, salt="e0").collect()
-    assert sorted(map(tuple, s1)) == sorted(map(tuple, s2))
-    # ...and a different salt redraws the sample (10 choose 3 makes a
-    # collision across all ranks unlikely; assert ranks move for SOME dst)
-    s3 = neighbor_sample(edges, k=10, salt="e1").collect()
-    r0 = {(r["src"], r["dst"]): r["rank"] for r in
-          neighbor_sample(edges, k=10, salt="e0").collect()}
-    r1 = {(r["src"], r["dst"]): r["rank"] for r in s3}
-    assert r0 != r1
-
-
-def test_neighbor_mean_agg_two_hops(spark):
-    from rdf_tabular_spark.operators.graph import neighbor_mean_agg
-    # chain a -> b -> c with features 1, 10, 100
-    edges = spark.createDataFrame([("a", "b"), ("b", "c")],
-                                  "src string, dst string")
-    feats = spark.createDataFrame([("a", 1), ("b", 10), ("c", 100)],
-                                  "node string, f long")
-    out = {r["node"]: (r["f"], r["h1"], r["h2"])
-           for r in neighbor_mean_agg(edges, feats).collect()}
-    assert out["a"] == (1, 10.0, 100.0)   # h1 = f(b); h2 = h1(b) = f(c)
-    assert out["b"] == (10, 100.0, None)  # c has no h1 -> masked
-    assert out["c"] == (100, None, None)
-
-
-def test_reciprocity_half(spark):
-    from rdf_tabular_spark.operators.graph import reciprocity
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "a"), ("a", "c"), ("c", "d")],
-        "src string, dst string")
-    row = reciprocity(edges).collect()[0]
-    assert (row["n_edges"], row["n_reciprocal"]) == (4, 2)
-    assert row["reciprocity"] == 0.5
-
-
-# --- edge split -------------------------------------------------------------
-
-def test_edge_split_deterministic_partition(spark):
-    from rdf_tabular_spark.operators.graph import edge_split
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"m{i}") for i in range(200)], "src string, dst string")
-    s1 = {(r["src"], r["dst"]): r["split"]
-          for r in edge_split(edges).collect()}
-    s2 = {(r["src"], r["dst"]): r["split"]
-          for r in edge_split(edges).collect()}
-    assert s1 == s2 and len(s1) == 200          # stable, total
-    counts = {}
-    for v in s1.values():
-        counts[v] = counts.get(v, 0) + 1
-    assert set(counts) == {"train", "valid", "test"}
-    assert counts["train"] > counts["valid"] and \
-        counts["train"] > counts["test"]        # ~80/10/10
-    # a different salt reassigns some edges
-    s3 = {(r["src"], r["dst"]): r["split"]
-          for r in edge_split(edges, salt="epoch1").collect()}
-    assert s3 != s1
 
 
 def test_fuse_retract_batch_maintenance(spark, tmp_path):

@@ -135,23 +135,6 @@ def test_read_subject_pushes_filters(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["obj"] == "7"
 
 
-def test_property_table_single_subject_shuffle(spark):
-    """The pivot must use the explicit property list (no distinct-values
-    pre-job) and shuffle once on subj with map-side partial aggregation."""
-    p = plan_of(Q.queries()["kg_property_table"](spark, SF))
-    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
-    # string max pivot compiles to SortAggregate; partial + final = 2 nodes
-    assert len(re.findall(r"\(\d+\) (?:Hash|Sort)Aggregate", p)) == 2
-
-
-def test_pred_stats_partial_aggregates(spark):
-    """Vocabulary-sized distinct-count profile: partial aggregation must
-    run before the exchange so only per-partition distincts move."""
-    p = plan_of(Q.queries()["kg_pred_stats"](spark, SF))
-    assert len(re.findall(r"\(\d+\) HashAggregate", p)) >= 2
-    assert len(re.findall(r"\(\d+\) Exchange", p)) <= 2, p
-
-
 def test_bgp_constant_filters_push_to_scan(spark, tmp_path):
     """A BGP pattern's constant predicate must reach the parquet scan as a
     pushed filter — at 10^12 triples a pattern scan that reads the full
@@ -177,17 +160,6 @@ def test_bgp_broadcast_pattern_avoids_shuffle_join(spark):
                           broadcast_patterns=[1]))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
-
-
-def test_pagerank_contrib_has_partial_aggregation(spark):
-    """The per-iteration contribution sum must map-side combine — at scale
-    the edge→dst shuffle carries one partial per (partition, dst), not one
-    row per edge."""
-    from rdf_tabular_spark.operators.graph import pagerank
-    e = spark.createDataFrame([("a", "b"), ("b", "a"), ("c", "a")],
-                              "src string, dst string")
-    p = plan_of(pagerank(e, n_iter=1))
-    assert p.count("HashAggregate") >= 2
 
 
 def test_bgp_filter_pushes_into_pattern_scan(spark, tmp_path):
@@ -508,24 +480,6 @@ def test_sessionize_single_exchange(spark):
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
 
 
-def test_triangle_counts_no_cartesian(spark):
-    """Degree-oriented wedge joins must stay equi-keyed — a cartesian or
-    nested-loop join here is the super-node wedge explosion the
-    orientation exists to prevent."""
-    p = plan_of(Q.queries()["graph_triangles"](spark, SF))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-
-
-def test_neighbor_jaccard_no_cartesian_and_prunes(spark):
-    p = plan_of(Q.queries()["kg_related_pages"](spark, SF))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"doc_id"}, f"edge build reads too much: {cols}"
-
-
 def test_join_supplier_profit_broadcasts_all_dims(spark):
     """Q9 shape: three dim sides (part filtered, supplier, nation) all
     broadcast; the p_type prefix filter reaches the part scan; the only
@@ -536,24 +490,6 @@ def test_join_supplier_profit_broadcasts_all_dims(spark):
         "brand-prefix filter must reach the part scan (PushedFilters)"
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, \
         "only the final groupBy may shuffle"
-
-
-def test_characteristic_sets_narrow_shuffles(spark):
-    """Characteristic sets: the object column must never shuffle — both
-    exchanges carry only subj / predicate-set keys."""
-    p = plan_of(Q.queries()["kg_characteristic_sets"](spark, SF))
-    for keys in re.findall(r"hashpartitioning\(([^)]*)\)", p):
-        assert "obj" not in keys, f"object column shuffled: {keys}"
-    assert p.count("HashAggregate") >= 4, \
-        "both aggs must have map-side partials"
-
-
-def test_skipgram_single_keyed_selfjoin(spark):
-    """Skip-gram pairs: every exchange is keyed on the walk identity or the
-    output pair — node payloads ride along, never become the only key."""
-    p = plan_of(Q.queries()["graph_skipgram_pairs"](spark, SF))
-    assert "CartesianProduct" not in p
-    assert p.count("HashAggregate") >= 2, "pair count needs map-side partial"
 
 
 def n_exchanges(p):
@@ -597,53 +533,6 @@ def test_hearst_single_vocab_shuffle(spark):
     m = re.search(r"ReadSchema: struct<([^>]*)>", p)
     cols = {c.split(":")[0] for c in m.group(1).split(",")}
     assert cols == {"doc_id", "text"}, f"scan reads too much: {cols}"
-
-
-def test_neighbor_sample_single_window_shuffle(spark):
-    """GraphSAGE fan-out: distinct + one src-keyed window — two exchanges
-    total, no join."""
-    p = plan_of(Q.queries()["graph_neighbor_sample"](spark, SF))
-    assert n_exchanges(p) <= 2
-    assert "Join" not in p
-
-
-def test_sage_features_layer_budget(spark):
-    """Two-layer mean aggregation: each layer is one edge join + one keyed
-    agg — the standard 2-shuffle-per-layer budget; no cartesian, and the
-    feature scan reads only doc_id + n_chars."""
-    p = plan_of(Q.queries()["graph_sage_features"](spark, SF))
-    assert "CartesianProduct" not in p
-    ms = re.findall(r"ReadSchema: struct<([^>]*)>", p)
-    cols = {c.split(":")[0] for m in ms for c in m.split(",")}
-    assert cols == {"doc_id", "n_chars"}, f"scan reads too much: {cols}"
-
-
-def test_edge_split_no_shuffle_beyond_distinct(spark):
-    """Link-prediction split: the md5-bucket assignment is a pure
-    projection — the dedup distinct is the only exchange."""
-    p = plan_of(Q.queries()["graph_edge_split"](spark, SF))
-    assert n_exchanges(p) <= 1
-    assert "Join" not in p
-
-
-def test_pred_profiles_single_vocab_agg(spark):
-    """Value profiling: one map-side-combined aggregation keyed on the
-    predicate local name — a single exchange."""
-    p = plan_of(Q.queries()["kg_pred_profiles"](spark, SF))
-    assert n_exchanges(p) == 1
-    assert p.count("HashAggregate") >= 2, "needs a map-side partial"
-
-
-def test_schema_drift_joins_summaries_not_triples(spark):
-    """Schema drift: the FULL-OUTER join (never broadcastable in Spark —
-    both sides need null-extension) must run on the two aggregated
-    characteristic-set summaries keyed on ``cs``, never on raw triple
-    rows: the join-side exchanges carry only the cs key."""
-    p = plan_of(Q.queries()["kg_schema_drift"](spark, SF))
-    assert "FullOuter" in p
-    assert "hashpartitioning(cs" in p, "join must key on the cs summary"
-    for keys in re.findall(r"hashpartitioning\(([^)]*)\)", p):
-        assert "obj" not in keys, f"object column shuffled: {keys}"
 
 
 def test_web_pipeline_job_budget_one_page_pass(spark, tmp_path, count_jobs,

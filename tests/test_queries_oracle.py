@@ -98,38 +98,37 @@ def test_entry_smoke(spark):
 
 # The driver's correctness artifact sweeps exactly the FIRST 50 registry
 # entries in order. queries.py composes _QUERIES from the explicit
-# _DRIVER_WINDOW list — the two flagships, the CSVW operator families, the
-# KG canonicalization / sameAs / inference / SPARQL tiers and long-green
-# sentinels. This pin asserts that composition: rotating means editing
-# queries._DRIVER_WINDOW and this list together, consciously.
+# _DRIVER_WINDOW list — the pipeline's stages first, in stage order, then
+# entries outside the pipeline. This pin asserts that composition:
+# re-composing means editing queries._DRIVER_WINDOW and this list
+# together, consciously.
 _SWEEP_WINDOW = [
-    # flagships
+    # extract + map: flagships, CSVW operator families, page facets
     "csvw_triples_nation", "kg_pages_triples",
-    # CSVW operator families
     "csvw_coerce_numeric", "csvw_date_format", "csvw_null_default_trim",
     "csvw_json_rows", "csvw_list_split", "csvw_boolean_format",
     "csvw_uri_template",
-    # canonicalization and owl:sameAs
+    "kg_microdata_triples", "kg_jsonld_triples", "kg_og_triples",
+    "kg_page_meta", "kg_rdfa_triples",
+    # link
+    "kg_entity_mentions",
+    # canonicalize
     "kg_canonicalized_triples", "kg_canonical_dupes",
-    "kg_sameas_mapping", "kg_sameas_canonical",
-    # inference
+    "graph_component_sizes", "kg_sameas_mapping", "kg_sameas_canonical",
+    # read back: inference and SPARQL
     "kg_rdfs_derived", "kg_owl_derived", "kg_construct_derived",
-    # SPARQL read tier
     "kg_sparql_select", "kg_sparql_agg", "kg_sparql_funcs",
     "kg_bgp_star", "kg_bgp_path", "kg_bgp_optional", "kg_bgp_filter",
     "kg_bgp_union",
-    # sentinels (driver-green in earlier rounds)
-    "agg_pricing_summary", "fk_orders_customer", "kg_microdata_triples",
-    # round-4 tiers first swept in round 5
+    # validate
+    "kg_shacl_report", "kg_shacl_summary",
+    # outside the pipeline
+    "agg_pricing_summary", "fk_orders_customer",
     "webtables_type_profile", "webtables_typed_triples",
     "webtables_header_triples", "webtables_subject_column",
     "webtables_entity_triples", "webtables_schema_freq",
     "webtables_pred_induction",
-    "kg_shacl_report", "kg_shacl_summary",
     "kg_fused_triples", "kg_reified_triples", "kg_hearst_pairs",
-    "kg_rdfa_triples",
-    "graph_communities", "graph_kcore", "graph_hits", "graph_bfs_depths",
-    "graph_sage_features",
     "crawl_frontier", "crawl_recrawl_schedule", "crawl_sitemap_frontier",
     "events_sessionize", "kg_void_description",
 ]

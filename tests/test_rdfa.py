@@ -221,23 +221,3 @@ def test_extract_job_disambiguate(spark, tmp_path):
     assert set(links.columns) == {"url", "surface", "entity", "score",
                                   "n_candidates"}
     assert m["n_mentions"] == links.count()
-
-
-def test_extract_job_stats(spark, tmp_path):
-    """--stats writes the predicate-cardinality profile and characteristic
-    sets for the committed batch."""
-    import os
-
-    from rdf_tabular_spark.jobs.extract import main
-    out = str(tmp_path / "store")
-    m = main(["--synth", "30", "--out", out, "--batch-id", "s1",
-              "--no-canonicalize", "--stats"])
-    assert m["stats_dir"].endswith("stats/s1")
-    card = spark.read.parquet(os.path.join(out, "stats", "s1",
-                                           "pred_cardinality"))
-    assert m["n_predicates"] == card.count() > 0
-    assert {"pred", "is_functional", "is_inverse_functional"} <= \
-        set(card.columns)
-    cs = spark.read.parquet(os.path.join(out, "stats", "s1", "char_sets"))
-    assert set(cs.columns) == {"cs", "n_props", "n_subjects"}
-    assert cs.count() > 0

@@ -150,98 +150,6 @@ def test_stream_pages_to_store_end_to_end(spark, tmp_path):
     assert m["lineage"]["source"] == "stream-pages"
 
 
-def test_stream_sessionize_event_time_timeout(spark, tmp_path):
-    """Event-time session windows (applyInPandasWithState +
-    EventTimeTimeout): an in-stream gap closes a session immediately;
-    quiescent sessions close once the watermark passes end + gap; state
-    and watermark survive a checkpointed restart."""
-    import datetime
-
-    from rdf_tabular_spark.streaming.ingest import stream_sessionize
-
-    tmp = str(tmp_path)
-    in_dir = os.path.join(tmp, "events_in")
-    out_dir = os.path.join(tmp, "sessions_out")
-    ckpt = os.path.join(tmp, "ckpt")
-
-    def ev(eid, hh, mm, uid, val):
-        return (eid, datetime.datetime(2024, 1, 1, hh, mm), uid, "click", val)
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    # batch 1 — user 1: 10:00 + 10:10 (one session), then 12:00 (gap > 30m
-    # closes session 1 inline); user 2: 10:05 (stays open)
-    spark.createDataFrame(
-        [ev(0, 10, 0, 1, 1.0), ev(1, 10, 10, 1, 2.0),
-         ev(2, 12, 0, 1, 4.0), ev(3, 10, 5, 2, 8.0)],
-        schema).write.mode("append").parquet(in_dir)
-    q = stream_sessionize(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    got1 = {(r["user_id"], r["n_events"], r["sum_value"])
-            for r in spark.read.parquet(out_dir).collect()}
-    assert (1, 2, 3.0) in got1            # the inline-closed session
-
-    # batch 2 after restart: a 23:00 event (user 3) pushes the watermark
-    # (1h delay) to 22:00 — past both open sessions' end + gap, so the
-    # event-time timeout emits them
-    spark.createDataFrame([ev(4, 23, 0, 3, 16.0)], schema) \
-        .write.mode("append").parquet(in_dir)
-    q = stream_sessionize(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    rows = spark.read.parquet(out_dir).collect()
-    got2 = {(r["user_id"], r["n_events"], r["sum_value"]) for r in rows}
-    assert got2 == {(1, 2, 3.0),          # u1 session 1
-                    (1, 1, 4.0),          # u1 session 2 (timed out)
-                    (2, 1, 8.0)}          # u2 (timed out)
-    base = datetime.datetime(2024, 1, 1).timestamp()
-    s1 = next(r for r in rows if r["user_id"] == 1 and r["n_events"] == 2)
-    assert s1["start_us"] == int((base + 10 * 3600) * 1e6)
-    assert s1["end_us"] == int((base + 10 * 3600 + 600) * 1e6)
-
-
-def test_stream_sessionize_matches_batch_query(spark, tmp_path):
-    """The streaming and batch faces of sessionization must agree: after a
-    sentinel event pushes the watermark past every real session, the
-    streamed session set equals queries.events_sessionize over the same
-    events (bounds integer-exact, sums to 4 decimals)."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from rdf_tabular_spark import queries as Q
-    from rdf_tabular_spark.streaming.ingest import stream_sessionize
-
-    tmp = str(tmp_path)
-    in_dir = os.path.join(tmp, "events_in")
-    out_dir = os.path.join(tmp, "sessions_out")
-    ckpt = os.path.join(tmp, "ckpt")
-
-    sf_dir = "/root/testdata/sf0.001"
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .select("event_id", F.col("ts").cast("timestamp").alias("ts"),
-                "user_id", "event_type", "value")
-    ev.write.mode("append").parquet(in_dir)
-    q = stream_sessionize(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(180)
-    # sentinel (user -1) far past every real event: watermark sweep closes
-    # all remaining open sessions on the restarted run
-    spark.createDataFrame(
-        [(10**9, datetime.datetime(2030, 1, 1), -1, "x", 0.0)],
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double").write.mode("append").parquet(in_dir)
-    q = stream_sessionize(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(180)
-
-    streamed = {(r["user_id"], r["start_us"], r["end_us"], r["n_events"],
-                 round(r["sum_value"], 4))
-                for r in spark.read.parquet(out_dir).collect()
-                if r["user_id"] != -1}
-    batch = {(r["user_id"], r["start_us"], r["end_us"], r["n_events"],
-              round(r["sum_value"], 4))
-             for r in Q.queries()["events_sessionize"](spark, sf_dir).collect()}
-    assert streamed == batch
-
-
 def test_stream_pages_to_store_combined_facets(spark, tmp_path):
     """The stream runs the fused kernel (tables + microdata + JSON-LD +
     RDFa) with in-kernel robots compliance — the stream
